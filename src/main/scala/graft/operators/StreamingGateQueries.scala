@@ -2,6 +2,8 @@ package graft.operators
 
 import java.nio.file.Files
 
+import scala.util.control.NonFatal
+
 import graft.{GQuery, Tables}
 import graft.sources.replay.ReplayLog
 import graft.streaming._
@@ -448,7 +450,7 @@ FROM events ORDER BY key NULLS FIRST""")),
           // the decoy producer keeps persistent sockets — close them before
           // the broker, or each run of this query leaks two connections
           if (decoys != null)
-            try decoys.closeProducer() catch { case _: Throwable => () }
+            try decoys.closeProducer() catch { case NonFatal(_) => () }
           broker.close()
         }
       },
@@ -503,7 +505,7 @@ FROM events ORDER BY key NULLS FIRST""")),
             .localCheckpoint(true)
         } finally {
           if (prod != null)
-            try prod.closeProducer() catch { case _: Throwable => () }
+            try prod.closeProducer() catch { case NonFatal(_) => () }
           broker.close()
         }
       },

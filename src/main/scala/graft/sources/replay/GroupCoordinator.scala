@@ -130,51 +130,15 @@ private[replay] final class GroupCoordinator {
     }
   }
 
-  /** DescribeGroups (api 15) view of one group: (state, protocolType,
-    * protocolName, members = (memberId, metadata, assignment)). Unknown
-    * groups answer state "Dead" with empty strings — real-broker
-    * semantics: not an error on the wire. Reaps lazily like every other
-    * accessor so a dead member never shows in the roster. */
-  def describe(groupId: String): (String, String, String, Seq[(String, Array[Byte], Array[Byte])]) = {
+  /** Test-visible view of one group: its state and live member ids.
+    * Unknown groups read "Dead", as a real broker reports them. Reaps
+    * lazily like every other accessor so a dead member never shows. */
+  def describe(groupId: String): (String, Seq[String]) = {
     val g = groups.get(groupId)
-    if (g == null) ("Dead", "", "", Nil)
+    if (g == null) ("Dead", Nil)
     else g.synchronized {
       reapExpired(g)
-      if (g.members.isEmpty) ("Empty", "consumer", "", Nil)
-      else (g.state, "consumer", g.protocolName,
-        g.members.toSeq.map { case (m, (ps, _)) =>
-          val md = ps.find(_._1 == g.protocolName).map(_._2)
-            .getOrElse(ps.headOption.map(_._2).getOrElse(Array.emptyByteArray))
-          (m, md, g.assignments.getOrElse(m, Array.emptyByteArray))
-        })
-    }
-  }
-
-  /** DeleteGroups (api 42) decision for one group: 0 = deleted here,
-    * 68 NON_EMPTY_GROUP while live (or KIP-394 pending) members remain,
-    * 69 GROUP_ID_NOT_FOUND when the coordinator never saw it — the caller
-    * may still treat an offsets-only group (simple consumer, never joined)
-    * as deletable, because real brokers materialize those as Empty
-    * coordinator groups. */
-  def delete(groupId: String): Int = {
-    val g = groups.get(groupId)
-    if (g == null) 69
-    else g.synchronized {
-      reapExpired(g)
-      if (g.members.nonEmpty || g.pending.nonEmpty) 68
-      else { groups.remove(groupId); 0 }
-    }
-  }
-
-  /** ListGroups (api 16) roster: (groupId, protocolType, state), sorted
-    * for deterministic wire output. */
-  def list(): Seq[(String, String, String)] = {
-    import scala.jdk.CollectionConverters._
-    groups.asScala.toSeq.sortBy(_._1).map { case (id, g) =>
-      g.synchronized {
-        reapExpired(g)
-        (id, "consumer", if (g.members.isEmpty) "Empty" else g.state)
-      }
+      if (g.members.isEmpty) ("Empty", Nil) else (g.state, g.members.keys.toSeq)
     }
   }
 

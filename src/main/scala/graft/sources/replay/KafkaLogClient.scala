@@ -4,6 +4,8 @@ import java.io.{BufferedInputStream, DataInputStream, DataOutputStream, EOFExcep
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.net.{InetSocketAddress, Socket}
 
+import org.apache.spark.internal.Logging
+
 /** The third [[LogClient]] backend: a minimal APACHE KAFKA WIRE-PROTOCOL
   * consumer — the literal core capability of the reference
   * (/root/reference/src/kafka/execution.rs:62-112, an rdkafka consumer with
@@ -79,7 +81,7 @@ import java.net.{InetSocketAddress, Socket}
   * broker is reachable.
   */
 final class KafkaLogClient(path: String,
-    conf: Map[String, String] = Map.empty) extends LogClient {
+    conf: Map[String, String] = Map.empty) extends LogClient with Logging {
   import KafkaWire._
 
   private val (bootstrap, topic) = {
@@ -625,426 +627,6 @@ final class KafkaLogClient(path: String,
         s"'$t' -> $name"
       }
       throw new IOException(s"kafka CreateTopics failed: ${named.mkString(", ")}")
-    }
-  }
-
-  /** DeleteTopics (api 20, v0 or the flexible v5) — CreateTopics' dual,
-    * completing the rdkafka AdminClient lifecycle the reference harness
-    * links (create_topics, tests/utils.rs:104-117; deletion is how that
-    * harness tears down). Throws the NAMED Kafka error on any per-topic
-    * failure — deleting a topic that does not exist answers
-    * UNKNOWN_TOPIC_OR_PARTITION, never silence. */
-  def deleteTopics(names: Seq[String], timeoutMs: Int = 30000): Unit = {
-    val (v, in) = oneShotVersioned(bootstrap, "DeleteTopics",
-      ApiDeleteTopics, 0, 5) { v =>
-      val body = new ByteArrayOutputStream()
-      val o = new DataOutputStream(body)
-      if (v >= 4) {
-        writeCompactArrayLen(o, names.size)
-        names.foreach(writeCompactString(o, _))
-        o.writeInt(timeoutMs)
-        writeEmptyTagged(o)
-      } else {
-        o.writeInt(names.size)
-        names.foreach(writeString(o, _))
-        o.writeInt(timeoutMs)
-      }
-      body.toByteArray
-    }
-    val failed =
-      if (v >= 4) {
-        in.readInt()            // throttle_time_ms
-        val n = readCompactArrayLen(in)
-        (1 to n).map { _ =>
-          val name = readCompactString(in)
-          val err = in.readShort()
-          if (v >= 5) readCompactString(in) // error_message (nullable)
-          skipTagged(in)
-          (name, err)
-        }.filter(_._2 != 0)
-      } else {
-        if (v >= 1) in.readInt() // throttle_time_ms
-        val n = in.readInt()
-        (1 to n).map(_ => (readString(in), in.readShort()))
-          .filter(_._2 != 0)
-      }
-    if (failed.nonEmpty) {
-      val named = failed.map { case (t, e) =>
-        val name = e match {
-          case 3 => "UNKNOWN_TOPIC_OR_PARTITION"
-          case 29 => "TOPIC_AUTHORIZATION_FAILED"
-          case 42 => "INVALID_REQUEST"
-          case other => s"error $other"
-        }
-        s"'$t' -> $name"
-      }
-      throw new IOException(s"kafka DeleteTopics failed: ${named.mkString(", ")}")
-    }
-  }
-
-  /** DeleteRecords (api 21, v1 or the flexible v2) — advance a
-    * partition's log-start offset, truncating everything below it: the
-    * rdkafka AdminClient's delete_records, the log-surgery call an
-    * operator uses to reclaim space or unstick a consumer. Per-partition
-    * target offset; -1 means "truncate to the high watermark". Returns the
-    * new low watermark per partition. A real broker's post-conditions —
-    * which the double reproduces and KafkaProduceSpec pins — are that
-    * ListOffsets earliest MOVES to the low watermark and a fetch below it
-    * answers OFFSET_OUT_OF_RANGE. Named per-partition failures: deleting
-    * past the high watermark is OFFSET_OUT_OF_RANGE; an unknown
-    * topic/partition answers UNKNOWN_TOPIC_OR_PARTITION. */
-  def deleteRecords(offsets: Map[Int, Long],
-      timeoutMs: Int = 30000): Map[Int, Long] = {
-    if (offsets.isEmpty) return Map.empty
-    val (v, in) = oneShotVersioned(bootstrap, "DeleteRecords",
-      ApiDeleteRecords, 1, 2) { v =>
-      val body = new ByteArrayOutputStream()
-      val o = new DataOutputStream(body)
-      val flex = v >= 2
-      if (flex) writeCompactArrayLen(o, 1) else o.writeInt(1)
-      if (flex) writeCompactString(o, topic) else writeString(o, topic)
-      if (flex) writeCompactArrayLen(o, offsets.size)
-      else o.writeInt(offsets.size)
-      offsets.toSeq.sortBy(_._1).foreach { case (p, off) =>
-        o.writeInt(p); o.writeLong(off)
-        if (flex) writeEmptyTagged(o)
-      }
-      if (flex) writeEmptyTagged(o)
-      o.writeInt(timeoutMs)
-      if (flex) writeEmptyTagged(o)
-      body.toByteArray
-    }
-    val flex = v >= 2
-    in.readInt()                // throttle_time_ms
-    val nT = if (flex) readCompactArrayLen(in) else in.readInt()
-    var lows = Map.empty[Int, Long]
-    var failed = List.empty[(Int, Short)]
-    (1 to nT).foreach { _ =>
-      val name = if (flex) readCompactString(in) else readString(in)
-      val nP = if (flex) readCompactArrayLen(in) else in.readInt()
-      (1 to nP).foreach { _ =>
-        val p = in.readInt()
-        val low = in.readLong()
-        val err = in.readShort()
-        if (flex) skipTagged(in)
-        if (err != 0) failed ::= (p, err)
-        else if (name == topic) lows += p -> low
-      }
-      if (flex) skipTagged(in)
-    }
-    if (flex) skipTagged(in)
-    if (failed.nonEmpty) {
-      val named = failed.reverse.map { case (p, e) =>
-        val n = e match {
-          case 1 => "OFFSET_OUT_OF_RANGE"
-          case 3 => "UNKNOWN_TOPIC_OR_PARTITION"
-          case 44 => "POLICY_VIOLATION"
-          case other => s"error $other"
-        }
-        s"p$p -> $n"
-      }
-      throw new IOException(
-        s"kafka DeleteRecords failed: ${named.mkString(", ")}")
-    }
-    lows
-  }
-
-  /** DeleteGroups (api 42, v1 or the flexible v2) — remove consumer
-    * groups and their committed offsets wholesale: OffsetDelete's
-    * group-level sibling and the last call of the rdkafka AdminClient
-    * surface the reference links. Groups are routed to their own
-    * coordinator (FindCoordinator per group, batched per address) like the
-    * official client. Named failures: a group with LIVE members answers
-    * NON_EMPTY_GROUP — membership is never yanked; an unknown group
-    * answers GROUP_ID_NOT_FOUND. */
-  def deleteGroups(groups: Seq[String]): Unit = {
-    if (groups.isEmpty) return
-    val failed = scala.collection.mutable.ListBuffer.empty[(String, Short)]
-    groups.groupBy(coordinator).foreach { case (addr, gs) =>
-      val (v, in) = oneShotVersioned(addr, "DeleteGroups",
-        ApiDeleteGroups, 1, 2) { v =>
-        val body = new ByteArrayOutputStream()
-        val o = new DataOutputStream(body)
-        if (v >= 2) {
-          writeCompactArrayLen(o, gs.size)
-          gs.foreach(writeCompactString(o, _))
-          writeEmptyTagged(o)
-        } else {
-          o.writeInt(gs.size)
-          gs.foreach(writeString(o, _))
-        }
-        body.toByteArray
-      }
-      in.readInt()              // throttle_time_ms
-      val n = if (v >= 2) readCompactArrayLen(in) else in.readInt()
-      (1 to n).foreach { _ =>
-        val gid = if (v >= 2) readCompactString(in) else readString(in)
-        val err = in.readShort()
-        if (v >= 2) skipTagged(in)
-        if (err != 0) failed += ((gid, err))
-      }
-      if (v >= 2) skipTagged(in)
-    }
-    if (failed.nonEmpty) {
-      val named = failed.map { case (g, e) =>
-        val n = e match {
-          case 68 => "NON_EMPTY_GROUP"
-          case 69 => "GROUP_ID_NOT_FOUND"
-          case 30 => "GROUP_AUTHORIZATION_FAILED"
-          case other => s"error $other"
-        }
-        s"'$g' -> $n"
-      }
-      throw new IOException(
-        s"kafka DeleteGroups failed: ${named.mkString(", ")}")
-    }
-  }
-
-  /** OffsetDelete (api 47, v0 — its only version; KIP-496) — drop a
-    * group's committed offsets for the given partitions of the bootstrap
-    * topic. The administrative reset an operator runs before re-consuming
-    * from scratch. Named failures: a group the coordinator has never seen
-    * answers GROUP_ID_NOT_FOUND; a group whose live members still
-    * subscribe to the topic refuses per-partition with
-    * GROUP_SUBSCRIBED_TO_TOPIC — offsets of an ACTIVE subscription are
-    * never yanked out from under it. */
-  def offsetDelete(group: String, partitions: Seq[Int]): Unit = {
-    val (s, in, out) = open(coordinator(group))
-    try {
-      val body = new ByteArrayOutputStream()
-      val o = new DataOutputStream(body)
-      writeString(o, group)
-      o.writeInt(1); writeString(o, topic)
-      o.writeInt(partitions.size); partitions.foreach(o.writeInt)
-      val r = request(in, out, ApiOffsetDelete, 0, body.toByteArray)
-      val gerr = r.readShort()
-      if (gerr == 69)
-        throw new IOException(
-          s"kafka OffsetDelete: GROUP_ID_NOT_FOUND for '$group'")
-      if (gerr != 0)
-        throw new IOException(s"kafka OffsetDelete error $gerr for '$group'")
-      r.readInt()                 // throttle_time_ms (after error: KIP-496)
-      val nT = r.readInt()
-      val failed = (1 to nT).flatMap { _ =>
-        val name = readString(r)
-        val nP = r.readInt()
-        (1 to nP).map { _ => (name, r.readInt(), r.readShort()) }
-      }.filter(_._3 != 0)
-      if (failed.nonEmpty) {
-        val named = failed.map { case (t, p, e) =>
-          val n = e match {
-            case 86 => "GROUP_SUBSCRIBED_TO_TOPIC"
-            case 3 => "UNKNOWN_TOPIC_OR_PARTITION"
-            case other => s"error $other"
-          }
-          s"$t/$p -> $n"
-        }
-        throw new IOException(
-          s"kafka OffsetDelete failed: ${named.mkString(", ")}")
-      }
-    } finally s.close()
-  }
-
-  /** One group's DescribeGroups (api 15) view: Kafka state name
-    * (Stable/Empty/PreparingRebalance/CompletingRebalance, or Dead for an
-    * unknown group), protocol type, and the live member ids. */
-  final case class GroupInfo(state: String, protocolType: String,
-      members: Seq[String])
-
-  /** DescribeGroups (api 15, v0 or the flexible v5) — the admin view of
-    * consumer-group membership (state machine + member roster) that
-    * rdkafka's AdminClient and every ops dashboard polls. An unknown group
-    * is NOT an error on the wire: real brokers answer state "Dead"; this
-    * client surfaces exactly that. */
-  def describeGroups(groups: Seq[String]): Map[String, GroupInfo] = {
-    val addr = groups.headOption.map(coordinator).getOrElse(bootstrap)
-    val (v, in) = oneShotVersioned(addr, "DescribeGroups",
-      ApiDescribeGroups, 0, 5) { v =>
-      val body = new ByteArrayOutputStream()
-      val o = new DataOutputStream(body)
-      if (v >= 5) {
-        writeCompactArrayLen(o, groups.size)
-        groups.foreach(writeCompactString(o, _))
-        o.writeBoolean(false)   // include_authorized_operations
-        writeEmptyTagged(o)
-      } else {
-        o.writeInt(groups.size)
-        groups.foreach(writeString(o, _))
-      }
-      body.toByteArray
-    }
-    if (v >= 1) in.readInt()    // throttle_time_ms
-    val n = if (v >= 5) readCompactArrayLen(in) else in.readInt()
-    (1 to n).map { _ =>
-      val err = in.readShort()
-      val gid = if (v >= 5) readCompactString(in) else readString(in)
-      val state = if (v >= 5) readCompactString(in) else readString(in)
-      val ptype = if (v >= 5) readCompactString(in) else readString(in)
-      if (v >= 5) readCompactString(in) else readString(in) // protocol_data
-      val nm = if (v >= 5) readCompactArrayLen(in) else in.readInt()
-      val members = (1 to nm).map { _ =>
-        val mid = if (v >= 5) readCompactString(in) else readString(in)
-        if (v >= 5) readCompactString(in) // group_instance_id (v4+)
-        if (v >= 5) readCompactString(in) else readString(in) // client_id
-        if (v >= 5) readCompactString(in) else readString(in) // client_host
-        def skipBytes(): Unit =
-          if (v >= 5) readCompactBytes(in)
-          else { val len = in.readInt(); in.skipBytes(math.max(len, 0)) }
-        skipBytes()             // member_metadata
-        skipBytes()             // member_assignment
-        if (v >= 5) skipTagged(in)
-        mid
-      }
-      if (v >= 5) { in.readInt(); skipTagged(in) } // authorized_operations
-      if (err != 0)
-        throw new IOException(s"kafka DescribeGroups error $err for '$gid'")
-      gid -> GroupInfo(state, ptype, members)
-    }.toMap
-  }
-
-  /** ListGroups (api 16, v0 or the flexible v4) — enumerate the broker's
-    * consumer groups; v4 carries per-group state and an optional
-    * states filter. On a vintage (v0) broker the state comes back "" —
-    * the field does not exist there, recorded honestly. */
-  def listGroups(states: Seq[String] = Nil): Seq[(String, String)] = {
-    val (v, in) = oneShotVersioned(bootstrap, "ListGroups",
-      ApiListGroups, 0, 4) { v =>
-      val body = new ByteArrayOutputStream()
-      val o = new DataOutputStream(body)
-      if (v >= 4) {
-        writeCompactArrayLen(o, states.size)
-        states.foreach(writeCompactString(o, _))
-        writeEmptyTagged(o)
-      }
-      // v0: empty request body
-      body.toByteArray
-    }
-    if (v >= 1) in.readInt()    // throttle_time_ms
-    val err = in.readShort()
-    if (err != 0) throw new IOException(s"kafka ListGroups error $err")
-    val n = if (v >= 3) readCompactArrayLen(in) else in.readInt()
-    (1 to n).map { _ =>
-      val gid = if (v >= 3) readCompactString(in) else readString(in)
-      if (v >= 3) readCompactString(in) else readString(in) // protocol_type
-      val state = if (v >= 4) { val s = readCompactString(in); s } else ""
-      if (v >= 3) skipTagged(in)
-      (gid, state)
-    }
-  }
-
-  /** One topic config's effective state as DescribeConfigs reports it:
-    * value, source (5 = static default, 1 = dynamic topic override),
-    * read-only flag, sensitivity. */
-  final case class ConfigEntry(value: String, source: Int,
-      readOnly: Boolean, sensitive: Boolean)
-
-  /** DescribeConfigs (api 32, pinned v1 or the flexible v4): the effective
-    * topic configs — every config when `keys` is empty, else the requested
-    * subset. The remaining rdkafka AdminClient read surface after the
-    * round-15/16 admin tail (every ops dashboard reads configs). */
-  def describeConfigs(topicName: String,
-      keys: Seq[String] = Nil): Map[String, ConfigEntry] = {
-    val (v, in) = oneShotVersioned(bootstrap, "DescribeConfigs",
-      ApiDescribeConfigs, 1, 4) { v =>
-      val body = new ByteArrayOutputStream()
-      val o = new DataOutputStream(body)
-      if (v >= 4) {
-        writeCompactArrayLen(o, 1)
-        o.writeByte(2)          // resource_type: TOPIC
-        writeCompactString(o, topicName)
-        if (keys.isEmpty) writeCompactArrayLen(o, -1) // null = all configs
-        else {
-          writeCompactArrayLen(o, keys.size)
-          keys.foreach(writeCompactString(o, _))
-        }
-        writeEmptyTagged(o)
-        o.writeBoolean(false)   // include_synonyms
-        o.writeBoolean(false)   // include_documentation
-        writeEmptyTagged(o)
-      } else {
-        o.writeInt(1)
-        o.writeByte(2)
-        writeString(o, topicName)
-        if (keys.isEmpty) o.writeInt(-1)
-        else { o.writeInt(keys.size); keys.foreach(writeString(o, _)) }
-        o.writeBoolean(false)   // include_synonyms
-      }
-      body.toByteArray
-    }
-    in.readInt()                // throttle_time_ms
-    val nRes = if (v >= 4) readCompactArrayLen(in) else in.readInt()
-    require(nRes == 1, s"expected one resource result, got $nRes")
-    def rdStr(): String =
-      if (v >= 4) readCompactString(in) else readString(in)
-    val err = in.readShort()
-    val msg = rdStr()
-    in.readByte()               // resource_type
-    val rname = rdStr()
-    if (err != 0)
-      throw new IOException(
-        s"kafka DescribeConfigs error $err for topic '$rname'" +
-          Option(msg).fold("")(m => s": $m"))
-    val nCfg = if (v >= 4) readCompactArrayLen(in) else in.readInt()
-    (1 to nCfg).map { _ =>
-      val key = rdStr()
-      val value = rdStr()
-      val readOnly = in.readBoolean()
-      val source = in.readByte().toInt // config_source (v1+)
-      val sensitive = in.readBoolean()
-      val nSyn = if (v >= 4) readCompactArrayLen(in) else in.readInt()
-      (1 to nSyn).foreach { _ =>
-        rdStr(); rdStr(); in.readByte()
-        if (v >= 4) skipTagged(in)
-      }
-      if (v >= 3) { in.readByte(); rdStr() } // config_type, documentation
-      if (v >= 4) skipTagged(in)
-      key -> ConfigEntry(value, source, readOnly, sensitive)
-    }.toMap
-  }
-
-  /** IncrementalAlterConfigs (api 44, pinned v0 or the flexible v1):
-    * apply (key, op, value) ops to a topic's dynamic config — op 0 SET,
-    * 1 DELETE, 2 APPEND, 3 SUBTRACT (list configs only). Per-resource
-    * errors surface as named exceptions (INVALID_CONFIG 40 for unknown
-    * keys/bad values, never a silent no-op). */
-  def incrementalAlterConfigs(topicName: String,
-      ops: Seq[(String, Int, String)],
-      validateOnly: Boolean = false): Unit = {
-    val (v, in) = oneShotVersioned(bootstrap, "IncrementalAlterConfigs",
-      ApiIncrementalAlterConfigs, 0, 1) { v =>
-      val body = new ByteArrayOutputStream()
-      val o = new DataOutputStream(body)
-      def wStr(s: String): Unit =
-        if (v >= 1) writeCompactString(o, s)
-        else if (s == null) o.writeShort(-1)
-        else writeString(o, s)
-      if (v >= 1) writeCompactArrayLen(o, 1) else o.writeInt(1)
-      o.writeByte(2)            // resource_type: TOPIC
-      wStr(topicName)
-      if (v >= 1) writeCompactArrayLen(o, ops.size) else o.writeInt(ops.size)
-      ops.foreach { case (key, op, value) =>
-        wStr(key)
-        o.writeByte(op)
-        wStr(value)
-        if (v >= 1) writeEmptyTagged(o)
-      }
-      if (v >= 1) writeEmptyTagged(o)
-      o.writeBoolean(validateOnly)
-      if (v >= 1) writeEmptyTagged(o)
-      body.toByteArray
-    }
-    in.readInt()                // throttle_time_ms
-    val nRes = if (v >= 1) readCompactArrayLen(in) else in.readInt()
-    (1 to nRes).foreach { _ =>
-      val err = in.readShort()
-      val msg = if (v >= 1) readCompactString(in) else readString(in)
-      in.readByte()             // resource_type
-      val rname = if (v >= 1) readCompactString(in) else readString(in)
-      if (v >= 1) skipTagged(in)
-      if (err != 0)
-        throw new IOException(
-          s"kafka IncrementalAlterConfigs error $err for topic '$rname'" +
-            Option(msg).fold("")(m => s": $m"))
     }
   }
 
@@ -1854,7 +1436,7 @@ final class KafkaLogClient(path: String,
             // an empty fetch at the high watermark
             val earliest = startOffset(p)
             if (earliest <= nextOffset) throw e
-            System.err.println(s"[graft-replay] DATA LOSS on $topic/$p: " +
+            logWarning(s"[graft-replay] DATA LOSS on $topic/$p: " +
               s"offsets [$nextOffset, $earliest) were truncated below the " +
               "log-start offset; skipping forward " +
               "(consumer.fail.on.data.loss=false)")
@@ -2063,23 +1645,15 @@ private[replay] object KafkaWire {
   val ApiHeartbeat: Short = 12
   val ApiLeaveGroup: Short = 13
   val ApiSyncGroup: Short = 14
-  val ApiDescribeGroups: Short = 15
-  val ApiListGroups: Short = 16
   val ApiSaslHandshake: Short = 17
   val ApiApiVersions: Short = 18
   val ApiCreateTopics: Short = 19
-  val ApiDeleteTopics: Short = 20
-  val ApiDeleteRecords: Short = 21
   val ApiInitProducerId: Short = 22
   val ApiAddPartitionsToTxn: Short = 24
   val ApiAddOffsetsToTxn: Short = 25
   val ApiEndTxn: Short = 26
   val ApiTxnOffsetCommit: Short = 28
-  val ApiDescribeConfigs: Short = 32
   val ApiSaslAuthenticate: Short = 36
-  val ApiDeleteGroups: Short = 42
-  val ApiIncrementalAlterConfigs: Short = 44
-  val ApiOffsetDelete: Short = 47
   val ClientId = "graft"
 
   /** One aborted transaction from a Fetch response's per-partition
@@ -2152,10 +1726,7 @@ private[replay] object KafkaWire {
       ApiJoinGroup -> 6, ApiHeartbeat -> 4, ApiLeaveGroup -> 4,
       ApiSyncGroup -> 4, ApiInitProducerId -> 2,
       ApiAddPartitionsToTxn -> 3, ApiAddOffsetsToTxn -> 3,
-      ApiEndTxn -> 3, ApiTxnOffsetCommit -> 3, ApiCreateTopics -> 5,
-      ApiDescribeGroups -> 5, ApiListGroups -> 3, ApiDeleteTopics -> 4,
-      ApiDeleteRecords -> 2, ApiDeleteGroups -> 2,
-      ApiDescribeConfigs -> 4, ApiIncrementalAlterConfigs -> 1)
+      ApiEndTxn -> 3, ApiTxnOffsetCommit -> 3, ApiCreateTopics -> 5)
   def isFlexible(apiKey: Short, apiVersion: Short): Boolean =
     FlexibleSince.get(apiKey).exists(apiVersion >= _)
 

@@ -61,10 +61,9 @@ final class KafkaLogServer(dir: String, topic: String,
   private val apiRanges: Seq[(Short, Short, Short)] =
     advertiseApis.getOrElse(Seq[(Short, Short, Short)](
       (0, 0, 9), (1, 0, 13), (2, 0, 7), (3, 0, 12), (8, 0, 8), (9, 0, 8),
-      (10, 0, 4), (11, 0, 9), (12, 0, 4), (13, 0, 5), (14, 0, 5), (15, 0, 5),
-      (16, 0, 4), (17, 0, 1), (18, 0, 3), (19, 0, 7), (20, 0, 5), (21, 0, 2),
-      (22, 0, 4), (24, 0, 3), (25, 0, 3), (26, 0, 3), (28, 0, 3), (32, 1, 4),
-      (36, 0, 2), (42, 0, 2), (44, 0, 1), (47, 0, 0)))
+      (10, 0, 4), (11, 0, 9), (12, 0, 4), (13, 0, 5), (14, 0, 5), (17, 0, 1),
+      (18, 0, 3), (19, 0, 7), (22, 0, 4), (24, 0, 3), (25, 0, 3), (26, 0, 3),
+      (28, 0, 3), (36, 0, 2)))
 
   // TLS listener: keystore (path, password) holds the broker's key+cert —
   // the exact shape a real broker's ssl.keystore.location configures
@@ -82,32 +81,28 @@ final class KafkaLogServer(dir: String, topic: String,
   }
   @volatile private var closed = false
 
-  /** DeleteRecords (api 21) low watermark per partition — the log-start
-    * offset a real broker persists on truncation. Fetches below it answer
-    * OFFSET_OUT_OF_RANGE and ListOffsets earliest returns it instead of 0;
-    * records themselves stay in the double's storage (like segment files
-    * awaiting cleanup) but are unreachable through the protocol. */
+  /** Low watermark per partition — the log-start offset a real broker
+    * persists on truncation. Fetches below it answer OFFSET_OUT_OF_RANGE
+    * and ListOffsets earliest returns it instead of 0; records themselves
+    * stay in the double's storage (like segment files awaiting cleanup)
+    * but are unreachable through the protocol. */
   private val logStart =
     new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
   private def logStartOffset(p: Int): Long =
     Option(logStart.get(p)).fold(0L)(_.longValue)
 
-  /** Dynamic topic configs (DescribeConfigs api 32 / IncrementalAlterConfigs
-    * api 44): (topic, key) → value overrides layered over
-    * [[KafkaLogServer.TopicConfigDefaults]]. Deleting a topic purges its
-    * overrides (a re-created topic starts from defaults, like a real
-    * broker). The produce path ENFORCES max.message.bytes — a batch
-    * larger than the effective value answers MESSAGE_TOO_LARGE (10) — so
-    * an altered config is observable in broker behavior, not just echoed
-    * back by describe. */
-  private val topicConfigs =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-  private def effectiveConfig(t: String, key: String): Option[String] =
-    Option(topicConfigs.get((t, key)))
-      .orElse(KafkaLogServer.TopicConfigDefaults.get(key).map(_._1))
-  private def maxMessageBytes(t: String): Int =
-    effectiveConfig(t, "max.message.bytes").map(_.toInt)
-      .getOrElse(1048588)
+  /** Test seam: truncate partition p below `before`, the state a broker
+    * reaches after retention or an operator's record deletion. The low
+    * watermark only moves forward; a point past the log end is refused. */
+  private[replay] def truncateLog(p: Int, before: Long): Unit = {
+    require(before <= endOffset(p),
+      s"truncation point $before is past the log end ${endOffset(p)} of p$p")
+    logStart.put(p, math.max(logStartOffset(p), before))
+  }
+
+  /** A real broker's default `max.message.bytes`: a produced batch larger
+    * than this answers MESSAGE_TOO_LARGE (10). */
+  private val maxMessageBytes = 1048588
 
   /** (group, topic, partition) → committed offset — the coordinator state. */
   private val committedStore =
@@ -115,7 +110,7 @@ final class KafkaLogServer(dir: String, topic: String,
 
   /** Group-membership coordinator (JoinGroup/SyncGroup/Heartbeat/LeaveGroup
     * + OffsetCommit generation fencing) — see [[GroupCoordinator]]. */
-  private val groupCoordinator = new GroupCoordinator
+  private[replay] val groupCoordinator = new GroupCoordinator
 
   /** One stored batch of the produced tail. Real broker logs are BATCH
     * sequences, not flat record lists — transaction semantics live on the
@@ -151,23 +146,15 @@ final class KafkaLogServer(dir: String, topic: String,
     * `tests/utils.rs:104-117`). The double stays single-topic by design:
     * creating a second distinct topic answers INVALID_REQUEST. */
   @volatile private var created: Option[(String, Seq[Int])] = None
-  /** DeleteTopics (api 20) tombstone for the FILE-BACKED base topic: once
-    * deleted, the broker is topicless (every topic request answers
-    * UNKNOWN_TOPIC_OR_PARTITION) and a re-created topic starts EMPTY —
-    * the base log segments never resurrect, exactly a real broker's
-    * delete+recreate. Wire-created topics delete by clearing [[created]]. */
-  @volatile private var baseDeleted = false
   /** The topic this broker currently serves, if any. */
   private def activeTopic: Option[String] =
-    created.map(_._1).orElse(
-      if (requireCreate || baseDeleted) None else Some(topic))
+    created.map(_._1).orElse(if (requireCreate) None else Some(topic))
   private def partitionIds: Seq[Int] =
     created.map(_._2).getOrElse(
-      if (requireCreate || baseDeleted) Nil
+      if (requireCreate) Nil
       else explicitPartitions.getOrElse(ReplayLog.listPartitions(dir)))
   private def baseCount(p: Int): Long =
-    if (baseDeleted) 0L
-    else if ((explicitPartitions.isDefined || requireCreate) &&
+    if ((explicitPartitions.isDefined || requireCreate) &&
         !ReplayLog.logFile(dir, p).exists()) 0L
     else ReplayLog.safeRecordCount(dir, p)
   private def producedTail(p: Int) = produced.computeIfAbsent(p,
@@ -850,394 +837,6 @@ final class KafkaLogServer(dir: String, topic: String,
             }
             if (flexCt) writeEmptyTagged(o)
             bo.toByteArray
-          case ApiDeleteTopics if apiVersion == 0 || apiVersion == 5 =>
-            // CreateTopics' dual (VERDICT r14 #6): deleting the active
-            // topic tombstones it — data (file-backed base AND produced
-            // tails) never resurrects on re-create, fetch sessions holding
-            // its partition state are dropped, and every subsequent topic
-            // request answers UNKNOWN_TOPIC_OR_PARTITION
-            val flexDt = apiVersion >= 4
-            val nNames = if (flexDt) readCompactArrayLen(r) else r.readInt()
-            val names = (1 to nNames).map(_ =>
-              if (flexDt) readCompactString(r) else readString(r))
-            r.readInt()                 // timeout_ms (in-process)
-            if (flexDt) skipTagged(r)
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            if (flexDt) o.writeInt(0)   // throttle_time_ms
-            if (flexDt) writeCompactArrayLen(o, names.size)
-            else o.writeInt(names.size)
-            names.foreach { name =>
-              val err: Int =
-                if (activeTopic.contains(name)) {
-                  created = None
-                  baseDeleted = true
-                  produced.clear()
-                  evictFetchSessions()
-                  // real brokers also drop the topic's committed group
-                  // offsets: after delete+recreate an OffsetFetch must NOT
-                  // return stale offsets pointing into the vanished log
-                  committedStore.keySet.removeIf(_._2 == name)
-                  // ...its dynamic config overrides (a re-created topic
-                  // starts from the static defaults)...
-                  topicConfigs.keySet.removeIf(_._1 == name)
-                  // ...and a re-created topic starts with log-start 0
-                  logStart.clear()
-                  0
-                } else 3                // UNKNOWN_TOPIC_OR_PARTITION
-              if (flexDt) {
-                writeCompactString(o, name); o.writeShort(err)
-                writeCompactString(o, null) // error_message (v5+)
-                writeEmptyTagged(o)
-              } else { writeString(o, name); o.writeShort(err) }
-            }
-            if (flexDt) writeEmptyTagged(o)
-            bo.toByteArray
-          case ApiDescribeGroups if apiVersion == 0 || apiVersion == 5 =>
-            val flexDg = apiVersion >= 5
-            val nGroups = if (flexDg) readCompactArrayLen(r) else r.readInt()
-            val gids = (1 to nGroups).map(_ =>
-              if (flexDg) readCompactString(r) else readString(r))
-            if (flexDg) { r.readBoolean(); skipTagged(r) } // include_authz
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            if (flexDg) o.writeInt(0)   // throttle_time_ms (v1+)
-            if (flexDg) writeCompactArrayLen(o, gids.size)
-            else o.writeInt(gids.size)
-            gids.foreach { gid =>
-              val (state, ptype, pname, members) = groupCoordinator.describe(gid)
-              o.writeShort(0)           // error_code (unknown group = Dead)
-              if (flexDg) {
-                writeCompactString(o, gid)
-                writeCompactString(o, state)
-                writeCompactString(o, ptype)
-                writeCompactString(o, pname)
-                writeCompactArrayLen(o, members.size)
-                members.foreach { case (mid, md, assign) =>
-                  writeCompactString(o, mid)
-                  writeCompactString(o, null) // group_instance_id (v4+)
-                  writeCompactString(o, mid)  // client_id: the double's
-                  writeCompactString(o, "/127.0.0.1") // stand-ins
-                  writeCompactBytes(o, md)
-                  writeCompactBytes(o, assign)
-                  writeEmptyTagged(o)
-                }
-                o.writeInt(Int.MinValue) // authorized_operations: omitted
-                writeEmptyTagged(o)
-              } else {
-                writeString(o, gid); writeString(o, state)
-                writeString(o, ptype); writeString(o, pname)
-                o.writeInt(members.size)
-                members.foreach { case (mid, md, assign) =>
-                  writeString(o, mid)
-                  writeString(o, mid)          // client_id
-                  writeString(o, "/127.0.0.1") // client_host
-                  o.writeInt(md.length); o.write(md)
-                  o.writeInt(assign.length); o.write(assign)
-                }
-              }
-            }
-            if (flexDg) writeEmptyTagged(o)
-            bo.toByteArray
-          case ApiListGroups if apiVersion == 0 || apiVersion == 4 =>
-            val flexLg = apiVersion >= 3
-            val statesFilter: Set[String] =
-              if (apiVersion >= 4) {
-                val n = readCompactArrayLen(r)
-                val st = (1 to n).map(_ => readCompactString(r)).toSet
-                skipTagged(r)
-                st
-              } else Set.empty
-            val all = groupCoordinator.list()
-            val shown =
-              if (statesFilter.isEmpty) all
-              else all.filter(g => statesFilter.contains(g._3))
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            if (flexLg) o.writeInt(0)   // throttle_time_ms (v1+)
-            o.writeShort(0)             // error_code
-            if (flexLg) writeCompactArrayLen(o, shown.size)
-            else o.writeInt(shown.size)
-            shown.foreach { case (gid, ptype, state) =>
-              if (flexLg) {
-                writeCompactString(o, gid); writeCompactString(o, ptype)
-                if (apiVersion >= 4) writeCompactString(o, state)
-                writeEmptyTagged(o)
-              } else { writeString(o, gid); writeString(o, ptype) }
-            }
-            if (flexLg) writeEmptyTagged(o)
-            bo.toByteArray
-          case ApiDeleteRecords if apiVersion >= 0 && apiVersion <= 2 =>
-            // api 21: advance the log-start offset ("low watermark") —
-            // log truncation. Post-conditions a real broker guarantees and
-            // the double reproduces: ListOffsets earliest answers the new
-            // low watermark; a fetch below it answers OFFSET_OUT_OF_RANGE.
-            // offset -1 truncates to the high watermark; an offset past
-            // the HW is OFFSET_OUT_OF_RANGE; truncation is monotonic (a
-            // lower request never moves the watermark back).
-            val flexDr = apiVersion >= 2
-            val nT = if (flexDr) readCompactArrayLen(r) else r.readInt()
-            val req = (1 to nT).map { _ =>
-              val name = if (flexDr) readCompactString(r) else readString(r)
-              val nP = if (flexDr) readCompactArrayLen(r) else r.readInt()
-              val ps = (1 to nP).map { _ =>
-                val p = r.readInt(); val off = r.readLong()
-                if (flexDr) skipTagged(r)
-                (p, off)
-              }
-              if (flexDr) skipTagged(r)
-              (name, ps)
-            }
-            r.readInt()                 // timeout_ms (in-process)
-            if (flexDr) skipTagged(r)
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            o.writeInt(0)               // throttle_time_ms
-            if (flexDr) writeCompactArrayLen(o, req.size) else o.writeInt(req.size)
-            req.foreach { case (name, ps) =>
-              if (flexDr) writeCompactString(o, name) else writeString(o, name)
-              if (flexDr) writeCompactArrayLen(o, ps.size) else o.writeInt(ps.size)
-              ps.foreach { case (p, off) =>
-                val (low, err): (Long, Int) =
-                  if (!activeTopic.contains(name) || !partitionIds.contains(p))
-                    (-1L, 3)            // UNKNOWN_TOPIC_OR_PARTITION
-                  else {
-                    val hw = endOffset(p)
-                    val target = if (off == -1L) hw else off
-                    if (target > hw) (-1L, 1) // OFFSET_OUT_OF_RANGE
-                    else {
-                      val nl = math.max(logStartOffset(p), target)
-                      logStart.put(p, nl)
-                      (nl, 0)
-                    }
-                  }
-                o.writeInt(p); o.writeLong(low); o.writeShort(err)
-                if (flexDr) writeEmptyTagged(o)
-              }
-              if (flexDr) writeEmptyTagged(o)
-            }
-            if (flexDr) writeEmptyTagged(o)
-            bo.toByteArray
-          case ApiDeleteGroups if apiVersion >= 0 && apiVersion <= 2 =>
-            // api 42: remove consumer groups wholesale — OffsetDelete's
-            // group-level sibling. A group with LIVE members answers
-            // NON_EMPTY_GROUP (68): membership is never yanked. A group
-            // the coordinator never saw (no state, no committed offsets)
-            // answers GROUP_ID_NOT_FOUND (69). Deletion drops BOTH the
-            // membership state and every committed offset of the group.
-            val flexDg = apiVersion >= 2
-            val nG = if (flexDg) readCompactArrayLen(r) else r.readInt()
-            val gids = (1 to nG).map(_ =>
-              if (flexDg) readCompactString(r) else readString(r))
-            if (flexDg) skipTagged(r)
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            o.writeInt(0)               // throttle_time_ms
-            if (flexDg) writeCompactArrayLen(o, gids.size) else o.writeInt(gids.size)
-            gids.foreach { gid =>
-              import scala.jdk.CollectionConverters._
-              val hasOffsets = committedStore.asScala.keys.exists(_._1 == gid)
-              val err: Int = groupCoordinator.delete(gid) match {
-                // offsets-only groups (simple consumers that never joined)
-                // exist on a real broker as Empty coordinator groups —
-                // deletable, offsets dropped
-                case 69 if hasOffsets => 0
-                case c => c
-              }
-              if (err == 0) committedStore.keySet.removeIf(_._1 == gid)
-              if (flexDg) {
-                writeCompactString(o, gid); o.writeShort(err)
-                writeEmptyTagged(o)
-              } else { writeString(o, gid); o.writeShort(err) }
-            }
-            if (flexDg) writeEmptyTagged(o)
-            bo.toByteArray
-          case ApiDescribeConfigs if apiVersion >= 1 && apiVersion <= 4 =>
-            // api 32: the AdminClient's config read — the effective value
-            // of every (or each requested) topic config, with its source
-            // (5 = static default, 1 = dynamic topic override). The double
-            // serves resource type 2 (TOPIC) for its single topic; other
-            // resource types answer INVALID_REQUEST (42) per-resource,
-            // unknown topics UNKNOWN_TOPIC_OR_PARTITION (3) — named
-            // errors, never a dropped connection.
-            val flexDc = apiVersion >= 4
-            val nRes = if (flexDc) readCompactArrayLen(r) else r.readInt()
-            val resources = (1 to nRes).map { _ =>
-              val rtype = r.readByte()
-              val rname = if (flexDc) readCompactString(r) else readString(r)
-              val nKeys = if (flexDc) readCompactArrayLen(r) else r.readInt()
-              val keys: Seq[String] =
-                if (nKeys < 0) null
-                else (1 to nKeys).map(_ =>
-                  if (flexDc) readCompactString(r) else readString(r))
-              if (flexDc) skipTagged(r)
-              (rtype, rname, keys)
-            }
-            r.readBoolean()             // include_synonyms (v1+)
-            if (apiVersion >= 3) r.readBoolean() // include_documentation
-            if (flexDc) skipTagged(r)
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            o.writeInt(0)               // throttle_time_ms
-            if (flexDc) writeCompactArrayLen(o, resources.size)
-            else o.writeInt(resources.size)
-            def wStr(s: String): Unit =
-              if (flexDc) writeCompactString(o, s)
-              else if (s == null) o.writeShort(-1) // nullable string
-              else writeString(o, s)
-            resources.foreach { case (rtype, rname, keys) =>
-              val err: Int =
-                if (rtype != 2) 42      // INVALID_REQUEST: only TOPIC here
-                else if (!activeTopic.contains(rname)) 3
-                else 0
-              o.writeShort(err)
-              wStr(if (err == 0) null else s"resource error $err")
-              o.writeByte(rtype); wStr(rname)
-              val listed: Seq[String] =
-                if (err != 0) Nil
-                else if (keys == null || keys.isEmpty)
-                  KafkaLogServer.TopicConfigDefaults.keys.toSeq.sorted
-                else keys
-              if (flexDc) writeCompactArrayLen(o, listed.size)
-              else o.writeInt(listed.size)
-              listed.foreach { key =>
-                val dyn = Option(topicConfigs.get((rname, key)))
-                val dflt = KafkaLogServer.TopicConfigDefaults.get(key)
-                wStr(key)
-                wStr(dyn.orElse(dflt.map(_._1)).orNull) // value (null = unknown key)
-                o.writeBoolean(false)   // read_only
-                o.writeByte(if (dyn.isDefined) 1 else 5) // config_source
-                o.writeBoolean(false)   // is_sensitive
-                if (flexDc) writeCompactArrayLen(o, 0) else o.writeInt(0) // synonyms
-                if (apiVersion >= 3) {
-                  o.writeByte(dflt.map(_._2.toInt).getOrElse(0)) // config_type
-                  wStr(null)            // documentation
-                }
-                if (flexDc) writeEmptyTagged(o)
-              }
-              if (flexDc) writeEmptyTagged(o)
-            }
-            if (flexDc) writeEmptyTagged(o)
-            bo.toByteArray
-          case ApiIncrementalAlterConfigs if apiVersion == 0 || apiVersion == 1 =>
-            // api 44: the AdminClient's config write — SET/DELETE/APPEND/
-            // SUBTRACT ops per config, validate_only dry runs, per-resource
-            // named errors (INVALID_CONFIG 40 for unknown keys, bad values,
-            // or list-ops on non-list configs). Applied overrides are
-            // OBSERVABLE: the produce path enforces max.message.bytes.
-            val flexIa = apiVersion >= 1
-            val nRes = if (flexIa) readCompactArrayLen(r) else r.readInt()
-            val resources = (1 to nRes).map { _ =>
-              val rtype = r.readByte()
-              val rname = if (flexIa) readCompactString(r) else readString(r)
-              val nCfg = if (flexIa) readCompactArrayLen(r) else r.readInt()
-              val cfgs = (1 to nCfg).map { _ =>
-                val key = if (flexIa) readCompactString(r) else readString(r)
-                val op = r.readByte()
-                val value = if (flexIa) readCompactString(r) else readString(r)
-                if (flexIa) skipTagged(r)
-                (key, op, value)
-              }
-              if (flexIa) skipTagged(r)
-              (rtype, rname, cfgs)
-            }
-            val validateOnly = r.readBoolean()
-            if (flexIa) skipTagged(r)
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            o.writeInt(0)               // throttle_time_ms
-            if (flexIa) writeCompactArrayLen(o, resources.size)
-            else o.writeInt(resources.size)
-            resources.foreach { case (rtype, rname, cfgs) =>
-              def badValue(key: String, v: String): Boolean =
-                KafkaLogServer.TopicConfigDefaults.get(key).exists {
-                  case (_, 3, _) => // INT
-                    try { v.toInt; false } catch { case _: Exception => true }
-                  case (_, 5, _) => // LONG
-                    try { v.toLong; false } catch { case _: Exception => true }
-                  case _ => false
-                }
-              val err: Int =
-                if (rtype != 2) 42      // INVALID_REQUEST
-                else if (!activeTopic.contains(rname)) 3
-                else cfgs.collectFirst {
-                  case (key, _, _)
-                      if !KafkaLogServer.TopicConfigDefaults.contains(key) =>
-                    40                  // INVALID_CONFIG: unknown key
-                  case (key, op, _)
-                      if (op == 2 || op == 3) &&
-                        !KafkaLogServer.TopicConfigDefaults(key)._3 =>
-                    40                  // list op on a non-list config
-                  case (_, op, v) if (op == 2 || op == 3) && v == null =>
-                    40                  // APPEND/SUBTRACT need a value —
-                                        // never persist a literal "null"
-                  case (key, op, v)
-                      if op == 0 && (v == null || badValue(key, v)) =>
-                    40                  // SET needs a well-typed value
-                  case (_, op, _) if op < 0 || op > 3 =>
-                    42                  // unknown operation
-                }.getOrElse(0)
-              if (err == 0 && !validateOnly) cfgs.foreach {
-                case (key, 0, v) => topicConfigs.put((rname, key), v) // SET
-                case (key, 1, _) => topicConfigs.remove((rname, key)) // DELETE
-                case (key, 2, v) =>     // APPEND to the effective list
-                  val cur = effectiveConfig(rname, key).getOrElse("")
-                  val items = cur.split(",").filter(_.nonEmpty).toSeq
-                  if (!items.contains(v))
-                    topicConfigs.put((rname, key), (items :+ v).mkString(","))
-                case (key, 3, v) =>     // SUBTRACT from the effective list
-                  val cur = effectiveConfig(rname, key).getOrElse("")
-                  val items = cur.split(",").filter(_.nonEmpty).toSeq
-                  topicConfigs.put((rname, key),
-                    items.filterNot(_ == v).mkString(","))
-                case _ =>
-              }
-              o.writeShort(err)
-              val msg = if (err == 0) null else s"config error $err"
-              if (flexIa) writeCompactString(o, msg)
-              else if (msg == null) o.writeShort(-1) // nullable string
-              else writeString(o, msg)
-              o.writeByte(rtype)
-              if (flexIa) writeCompactString(o, rname) else writeString(o, rname)
-              if (flexIa) writeEmptyTagged(o)
-            }
-            if (flexIa) writeEmptyTagged(o)
-            bo.toByteArray
-          case ApiOffsetDelete if apiVersion == 0 =>
-            // KIP-496: administrative offset reset. Unknown group answers
-            // GROUP_ID_NOT_FOUND (69) at the group level; a group whose
-            // LIVE members still subscribe refuses per-partition with
-            // GROUP_SUBSCRIBED_TO_TOPIC (86) — an active subscription's
-            // offsets are never yanked; otherwise the committed offsets
-            // are dropped (idempotent: deleting an absent offset is 0).
-            val group = readString(r)
-            val nT = r.readInt()
-            val req = (1 to nT).flatMap { _ =>
-              val name = readString(r)
-              val nP = r.readInt()
-              (1 to nP).map(_ => (name, r.readInt()))
-            }
-            val (gState, _, _, members) = groupCoordinator.describe(group)
-            val groupKnown = gState != "Dead" || {
-              import scala.jdk.CollectionConverters._
-              committedStore.asScala.keys.exists(_._1 == group)
-            }
-            val live = members.nonEmpty
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            if (!groupKnown) {
-              o.writeShort(69)          // GROUP_ID_NOT_FOUND
-              o.writeInt(0)             // throttle_time_ms
-              o.writeInt(0)             // no topics
-            } else {
-              o.writeShort(0)
-              o.writeInt(0)             // throttle_time_ms
-              val byTopic = req.groupBy(_._1)
-              o.writeInt(byTopic.size)
-              byTopic.toSeq.sortBy(_._1).foreach { case (name, ps) =>
-                writeString(o, name)
-                o.writeInt(ps.size)
-                ps.foreach { case (_, p) =>
-                  val err: Int =
-                    if (live) 86        // GROUP_SUBSCRIBED_TO_TOPIC
-                    else { committedStore.remove((group, name, p)); 0 }
-                  o.writeInt(p); o.writeShort(err)
-                }
-              }
-            }
-            bo.toByteArray
           case ApiMetadata if apiVersion == 0 => metadata(r)
           case ApiMetadata if apiVersion == 9 => metadataV9(r)
           case ApiListOffsets if apiVersion == 1 || apiVersion == 2 =>
@@ -1352,15 +951,9 @@ final class KafkaLogServer(dir: String, topic: String,
         out.flush()
       }
     } catch {
-      // a clean client disconnect is not a handler failure — even in debug
-      case _: EOFException => // client done
-      // GRAFT_BROKER_DEBUG: surface per-connection parse/handler failures
-      // (normally swallowed like a real broker dropping a bad client) —
-      // the diagnostic seam that caught the round-13 v9 misframe. NonFatal
-      // only: an OutOfMemoryError must propagate, not be swallowed.
-      case e: Throwable if sys.env.contains("GRAFT_BROKER_DEBUG") &&
-          scala.util.control.NonFatal(e) =>
-        e.printStackTrace()
+      // a client disconnect (EOF) or a bad frame drops the connection like
+      // a real broker; any other failure reaches the thread's
+      // uncaught-exception handler
       case _: IOException =>
     } finally sock.close()
   }
@@ -1458,7 +1051,7 @@ final class KafkaLogServer(dir: String, topic: String,
     * records a fetch at the same isolation would serve. A real broker
     * resolves this from its time index; the double's sequential scan is
     * the same contract at test scale. Bounds: never below the
-    * DeleteRecords low watermark, never at/past `cap` (the HW, or the LSO
+    * log-start low watermark, never at/past `cap` (the HW, or the LSO
     * under read_committed — undecided records have no public timestamp). */
   private def offsetForTimestamp(p: Int, tsMs: Long, cap: Long): Long = {
     val lo = logStartOffset(p)
@@ -1524,11 +1117,9 @@ final class KafkaLogServer(dir: String, topic: String,
       rs: Array[Byte]): (Int, Long) =
     if (!activeTopic.contains(name) || !partitionIds.contains(p))
       (3, -1L)                  // UNKNOWN_TOPIC_OR_PARTITION
-    else if (rs.length > maxMessageBytes(name))
-      (10, -1L)                 // MESSAGE_TOO_LARGE: the max.message.bytes
-                                // topic config (alterable via api 44) is
-                                // enforced where a real partition leader
-                                // enforces it — at append time
+    else if (rs.length > maxMessageBytes)
+      (10, -1L)                 // MESSAGE_TOO_LARGE, enforced where a real
+                                // partition leader enforces it — at append
     else if (!crcValid(rs))
       (2, -1L)                  // CORRUPT_MESSAGE
     else {
@@ -1645,7 +1236,7 @@ final class KafkaLogServer(dir: String, topic: String,
         // a read_committed fetch never serves past the LSO — records of a
         // still-open transaction are not yet decided
         val end = if (isolation == 1) lso else hw
-        // a fetch below the log-start offset (DeleteRecords truncation)
+        // a fetch below the log-start offset (truncation)
         // answers OFFSET_OUT_OF_RANGE like a real broker whose segments
         // are gone — the consumer must reset, not silently skip
         val oor = fetchOffset < logStartOffset(p)
@@ -1790,7 +1381,7 @@ final class KafkaLogServer(dir: String, topic: String,
           val lso = lastStable(p)
           val hw = endOffset(p)
           val end = if (isolation == 1) lso else hw
-          // below the DeleteRecords low watermark: OFFSET_OUT_OF_RANGE
+          // below the log-start low watermark: OFFSET_OUT_OF_RANGE
           val oor = fetchOffset < logStartOffset(p)
           val aborted =
             if (isolation == 1 && !oor)
@@ -2021,21 +1612,4 @@ final class KafkaLogServer(dir: String, topic: String,
     closed = true
     server.close()
   }
-}
-
-private[replay] object KafkaLogServer {
-  /** Topic config defaults the double serves (a real broker's static
-    * layer): key → (default value, config_type per the protocol's
-    * ConfigType enum — 1 BOOLEAN, 2 STRING, 3 INT, 5 LONG, 7 LIST —
-    * and whether APPEND/SUBTRACT apply, i.e. the config is LIST-typed).
-    * config_source: 5 = DEFAULT_CONFIG for these, 1 = DYNAMIC_TOPIC_CONFIG
-    * for an altered override. None are sensitive, none read-only. */
-  val TopicConfigDefaults: Map[String, (String, Byte, Boolean)] = Map(
-    "retention.ms" -> (("604800000", 5: Byte, false)),
-    "retention.bytes" -> (("-1", 5: Byte, false)),
-    "max.message.bytes" -> (("1048588", 3: Byte, false)),
-    "segment.bytes" -> (("1073741824", 3: Byte, false)),
-    "min.insync.replicas" -> (("1", 3: Byte, false)),
-    "compression.type" -> (("producer", 2: Byte, false)),
-    "cleanup.policy" -> (("delete", 7: Byte, true)))
 }

@@ -4,6 +4,7 @@ import java.io.{BufferedInputStream, DataInputStream, FileInputStream}
 import java.util
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -560,7 +561,7 @@ object ReplayOffset {
 class ReplayMicroBatchStream(opts: ReplayOptions,
     fields: Array[Int] = Array.range(0, 6))
     extends MicroBatchStream with SupportsAdmissionControl
-    with SupportsTriggerAvailableNow with ReportsSourceMetrics {
+    with SupportsTriggerAvailableNow with ReportsSourceMetrics with Logging {
 
   private def path = opts.path
 
@@ -816,7 +817,7 @@ class ReplayMicroBatchStream(opts: ReplayOptions,
         }
       } catch {
         case e: Exception =>
-          System.err.println(
+          logWarning(
             s"graft-replay: offset commit-back for group '$g' failed " +
               s"(progress is checkpoint-safe): ${e.getMessage}")
       }
@@ -840,7 +841,7 @@ class ReplayMicroBatchStream(opts: ReplayOptions,
       subscription.foreach { case (m, _) =>
         try m.leave()
         catch { case e: Exception =>
-          System.err.println(s"graft-replay: LeaveGroup failed " +
+          logWarning(s"graft-replay: LeaveGroup failed " +
             s"(coordinator will session-reap): ${e.getMessage}")
         }
       }

@@ -47,33 +47,27 @@ class KafkaFlexDialectSpec extends graft.SparkSpec {
     (14, 4, 5),   // SyncGroup: v4+
     (17, 1, 1), (18, 0, 3), (36, 0, 2),
     (19, 5, 7),   // CreateTopics: v5+
-    (20, 4, 5),   // DeleteTopics: v4+
-    (15, 5, 5),   // DescribeGroups: v5
-    (16, 3, 4),   // ListGroups: v3+
     (22, 2, 4),   // InitProducerId: v2+
     (24, 3, 3),   // AddPartitionsToTxn: v3
     (25, 3, 3),   // AddOffsetsToTxn: v3
     (26, 3, 3),   // EndTxn: v3
-    (28, 3, 3),   // TxnOffsetCommit: v3
-    (21, 2, 2),   // DeleteRecords: flexible v2 only
-    (42, 2, 2))   // DeleteGroups: flexible v2 only
+    (28, 3, 3))   // TxnOffsetCommit: v3
 
   /** Every API capped BELOW its flexible floor — a pre-KIP-482 vintage. */
   private val vintageRanges = Seq[(Short, Short, Short)](
     (0, 0, 8), (1, 0, 11), (2, 0, 5), (3, 0, 8), (8, 0, 7), (9, 0, 5),
     (10, 0, 2), (11, 0, 5), (12, 0, 3), (13, 0, 3), (14, 0, 3),
-    (15, 0, 4), (16, 0, 2), (17, 0, 1), (18, 0, 3), (36, 0, 2),
-    (19, 0, 4), (20, 0, 3), (22, 0, 1), (24, 0, 2), (25, 0, 2), (26, 0, 2),
-    (28, 0, 2), (21, 0, 1), (42, 0, 1))
+    (17, 0, 1), (18, 0, 3), (36, 0, 2), (19, 0, 4), (22, 0, 1),
+    (24, 0, 2), (25, 0, 2), (26, 0, 2), (28, 0, 2))
 
   /** The full client matrix against one advertisement: transactional
     * produce (commit + abort), read_committed consume, group membership
-    * join/heartbeat/commit/leave, simple commit-back, CreateTopics.
+    * join/heartbeat/commit/leave, simple commit-back, CreateTopics, and
+    * ListOffsets earliest after a log truncation.
     * Returns the observable outcomes for cross-advertisement comparison. */
   private def runAllLanes(advertise: Seq[(Short, Short, Short)])
       : (Seq[(Long, String)], Seq[Int], Map[Int, Long], Map[Int, Long],
-         Map[Int, Long], (String, String, Int, String, Boolean, Boolean,
-           Boolean, (Long, Long, Long), Boolean, Boolean)) = {
+         Map[Int, Long], (String, Int, String, (Long, Long))) = {
     val dir = java.nio.file.Files.createTempDirectory("kafka-flex").toString
     val broker = new KafkaLogServer(dir, "flex", requireCreate = true,
       advertiseApis = Some(advertise))
@@ -116,11 +110,11 @@ class KafkaFlexDialectSpec extends graft.SparkSpec {
       val member = new KafkaGroupMembership(cons, "flex-group", "flex")
       val assigned = member.join()
       assert(member.heartbeat(), "stable group heartbeat must be clean")
-      // admin group views while the member is live (apis 15/16, r14 #6):
-      // member ids are counter-assigned, so compare state + roster SIZE
-      val descr = cons.describeGroups(Seq("flex-group"))("flex-group")
-      val groupSeen = cons.listGroups().exists(_._1 == "flex-group")
-      val ghost = cons.describeGroups(Seq("flex-ghost"))("flex-ghost")
+      // the coordinator's view while the member is live: member ids are
+      // counter-assigned, so compare state + roster SIZE
+      val (groupState, groupMembers) =
+        broker.groupCoordinator.describe("flex-group")
+      val ghostState = broker.groupCoordinator.describe("flex-ghost")._1
       member.commitOffsets(Map(0 -> 2L, 1 -> 1L))
       val fenced = broker.committed("flex-group")
       member.leave()
@@ -132,32 +126,13 @@ class KafkaFlexDialectSpec extends graft.SparkSpec {
       // the txn-staged offsets landed with the commit above
       val ctp = cons.committedOffsets("flex-ctp", Seq(0, 1))
 
-      // DeleteRecords (api 21) both dialects: truncate p0 below offset 2 —
-      // the low watermark returns, earliest moves, the HW stays
-      val lows = cons.deleteRecords(Map(0 -> 2L))
-      val truncated = (lows(0), cons.startOffset(0), cons.endOffset(0))
-      // DeleteGroups (api 42) both dialects: the simple group deletes
-      // wholesale; deleting it again is the NAMED ghost error
-      cons.deleteGroups(Seq("flex-simple"))
-      val dgGone = cons.committedOffsets("flex-simple", Seq(0, 1)).isEmpty
-      val dgGhost = intercept[IOException] {
-        cons.deleteGroups(Seq("flex-simple"))
-      }.getMessage.contains("GROUP_ID_NOT_FOUND")
-
-      // DeleteTopics (api 20) lifecycle dual: unknown name refuses NAMED,
-      // deleting the live topic makes a fresh client's metadata answer 3
-      val delUnknown = intercept[IOException] {
-        cons.deleteTopics(Seq("never-created"))
-      }.getMessage.contains("UNKNOWN_TOPIC_OR_PARTITION")
-      cons.deleteTopics(Seq("flex"))
-      val goneAfterDelete = intercept[IOException] {
-        new KafkaLogClient(s"${broker.address}/flex").endOffset(0)
-      }.getMessage.contains("error 3")
+      // truncate p0 below offset 2: ListOffsets earliest moves in both
+      // dialects, the HW stays
+      broker.truncateLog(0, 2L)
+      val truncated = (cons.startOffset(0), cons.endOffset(0))
 
       (rows.result(), assigned, fenced, simple, ctp,
-        (descr.state, descr.protocolType, descr.members.size,
-          ghost.state, groupSeen, delUnknown, goneAfterDelete,
-          truncated, dgGone, dgGhost))
+        (groupState, groupMembers.size, ghostState, truncated))
     } finally broker.close()
   }
 
@@ -171,10 +146,8 @@ class KafkaFlexDialectSpec extends graft.SparkSpec {
     assert(simple === Map(0 -> 1L), "simple commit-back round-trips")
     assert(ctp === Map(0 -> 2L),
       "txn-staged offsets must land with the transaction's commit")
-    assert(admin === ("Stable", "consumer", 1, "Dead", true, true, true,
-      (2L, 2L, 5L), true, true),
-      s"DescribeGroups/ListGroups/DeleteTopics/DeleteRecords/DeleteGroups " +
-        s"lane: $admin")
+    assert(admin === ("Stable", 1, "Dead", (2L, 5L)),
+      s"group state and truncated-log offsets: $admin")
   }
 
   test("a vintage pre-flexible broker produces the identical outcomes " +

@@ -52,6 +52,12 @@ class KafkaProduceSpec extends graft.SparkSpec {
       assert(c.produce(2,
         Seq((bytes("k"), bytes("v"), 1723700000000L))) === 0L)
       assert(c.endOffset(2) === 1L)
+      // a batch over the broker's max.message.bytes (1048588, the Kafka
+      // default) answers MESSAGE_TOO_LARGE and appends nothing
+      val big = intercept[java.io.IOException](c.produce(2,
+        Seq((null, new Array[Byte](1048588), 1723700000001L))))
+      assert(big.getMessage.contains("error 10"), big.getMessage)
+      assert(c.endOffset(2) === 1L)
       // re-creating answers TOPIC_ALREADY_EXISTS, like a real broker
       val ed = intercept[java.io.IOException](c.createTopics(Seq("adm" -> 3)))
       assert(ed.getMessage.contains("TOPIC_ALREADY_EXISTS"), ed.getMessage)
@@ -59,50 +65,6 @@ class KafkaProduceSpec extends graft.SparkSpec {
       val es = intercept[java.io.IOException](c.createTopics(Seq("oth" -> 1)))
       assert(es.getMessage.contains("INVALID_REQUEST"), es.getMessage)
       c.closeProducer()
-    } finally broker.close()
-  }
-
-  test("DeleteTopics: create → produce → delete → UNKNOWN_TOPIC; " +
-      "re-create starts EMPTY, data never resurrects") {
-    val dir = java.nio.file.Files.createTempDirectory("kafka-del").toString
-    val broker = new KafkaLogServer(dir, "life", requireCreate = true)
-    try {
-      val c = new KafkaLogClient(broker.clientPath,
-        Map("graft.role" -> "producer"))
-      c.createTopics(Seq("life" -> 2))
-      c.produce(0, Seq((bytes("k"), bytes("v1"), 1723700000000L)))
-      c.produce(1, Seq((null, bytes("v2"), 1723700000001L)))
-      assert(c.endOffset(0) === 1L && c.endOffset(1) === 1L)
-      // commit a group offset into the topic — deletion must take it down
-      c.commitOffsets("lifecycle-g", Map(0 -> 1L))
-      assert(c.committedOffsets("lifecycle-g", Seq(0)) === Map(0 -> 1L))
-      // deleting a name that was never created refuses loudly
-      val eu = intercept[java.io.IOException](c.deleteTopics(Seq("ghost")))
-      assert(eu.getMessage.contains("UNKNOWN_TOPIC_OR_PARTITION"), eu.getMessage)
-      // the real delete: a fresh client's metadata answers 3
-      c.deleteTopics(Seq("life"))
-      val eg = intercept[java.io.IOException](
-        new KafkaLogClient(broker.clientPath).endOffset(0))
-      assert(eg.getMessage.contains("error 3"), eg.getMessage)
-      // deleting twice is UNKNOWN too (it is gone)
-      val e2 = intercept[java.io.IOException](c.deleteTopics(Seq("life")))
-      assert(e2.getMessage.contains("UNKNOWN_TOPIC_OR_PARTITION"), e2.getMessage)
-      // re-create: the topic exists again and is EMPTY — the pre-delete
-      // records must not resurrect (real delete+recreate semantics)
-      val c2 = new KafkaLogClient(broker.clientPath,
-        Map("graft.role" -> "producer"))
-      c2.createTopics(Seq("life" -> 2))
-      assert(c2.endOffset(0) === 0L && c2.endOffset(1) === 0L,
-        "re-created topic must start empty")
-      // and the group offsets committed into the OLD incarnation are gone:
-      // a real broker removes the topic's committed offsets on delete, so
-      // OffsetFetch after recreate must not point into the vanished log
-      // (ADVICE r15).
-      assert(c2.committedOffsets("lifecycle-g", Seq(0)).getOrElse(0, -1L)
-        === -1L, "stale committed offset survived delete+recreate")
-      c2.produce(0, Seq((null, bytes("fresh"), 1723700000002L)))
-      assert(c2.endOffset(0) === 1L)
-      c.closeProducer(); c2.closeProducer()
     } finally broker.close()
   }
 
@@ -115,8 +77,8 @@ class KafkaProduceSpec extends graft.SparkSpec {
       (0 until 5).foreach(i =>
         c.produce(0, Seq((bytes(s"k$i"), bytes(s"v$i"), 1723700000000L + i))))
       assert(c.endOffset(0) === 5L && c.startOffset(0) === 0L)
-      // truncate below offset 3: the low watermark returns and earliest moves
-      assert(c.deleteRecords(Map(0 -> 3L)) === Map(0 -> 3L))
+      // truncate below offset 3: ListOffsets earliest moves to it
+      broker.truncateLog(0, 3L)
       assert(c.startOffset(0) === 3L, "ListOffsets earliest must move")
       assert(c.endOffset(0) === 5L, "the high watermark must not move")
       // fetch below the low watermark: OFFSET_OUT_OF_RANGE, not silence
@@ -130,16 +92,13 @@ class KafkaProduceSpec extends graft.SparkSpec {
         ok.readFrame(); assert(new String(ok.value, "UTF-8") === "v4")
       } finally ok.close()
       // monotonic: a LOWER target never moves the watermark back
-      assert(c.deleteRecords(Map(0 -> 1L)) === Map(0 -> 3L))
-      // -1 truncates to the high watermark
-      assert(c.deleteRecords(Map(0 -> -1L)) === Map(0 -> 5L))
+      broker.truncateLog(0, 1L)
+      assert(c.startOffset(0) === 3L)
+      // truncating to the high watermark leaves nothing readable
+      broker.truncateLog(0, 5L)
       assert(c.startOffset(0) === 5L)
-      // past the high watermark: the NAMED error
-      val ep = intercept[java.io.IOException](c.deleteRecords(Map(0 -> 99L)))
-      assert(ep.getMessage.contains("OFFSET_OUT_OF_RANGE"), ep.getMessage)
-      // unknown partition: the named routing error
-      val eu = intercept[java.io.IOException](c.deleteRecords(Map(9 -> 0L)))
-      assert(eu.getMessage.contains("UNKNOWN_TOPIC_OR_PARTITION"), eu.getMessage)
+      // past the high watermark is refused
+      intercept[IllegalArgumentException](broker.truncateLog(0, 99L))
       c.closeProducer()
     } finally broker.close()
   }
@@ -152,9 +111,9 @@ class KafkaProduceSpec extends graft.SparkSpec {
         Map("graft.role" -> "producer"))
       (0 until 5).foreach(i =>
         p.produce(0, Seq((null, bytes(s"v$i"), 1723700000000L + i))))
-      p.deleteRecords(Map(0 -> 3L))
       p.closeProducer()
-      // default posture: loud failure (proven in the DeleteRecords test);
+      broker.truncateLog(0, 3L)
+      // default posture: loud failure (proven in the truncation test);
       // opted out: skip to earliest and serve the surviving records
       val c = new KafkaLogClient(broker.clientPath,
         Map("fail.on.data.loss" -> "false"))
@@ -170,10 +129,7 @@ class KafkaProduceSpec extends graft.SparkSpec {
       intercept[Exception](try fr2.readFrame() finally fr2.close())
       // truncation that swallowed the ENTIRE remaining planned range:
       // the bounded read ends gracefully (false), it does not EOF-crash
-      val p2 = new KafkaLogClient(broker.clientPath,
-        Map("graft.role" -> "producer"))
-      p2.deleteRecords(Map(0 -> -1L)) // truncate to the high watermark
-      p2.closeProducer()
+      broker.truncateLog(0, 5L) // truncate to the high watermark
       val fr3 = c.openFrames(0, 0L, needKey = false, needValue = true)
       try assert(!fr3.readFrameBefore(5L),
         "a fully-truncated planned range must end the read, not crash")
@@ -613,100 +569,5 @@ class KafkaProduceSpec extends graft.SparkSpec {
       assert(got === want, "the mirrored topic must hold every record " +
         "(values bit-identical, timestamps at broker ms precision)")
     } finally { src.close(); dst.close() }
-  }
-
-  test("DescribeConfigs/IncrementalAlterConfigs: a config write reads back " +
-      "AND is enforced by the produce path (max.message.bytes)") {
-    val broker = emptyBroker("cfg")
-    try {
-      val c = new KafkaLogClient(broker.clientPath)
-      // static defaults: full listing, source 5 (DEFAULT_CONFIG)
-      val all = c.describeConfigs("cfg")
-      assert(all("max.message.bytes").value === "1048588")
-      assert(all("max.message.bytes").source === 5)
-      assert(all("cleanup.policy").value === "delete")
-      assert(all.size === 7, s"the full static layer lists: ${all.keys}")
-      // subset read
-      val one = c.describeConfigs("cfg", Seq("retention.ms"))
-      assert(one.keySet === Set("retention.ms"))
-      assert(one("retention.ms").value === "604800000")
-      // SET: the override reads back with source 1 (DYNAMIC_TOPIC_CONFIG)
-      c.incrementalAlterConfigs("cfg", Seq(("max.message.bytes", 0, "600")))
-      val after = c.describeConfigs("cfg", Seq("max.message.bytes"))
-      assert(after("max.message.bytes").value === "600")
-      assert(after("max.message.bytes").source === 1)
-      // ...and the broker ENFORCES it: an oversized batch answers
-      // MESSAGE_TOO_LARGE (10), a small one lands
-      val big = intercept[java.io.IOException](
-        c.produce(0, Seq((null, new Array[Byte](2000), 1000L))))
-      assert(big.getMessage.contains("error 10"), big.getMessage)
-      assert(c.produce(1, Seq((null, bytes("small"), 1000L))) === 0L)
-      // DELETE restores the default and the big produce lands again
-      c.incrementalAlterConfigs("cfg", Seq(("max.message.bytes", 1, null)))
-      assert(c.describeConfigs("cfg",
-        Seq("max.message.bytes"))("max.message.bytes").source === 5)
-      c.produce(2, Seq((null, new Array[Byte](2000), 1001L)))
-      // validate_only dry-runs: checked, not applied
-      c.incrementalAlterConfigs("cfg", Seq(("retention.ms", 0, "1")),
-        validateOnly = true)
-      assert(c.describeConfigs("cfg",
-        Seq("retention.ms"))("retention.ms").value === "604800000")
-      // APPEND/SUBTRACT work on the LIST config...
-      c.incrementalAlterConfigs("cfg", Seq(("cleanup.policy", 2, "compact")))
-      assert(c.describeConfigs("cfg",
-        Seq("cleanup.policy"))("cleanup.policy").value === "delete,compact")
-      c.incrementalAlterConfigs("cfg", Seq(("cleanup.policy", 3, "delete")))
-      assert(c.describeConfigs("cfg",
-        Seq("cleanup.policy"))("cleanup.policy").value === "compact")
-      // ...and are refused by NAME on a non-list config
-      val listErr = intercept[java.io.IOException](
-        c.incrementalAlterConfigs("cfg", Seq(("retention.ms", 2, "5"))))
-      assert(listErr.getMessage.contains("error 40"), listErr.getMessage)
-      // a NULL value on a list op is refused — never a literal "null" write
-      val nul = intercept[java.io.IOException](
-        c.incrementalAlterConfigs("cfg", Seq(("cleanup.policy", 2, null))))
-      assert(nul.getMessage.contains("error 40"), nul.getMessage)
-      assert(c.describeConfigs("cfg",
-        Seq("cleanup.policy"))("cleanup.policy").value === "compact")
-      // unknown keys and malformed values answer INVALID_CONFIG (40)
-      val unk = intercept[java.io.IOException](
-        c.incrementalAlterConfigs("cfg", Seq(("no.such.config", 0, "1"))))
-      assert(unk.getMessage.contains("error 40"), unk.getMessage)
-      val bad = intercept[java.io.IOException](
-        c.incrementalAlterConfigs("cfg", Seq(("retention.ms", 0, "soon"))))
-      assert(bad.getMessage.contains("error 40"), bad.getMessage)
-      // unknown topics answer UNKNOWN_TOPIC_OR_PARTITION on both apis
-      val dg = intercept[java.io.IOException](c.describeConfigs("ghost"))
-      assert(dg.getMessage.contains("error 3"), dg.getMessage)
-      val ag = intercept[java.io.IOException](
-        c.incrementalAlterConfigs("ghost", Seq(("retention.ms", 0, "1"))))
-      assert(ag.getMessage.contains("error 3"), ag.getMessage)
-    } finally broker.close()
-  }
-
-  test("config lifecycle over the PINNED dialect (DescribeConfigs v1, " +
-      "IncrementalAlterConfigs v0) matches the flexible one") {
-    val dir = java.nio.file.Files.createTempDirectory("kafka-cfg").toString
-    val broker = new KafkaLogServer(dir, "cfgv", requireCreate = true,
-      advertiseApis = Some(Seq[(Short, Short, Short)](
-        (0, 0, 8), (1, 0, 11), (2, 0, 5), (3, 0, 8), (10, 0, 2),
-        (18, 0, 3), (19, 0, 4), (20, 0, 3), (32, 1, 3), (44, 0, 0))))
-    try {
-      val c = new KafkaLogClient(broker.clientPath)
-      c.createTopics(Seq("cfgv" -> 3))
-      assert(c.describeConfigs("cfgv")("segment.bytes").value === "1073741824")
-      c.incrementalAlterConfigs("cfgv", Seq(("max.message.bytes", 0, "700")))
-      val e = c.describeConfigs("cfgv", Seq("max.message.bytes"))
-      assert(e("max.message.bytes").value === "700" &&
-        e("max.message.bytes").source === 1)
-      val big = intercept[java.io.IOException](
-        c.produce(0, Seq((null, new Array[Byte](2000), 1000L))))
-      assert(big.getMessage.contains("error 10"), big.getMessage)
-      // DeleteTopics purges the override: recreate starts from defaults
-      c.deleteTopics(Seq("cfgv"))
-      c.createTopics(Seq("cfgv" -> 3))
-      assert(c.describeConfigs("cfgv",
-        Seq("max.message.bytes"))("max.message.bytes").source === 5)
-    } finally broker.close()
   }
 }

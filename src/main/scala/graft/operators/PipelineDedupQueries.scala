@@ -213,14 +213,15 @@ ORDER BY doc_a NULLS FIRST, doc_b NULLS FIRST""")),
 
     // ---- X07: duplicate-cluster assignment ---------------------------------
     // Near-dup PAIRS become per-document cluster ids (min doc id of the
-    // connected component) via iterative min-label propagation — the
+    // connected component; GraftOps.dedupClusters: a driver-side union-find
+    // up to 1M edges, iterative min-label propagation above) — the
     // transitive-closure step a dedup pipeline needs before "keep one per
     // cluster" (a~b, b~c ⇒ one cluster of three, even though a,c were never
     // directly compared). O-class: DuckDB replays the closure with a
     // recursive CTE over the same exact-Jaccard pair set.
     GQuery("x07_dedup_clusters",
-      // memo-backed since round 18 (setup_cc_memo): identical min-label
-      // loop, shared with x32/x56/x64 instead of re-run per lane
+      // memo-backed since round 18 (setup_cc_memo): one dedupClusters call,
+      // shared with x32/x56/x64 instead of re-run per lane
       (s, d) => nearDupClusters(s, d)
         .orderBy(col("doc_id")),
       Some(x07OracleSql)),

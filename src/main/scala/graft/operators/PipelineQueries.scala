@@ -11,7 +11,11 @@ import org.apache.spark.sql.SparkSession
   * Scale notes (the 100 TB stance): every operator is a shuffle-conscious
   * composition — hash-partitioned groupBys, inverted-index joins instead of
   * all-pairs cross products, band-bucket joins for LSH, broadcast for the
-  * small query side of ANN. No driver-side collects anywhere.
+  * small query side of ANN. Driver-side collects happen only under a stated
+  * size bound. Near-dup clustering is one: `GraftOps.dedupClusters`
+  * collects the pair graph and runs a union-find on the driver while it has
+  * at most `GraftOps.ClusterEdgesPerPartition` (1M) directed edges (~16 MB
+  * of ids), and runs a distributed min-label loop above that.
   */
 object PipelineQueries {
 

@@ -144,13 +144,17 @@ private[graft] object PipelineShared {
 
   /** Memoized near-dup cluster assignment (round 18): x07_dedup_clusters,
     * x32_cluster_keeper, x56_leakage_free_split and x64_release_funnel all
-    * ran the IDENTICAL `dedupClusters(nearDupPairs, doc_a, doc_b)` min-label
-    * loop — a production pipeline computes the cluster assignment once and
-    * feeds every decision layer from it. Same memo contract as the pair
-    * table (computed per (session, dir), eagerly checkpointed, reset
-    * between bench reps, warmed by the named setup_cc_memo step; standalone
-    * runs pay their own loop). x07_dedup_clusters_star is NOT rewired — its
-    * declared machinery is the star-contraction algorithm itself. */
+    * ran the IDENTICAL `dedupClusters(nearDupPairs, doc_a, doc_b)` — a
+    * production pipeline computes the cluster assignment once and feeds
+    * every decision layer from it. dedupClusters solves the components on
+    * the driver (union-find over the collected edges) while the pair graph
+    * has at most `GraftOps.ClusterEdgesPerPartition` (1M) directed edges,
+    * and runs its distributed min-label loop above that. Same memo contract
+    * as the pair table (computed per (session, dir), eagerly checkpointed,
+    * reset between bench reps, warmed by the named setup_cc_memo step;
+    * standalone runs pay their own solve). x07_dedup_clusters_star is NOT
+    * rewired — its declared machinery is the star-contraction algorithm
+    * itself. */
   private val ccMemo =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private[operators] def nearDupClusters(s: SparkSession, d: String): DataFrame =

@@ -292,32 +292,60 @@ class PipelineSpec extends SparkSpec {
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
     val params = Gen.Parameters.default
-    for (seedNo <- 1L to 4L) {
-      val n = 40
+    val n = 40
+    val generated = (1L to 4L).map { seedNo =>
       val edgeGen = Gen.listOfN(60,
         Gen.zip(Gen.chooseNum(0, n - 1), Gen.chooseNum(0, n - 1)))
-      val raw = edgeGen(params, Seed(seedNo)).get
+      s"seed $seedNo" -> edgeGen(params, Seed(seedNo)).get
         .collect { case (a, b) if a != b => (math.min(a, b).toLong, math.max(a, b).toLong) }
         .distinct
+    }
+    // 0-1-...-256: diameter 256, past the loop's default 50 rounds, so only
+    // the driver-side solve can label it at the default maxIter (the loop's
+    // round bound on this graph is pinned in StarContractionSpec; running it
+    // to convergence here would take 257 rounds)
+    val path = "path" -> (0L until 256L).map(i => (i, i + 1))
+    for ((graph, raw) <- generated :+ path) {
       // ground truth: classic union-find
-      val parent = Array.tabulate(n)(identity)
+      val nodes = raw.flatMap(e => Seq(e._1, e._2)).distinct
+      val parent = Array.tabulate(nodes.max.toInt + 1)(identity)
       def find(x: Int): Int = { var r = x; while (parent(r) != r) r = parent(r); r }
       raw.foreach { case (a, b) =>
         val (ra, rb) = (find(a.toInt), find(b.toInt))
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
-      val want = raw.flatMap(e => Seq(e._1, e._2)).distinct.sorted
+      val want = nodes.sorted
         .map(id => id -> {
           // component min = min over members with same root
           val root = find(id.toInt)
-          raw.flatMap(e => Seq(e._1, e._2)).distinct
-            .filter(m => find(m.toInt) == root).min
+          nodes.filter(m => find(m.toInt) == root).min
         }).toMap
-      val got = graft.GraftOps.dedupClusters(
-          raw.toDF("doc_a", "doc_b"), col("doc_a"), col("doc_b"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got === want, s"seed $seedNo: components differ")
+      val pairs = raw.toDF("doc_a", "doc_b")
+      def labels(df: org.apache.spark.sql.DataFrame) = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val local = graft.GraftOps.dedupClusters(pairs, col("doc_a"), col("doc_b"))
+      val got = labels(local)
+      assert(got === want, s"$graph: driver-side solve differs")
+      if (graph == path._1)
+        assert(got.size === 257 && got.values.forall(_ == 0L), "path: every node labels 0")
+      else {
+        val loop = graft.GraftOps.minLabelClusters(pairs, col("doc_a"), col("doc_b"))
+        assert(labels(loop) === want, s"$graph: min-label loop differs")
+        assert(local.schema === loop.schema, s"$graph: schemas differ")
+      }
     }
+    // a null id sends dedupClusters to the loop, which labels it as before
+    val withNull = Seq((1L, Option(2L)), (2L, Option(3L)), (4L, None)).toDF("doc_a", "doc_b")
+    assert(graft.GraftOps.dedupClusters(withNull, col("doc_a"), col("doc_b")).collect().toSet ===
+      graft.GraftOps.minLabelClusters(withNull, col("doc_a"), col("doc_b")).collect().toSet)
+    // the id type and nullability carry through both paths
+    val intPairs = generated.head._2.map { case (a, b) => (a.toInt, Option(b.toInt)) }
+      .toDF("doc_a", "doc_b")
+    val intLocal = graft.GraftOps.dedupClusters(intPairs, col("doc_a"), col("doc_b"))
+    val intLoop = graft.GraftOps.minLabelClusters(intPairs, col("doc_a"), col("doc_b"))
+    assert(intLocal.schema === intLoop.schema)
+    assert(intLocal.schema.map(f => (f.dataType.typeName, f.nullable)) ===
+      Seq(("integer", true), ("integer", true)))
+    assert(intLocal.collect().toSet === intLoop.collect().toSet)
   }
 
   test("packSequences equals a local greedy fold and respects capacity") {

@@ -4,7 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Star-contraction connected components (GraftOps.dedupClustersStar) vs
-  * min-label propagation (GraftOps.dedupClusters): same labels on random
+  * min-label propagation (GraftOps.minLabelClusters, the distributed loop
+  * GraftOps.dedupClusters runs on large edge sets): same labels on random
   * graphs, and O(log n) rounds on a high-diameter path graph where min-label
   * would need O(n) rounds. */
 class StarContractionSpec extends SparkSpec {
@@ -28,7 +29,7 @@ class StarContractionSpec extends SparkSpec {
       }
       val pairs = pairsDf(edges)
       val viaMinLabel = labelsOf(
-        GraftOps.dedupClusters(pairs, col("doc_a"), col("doc_b")))
+        GraftOps.minLabelClusters(pairs, col("doc_a"), col("doc_b")))
       val viaStar = labelsOf(
         GraftOps.dedupClustersStar(pairs, col("doc_a"), col("doc_b")))
       assert(viaStar === viaMinLabel, s"label mismatch for seed=$seed")
@@ -51,7 +52,7 @@ class StarContractionSpec extends SparkSpec {
   test("path graph: min-label propagation needs O(diameter) rounds") {
     val path = pairsDf((0L until 256L).map(i => (i, i + 1)))
     assertThrows[IllegalStateException] {
-      GraftOps.dedupClusters(path, col("doc_a"), col("doc_b"), maxIter = 12)
+      GraftOps.minLabelClusters(path, col("doc_a"), col("doc_b"), maxIter = 12)
         .count()
     }
   }

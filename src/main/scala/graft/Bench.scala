@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
 /** Per-round benchmark: runs every registry query against
@@ -11,18 +10,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // single-parquet-file-per-table testdata layout: 16 MB splits instead
-      // of the 128 MB default, or a whole table scans as one task and the
-      // pre-shuffle stages run single-threaded (see Verify.scala note)
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", (16L << 20).toString))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     // JVM/codegen warmup + one-time fixture construction outside the timed
@@ -107,7 +95,7 @@ object Bench {
     def timedSetup(name: String)(body: => Unit): (String, Double, Boolean) = {
       val t0 = System.nanoTime()
       val ok = try { body; true }
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           false
         }
@@ -137,7 +125,7 @@ object Bench {
         val t0 = System.nanoTime()
         val ok =
           try { q.fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true }
-          catch { case e: Throwable =>
+          catch { case NonFatal(e) =>
             System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}")
             false
           }

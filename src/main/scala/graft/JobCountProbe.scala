@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
@@ -18,15 +17,7 @@ object JobCountProbe {
       else SparkEntry.registry.map(_.name)
         .filter(n => !n.startsWith("s")) // batch lanes only by default
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", (16L << 20).toString))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)
@@ -52,7 +43,7 @@ object JobCountProbe {
         val dt = (System.nanoTime() - w0) / 1e9
         Thread.sleep(100)
         println(f"$n\t$dt%.2f\t${jobs.get - j0}\t${stages.get - s0}\t${tasks.get - t0}")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         println(s"$n\tFAILED\t${e.getMessage.take(80)}")
       }
       spark.catalog.clearCache()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round harness: dump `.explain("formatted")` for named
   * registry queries to files (plans/rNN/<name>_<tag>.txt). Not part of the
   * driver contract — evidence capture only.
@@ -13,15 +11,7 @@ object PlanDump {
     val Array(sfDir, outDir, tag, namesCsv) = args.take(4)
     val names = namesCsv.split(",").map(_.trim).filter(_.nonEmpty)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", (16L << 20).toString))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val byName = SparkEntry.registry.map(q => q.name -> q).toMap
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))

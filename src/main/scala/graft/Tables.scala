@@ -31,17 +31,15 @@ object Tables {
   // Plan-level DataFrame reuse (NOT a data cache): repeated table() calls in
   // a registry run would otherwise re-list files and re-read footers per
   // query — measurable fixed overhead across 69 queries.
-  private val dfCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String, String), DataFrame]
+  // Keyed by the session itself (not its identity hash, which two live
+  // sessions can share). Reading legacy ns-encoded events needs
+  // `nanosAsLong`, which GraftSession sets on every harness session.
+  private val dfCache = scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, String, String), DataFrame]
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    dfCache.getOrElseUpdate((System.identityHashCode(spark), dir, name), {
-      if (name == "events")
-        // Harmless for µs parquet (flag only affects TIMESTAMP(NANOS) columns);
-        // required for the legacy ns encoding to be readable at all.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      spark.read.parquet(s"$dir/$name.parquet")
-    })
+    dfCache.getOrElseUpdate((spark, dir, name),
+      spark.read.parquet(s"$dir/$name.parquet"))
 
   /** The raw `events` schema as the current testdata actually reads (LongType
     * ts under nanosAsLong for legacy ns parquet; Timestamp[NTZ] for µs).

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -40,40 +39,22 @@ object Verify {
       require(sys.env.contains("SPARK_HOME"),
         "cluster fault mode launches real executor JVMs: set SPARK_HOME " +
           "(and SPARK_SCALA_VERSION=2.13)")
-    val builder = SparkSession.builder()
-      // kill mode: local[N, 4] — an interrupted task can surface as a
-      // genuine task FAILURE (interrupt mid-parquet-IO), which default
-      // local mode (maxFailures=1) would escalate to job failure — allow
-      // the production 4 attempts, like a real cluster
-      .master(if (fault.contains("cluster"))
-          s"local-cluster[2,${math.max(cpus.toInt / 2, 2)},3072]"
-        else if (fault.isDefined) s"local[$cpus,4]"
-        else s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // the testdata ships one parquet FILE per table (the DuckDB oracle
-      // needs that layout), so the default 128 MB split size reads a whole
-      // table as ONE task and serializes every pre-shuffle stage (generate/
-      // shingle/join chains measured 5+ min single-threaded at sf1). 16 MB
-      // splits restore scan parallelism; row groups are ~4 MB so splits
-      // stay real. On a real cluster the table is many files and the
-      // default is right — this tracks the file:core ratio, not data size.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", (16L << 20).toString))
-      .config("spark.ui.enabled", "false")
+    val builder = GraftSession.builder(cpus.toInt)
+    // kill mode: local[N, 4] — an interrupted task can surface as a genuine
+    // task FAILURE (interrupt mid-parquet-IO), which default local mode
+    // (maxFailures=1) would escalate to job failure — allow the production
+    // 4 attempts, like a real cluster
+    if (fault.contains("cluster"))
+      builder.master(s"local-cluster[2,${math.max(cpus.toInt / 2, 2)},3072]")
+    else if (fault.isDefined) builder.master(s"local[$cpus,4]")
     // Config-invariance sweeps (round-12): SPARK_GRAFT_EXTRA_CONF holds
     // semicolon-separated k=v pairs layered onto the builder — the seam the
     // AQE-off / codegen-off / different-shuffle-partitions arms use to
     // prove the registry's results are invariant to the physical-planning
     // knobs a cluster operator actually varies.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(
-      _.split(';').iterator.map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => builder.config(k.trim, v.trim)
-          case _ => sys.error(
-            s"SPARK_GRAFT_EXTRA_CONF segment '$kv' has no '=' (want k=v;k=v)")
-        }
-      })
+    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(spec =>
+      GraftSession.parseConfs("SPARK_GRAFT_EXTRA_CONF", spec)
+        .foreach { case (k, v) => builder.config(k, v) })
     if (fault.contains("cluster")) {
       // speculation armed (inert on one host — see above — but this is the
       // exact conf a multi-host run would use), executors as separate JVMs
@@ -142,7 +123,7 @@ object Verify {
         Tables.eventTsEncoding(spark, sfDir))
       Tables.schemaCanary(spark, sfDir)
         .foreach(p => System.err.println(s"[verify] CANARY: $p"))
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[verify] CANARY probe failed: ${e.getMessage}")
     }
     // dev knob: resume an interrupted sweep (the driver never sets this)
@@ -159,7 +140,7 @@ object Verify {
             .parquet(s"$outDir/$name")
           System.err.println(
             f"[verify] $name done in ${(System.nanoTime() - t0) / 1e9}%.1f s")
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
       }

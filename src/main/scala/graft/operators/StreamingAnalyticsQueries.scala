@@ -35,9 +35,9 @@ private[operators] object StreamingAnalyticsQueries {
     // (the same cutoff rule as s36, modeled by the `wm` CTE). Quote state
     // evicts to one-latest-behind-watermark + newer — the provable floor for
     // as-of semantics — so state is bounded by the watermark delay, not the
-    // stream length.
+    // stream length. RocksDB state store (required by transformWithState).
     GQuery("s40_stream_asof_join",
-      (s, d) => {
+      withStreamConfs(RocksDbState) { (s, d) =>
         import s.implicits._
         val typed = eventStream(s, d)
           .filter(col("event_type").isin("view", "purchase"))
@@ -50,15 +50,8 @@ private[operators] object StreamingAnalyticsQueries {
             org.apache.spark.sql.streaming.TimeMode.EventTime(),
             org.apache.spark.sql.streaming.OutputMode.Append())
           .toDF("user_id", "view_id", "q_id")
-        val prevProvider = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        val mem = try runToMemory(out, "append")
-        finally prevProvider match {
-          case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
-        mem.select(col("user_id"), col("view_id"), col("q_id"))
+        runToMemory(out, "append")
+          .select(col("user_id"), col("view_id"), col("q_id"))
           .orderBy(col("view_id"))
       },
       Some("""WITH wm AS (SELECT max(epoch_us(ts)) // 1000 - 3600000 AS wm_ms FROM events),

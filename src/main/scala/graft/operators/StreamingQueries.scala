@@ -3,9 +3,10 @@ package graft.operators
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
-import graft.{GQuery, Tables}
+import graft.{GQuery, GraftSession, Tables}
 import graft.sources.replay.ReplayLog
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.shims
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, Trigger}
 import org.apache.spark.sql.types._
@@ -41,63 +42,13 @@ object StreamingQueries {
   /** Run a streaming DF to completion (AvailableNow) into a memory sink,
     * return the sink contents as a DataFrame.
     *
-    * State partitioning: `spark.sql.shuffle.partitions` at stream start fixes
-    * the state-store partition count for the query's lifetime (it's baked
-    * into the checkpoint). Stateful commit cost per micro-batch is linear in
-    * that count, so bounded replays of ~10^5 rows are right-sized at 8
-    * partitions — 32 (the batch default here) quadruples per-batch commit
-    * overhead for no parallelism gain at this state size. At 100 TB the same
-    * knob scales up with cluster size instead. */
-  private[operators] def runToMemory(df: DataFrame, mode: String): DataFrame =
-    runToMemory(df, mode, noDataBatch = true)
-
-  /** [[runToMemory]] with an opt-out of Spark's terminal no-data micro-batch
-    * (round-17 optimization). For an INNER stream-stream join run to
-    * completion with AvailableNow, the final empty batch only EVICTS state —
-    * it can never emit a row (inner matches emit during data batches) — yet
-    * it pays a full trigger: incremental re-plan plus a state-store commit on
-    * every partition x store (measured 1.4 s of s08's 3.9 s). A bounded
-    * backfill doesn't need end-of-run eviction: the query terminates and the
-    * checkpoint is scratch. ONLY valid when the terminal batch provably
-    * cannot emit (inner joins); outer joins and append-mode window/session
-    * aggregates EMIT from that batch and must keep the default. The conf is
-    * flipped on the (single-threaded) harness session around the run and
-    * restored after termination. */
-  /** Guard for the noDataBatch conf flip (ADVICE r17): the flip mutates the
-    * shared harness session for the duration of the blocking run, which is
-    * only safe while streaming queries run strictly sequentially (true
-    * today). If a concurrent stream ever starts inside the flipped window
-    * it would silently inherit enabled=false and could drop terminal-batch
-    * emissions — fail loudly instead. */
-  private val ndFlipOwner =
-    new java.util.concurrent.atomic.AtomicReference[Thread](null)
-
-  private[operators] def runToMemory(df: DataFrame, mode: String,
-      noDataBatch: Boolean): DataFrame = {
-    // the 8-partition state sizing lives on the per-parent CLONED session
-    // (streamSession) that every query fn here runs on — never set session-
-    // globally, which would leak into concurrent batch queries.
-    val sess = df.sparkSession
-    val owner = ndFlipOwner.get()
-    require(owner == null || owner == Thread.currentThread(),
-      s"streaming query started while thread '${owner.getName}' holds the " +
-        "noDataMicroBatches=false window — concurrent streams would " +
-        "silently inherit the flipped conf; serialize the runs instead")
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val ndPrev = sess.conf.get(ndKey, "true")
-    if (!noDataBatch) {
-      require(ndFlipOwner.compareAndSet(null, Thread.currentThread()),
-        "concurrent noDataBatch=false streaming runs")
-      sess.conf.set(ndKey, "false")
-    }
-    try runToMemoryImpl(df, mode)
-    finally if (!noDataBatch) {
-      sess.conf.set(ndKey, ndPrev)
-      ndFlipOwner.set(null)
-    }
-  }
-
-  private def runToMemoryImpl(df: DataFrame, mode: String): DataFrame = {
+    * The stream runs under the confs of the session `df` was built on:
+    * Structured Streaming clones that session at `start()`, and the
+    * micro-batch driver and the state store read their confs from the clone.
+    * So a lane that needs its own confs builds its stream on a
+    * [[withStreamConfs]] session rather than setting them on a shared one,
+    * and no stream's confs depend on what another thread is running. */
+  private[operators] def runToMemory(df: DataFrame, mode: String): DataFrame = {
     val ckpt = Files.createTempDirectory(tmpBase, "graft-ckpt").toString
     if (mode == "append") {
       // append-mode outputs can be TABLE-sized (the s01/s23/s25 envelopes
@@ -132,15 +83,12 @@ object StreamingQueries {
     * and anything running concurrently on it keep full batch parallelism.
     * At 100 TB the same knob scales with cluster size on the job's own
     * session. `newSession` shares the SparkContext and cached data, so the
-    * replay source, parquet reads and the memory sink behave identically. */
+    * replay source, parquet reads and the memory sink behave identically.
+    * Test-visible: StreamMetricsSpec attaches its listener here (listeners
+    * are per-SparkSession). */
   private val harness =
     new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
-  /** Test-visible: StreamMetricsSpec attaches its listener to the harness
-    * session (listeners are per-SparkSession) to pin state-row budgets of
-    * the registry's streaming queries as they actually run. */
   private[graft] def harnessSession(parent: SparkSession): SparkSession =
-    streamSession(parent)
-  private def streamSession(parent: SparkSession): SparkSession =
     harness.computeIfAbsent(parent, p => {
       val c = p.newSession()
       c.conf.set("spark.sql.shuffle.partitions", "8")
@@ -149,13 +97,48 @@ object StreamingQueries {
       // store choices (provider class, state compression codec) for
       // measurement sweeps without touching the batch session or the bench
       // contract. Unset (the default, and every driver run) = stock confs.
-      sys.env.get("SPARK_GRAFT_STREAM_CONF").foreach(_.split(";")
-        .map(_.trim).filter(_.nonEmpty).foreach { kv =>
-          val Array(k, v) = kv.split("=", 2)
-          c.conf.set(k.trim, v.trim)
-        })
+      sys.env.get("SPARK_GRAFT_STREAM_CONF").foreach(spec =>
+        GraftSession.parseConfs("SPARK_GRAFT_STREAM_CONF", spec)
+          .foreach { case (k, v) => c.conf.set(k, v) })
       c
     })
+
+  /** Lane confs: no terminal no-data micro-batch. For an INNER
+    * stream-stream join (or a watermarked dedup) run to completion with
+    * AvailableNow, the final empty batch only EVICTS state — it can never
+    * emit a row — yet it pays a full trigger: incremental re-plan plus a
+    * state-store commit on every partition x store (measured 1.4 s of s08's
+    * 3.9 s). A bounded backfill needs no end-of-run eviction: the query
+    * terminates and the checkpoint is scratch. ONLY valid when the terminal
+    * batch provably cannot emit; outer joins and append-mode window/session
+    * aggregates EMIT from that batch and must keep the default. */
+  val NoTerminalBatch: Map[String, String] =
+    Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+
+  /** Lane confs: the RocksDB state store, which transformWithState
+    * requires. */
+  val RocksDbState: Map[String, String] =
+    Map("spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+
+  /** A clone of `base` (its confs, temp views and functions) with `confs`
+    * set on top, memoized per (base session, confs). */
+  private val confSessions = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, Map[String, String]), SparkSession]()
+  private[graft] def streamSession(base: SparkSession,
+      confs: Map[String, String]): SparkSession =
+    confSessions.computeIfAbsent((base, confs), _ => {
+      val c = shims.cloneSession(base)
+      confs.foreach { case (k, v) => c.conf.set(k, v) }
+      c
+    })
+
+  /** Run a lane body on the harness session's [[streamSession]] for
+    * `confs`, so the lane's streams carry those confs and the shared
+    * harness session is never mutated. */
+  private[operators] def withStreamConfs(confs: Map[String, String])(
+      fn: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
+    (s, d) => fn(streamSession(s, confs), d)
 
   /** Streaming envelope from the graft-replay source. */
   private[operators] def replayStream(s: SparkSession, d: String,
@@ -172,12 +155,10 @@ object StreamingQueries {
     * the driver has regenerated events.ts across encodings (ns-long vs
     * timestamp[us]) and forcing the wrong physical type silently corrupts
     * every event time by 1000× (VERDICT r7). */
-  private[operators] def eventStream(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  private[operators] def eventStream(s: SparkSession, d: String): DataFrame =
     Tables.normalizeEventTs(
       s.readStream.schema(Tables.eventSchema(s, d))
         .option("pathGlobFilter", "events.parquet").parquet(d))
-  }
 
   /** Streaming documents via Spark's file source. Schema inferred from the
     * files on disk (never hard-coded — the driver regenerates fixtures
@@ -199,7 +180,7 @@ object StreamingQueries {
   private[operators] def dbl(c: org.apache.spark.sql.Column) = c.cast("double")
 
   /** Declared queries — split by family in round 12 (same registry, same
-    * order); each runs verbatim on `streamSession(s)` — see `all`. */
+    * order); each runs verbatim on `harnessSession(s)` — see `all`. */
   private val declared: Seq[GQuery] =
     StreamingWindowQueries.queries ++ StreamingStatefulQueries.queries ++
       StreamingAnalyticsQueries.queries ++ StreamingGateQueries.queries
@@ -208,5 +189,5 @@ object StreamingQueries {
     * harness session, so its streaming-state conf never touches the caller's
     * session. */
   val all: Seq[GQuery] =
-    declared.map(q => q.copy(fn = (s, d) => q.fn(streamSession(s), d)))
+    declared.map(q => q.copy(fn = (s, d) => q.fn(harnessSession(s), d)))
 }

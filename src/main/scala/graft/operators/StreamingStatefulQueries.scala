@@ -136,7 +136,7 @@ GROUP BY user_id ORDER BY user_id NULLS FIRST""")),
     // RocksDB state store (required by the operator). Same running-spend
     // semantics as S09/S12 so all three stateful APIs cross-check.
     GQuery("s15_transform_with_state",
-      (s, d) => {
+      withStreamConfs(RocksDbState) { (s, d) =>
         import s.implicits._
         val typed = eventStream(s, d)
           .filter(col("event_type") === "purchase")
@@ -147,14 +147,7 @@ GROUP BY user_id ORDER BY user_id NULLS FIRST""")),
             org.apache.spark.sql.streaming.TimeMode.None(),
             org.apache.spark.sql.streaming.OutputMode.Update())
           .toDF("user_id", "n_purch", "cents")
-        val prevProvider = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        val mem = try runToMemory(out, "update")
-        finally prevProvider match {
-          case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
+        val mem = runToMemory(out, "update")
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("user_id")).orderBy(col("n_purch").desc)
         mem.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
@@ -264,9 +257,10 @@ ORDER BY "partition" NULLS FIRST, "offset" NULLS FIRST""")),
     // BATCH-side and loaded through handleInitialState; only the odd half
     // streams. The oracle totals BOTH halves per user (restricted to users
     // the stream actually touches), so a correct result is impossible unless
-    // the batch bootstrap landed in the state store before batch 0.
+    // the batch bootstrap landed in the state store before batch 0. RocksDB
+    // state store (required by transformWithState).
     GQuery("s37_warm_start_state",
-      (s, d) => {
+      withStreamConfs(RocksDbState) { (s, d) =>
         import s.implicits._
         val cents = (dec2(col("value")) * 100).cast("long")
         val hist = Tables.events(s, d)
@@ -284,14 +278,7 @@ ORDER BY "partition" NULLS FIRST, "offset" NULLS FIRST""")),
             org.apache.spark.sql.streaming.TimeMode.None(),
             org.apache.spark.sql.streaming.OutputMode.Update(), hist)
           .toDF("user_id", "n_purch", "cents")
-        val prevProvider = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        val mem = try runToMemory(out, "update")
-        finally prevProvider match {
-          case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
+        val mem = runToMemory(out, "update")
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("user_id")).orderBy(col("n_purch").desc)
         mem.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
@@ -313,7 +300,7 @@ GROUP BY user_id ORDER BY user_id NULLS FIRST""")),
     // always emit, the final one only if end <= watermark). RocksDB state
     // store (required by the operator).
     GQuery("s36_timer_sessionize",
-      (s, d) => {
+      withStreamConfs(RocksDbState) { (s, d) =>
         import s.implicits._
         val typed = eventStream(s, d)
           .withWatermark("ts", "1 hour")
@@ -325,15 +312,7 @@ GROUP BY user_id ORDER BY user_id NULLS FIRST""")),
             org.apache.spark.sql.streaming.TimeMode.EventTime(),
             org.apache.spark.sql.streaming.OutputMode.Append())
           .toDF("user_id", "ss_us", "se_us", "n", "cents")
-        val prevProvider = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        val mem = try runToMemory(out, "append")
-        finally prevProvider match {
-          case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
-        mem.orderBy(col("user_id"), col("ss_us"))
+        runToMemory(out, "append").orderBy(col("user_id"), col("ss_us"))
       },
       Some("""WITH wm AS (SELECT max(epoch_us(ts)) // 1000 - 3600000 AS wm_ms FROM events),
 e AS (SELECT user_id, epoch_us(ts) AS us, value FROM events),
@@ -548,8 +527,9 @@ ORDER BY ws_sec NULLS FIRST""")),
     // (see TypeSpendProcessor), the update-mode twin of a two-column groupBy:
     // the memory sink keeps every batch's emission, so the final value per
     // (user, type) is the max-count row, exactly like s15's running totals.
+    // RocksDB state store (required by transformWithState).
     GQuery("s39_map_state_spend",
-      (s, d) => {
+      withStreamConfs(RocksDbState) { (s, d) =>
         import s.implicits._
         val typed = eventStream(s, d)
           .select(col("user_id"), col("event_type"),
@@ -560,14 +540,7 @@ ORDER BY ws_sec NULLS FIRST""")),
             org.apache.spark.sql.streaming.TimeMode.None(),
             org.apache.spark.sql.streaming.OutputMode.Update())
           .toDF("user_id", "event_type", "n", "cents")
-        val prevProvider = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        val mem = try runToMemory(out, "update")
-        finally prevProvider match {
-          case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
+        val mem = runToMemory(out, "update")
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("user_id"), col("event_type")).orderBy(col("n").desc)
         mem.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)

@@ -262,9 +262,10 @@ FROM events JOIN customer ON user_id = c_custkey
 GROUP BY 1 ORDER BY c_mktsegment NULLS FIRST""")),
 
     // S08: stream-stream time-bounded equi join: purchases within 1h after a
-    // view by the same user, both sides watermarked.
+    // view by the same user, both sides watermarked. NoTerminalBatch: inner
+    // join, so the terminal batch evicts only, never emits.
     GQuery("s08_stream_stream_join",
-      (s, d) => {
+      withStreamConfs(NoTerminalBatch) { (s, d) =>
         val views = eventStream(s, d).filter(col("event_type") === "view")
           .withWatermark("ts", "1 hour")
           .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
@@ -278,8 +279,7 @@ GROUP BY 1 ORDER BY c_mktsegment NULLS FIRST""")),
             col("v_user") === col("p_user")
               && col("p_ts") >= col("v_ts")
               && col("p_ts") <= col("v_ts") + expr("INTERVAL 1 HOUR")),
-          "append", noDataBatch = false) // inner join: terminal batch
-                                         // evicts only, never emits
+          "append")
           .select(col("view_id"), col("purchase_id"))
           .orderBy(col("view_id"), col("purchase_id"))
       },
@@ -297,19 +297,21 @@ ORDER BY view_id NULLS FIRST, purchase_id NULLS FIRST""")),
     // doubled replay as s06; duplicates arrive in the same micro-batches, so
     // the bounded run removes them all.
     GQuery("s18_dedup_within_watermark",
-      (s, d) => runToMemory(
-        replayStream(s, d).unionAll(replayStream(s, d))
-          .withColumn("ts", col("timestamp"))
-          .withWatermark("ts", "1 hour")
-          .dropDuplicatesWithinWatermark("partition", "offset"),
-        // terminal-batch proof: watermarked dedup emits each kept row in the
-        // data batch it first arrives in; the terminal no-data batch only
-        // EVICTS expired dedup keys and provably cannot emit — and a bounded
-        // run's checkpoint is scratch, so the eviction itself is dead work
-        "append", noDataBatch = false)
-        .groupBy(col("partition").cast("long").as("partition"))
-        .agg(count(lit(1)).as("n"), max(col("offset")).as("max_offset"))
-        .orderBy(col("partition")),
+      // NoTerminalBatch proof: watermarked dedup emits each kept row in the
+      // data batch it first arrives in; the terminal no-data batch only
+      // EVICTS expired dedup keys and provably cannot emit — and a bounded
+      // run's checkpoint is scratch, so the eviction itself is dead work
+      withStreamConfs(NoTerminalBatch) { (s, d) =>
+        runToMemory(
+          replayStream(s, d).unionAll(replayStream(s, d))
+            .withColumn("ts", col("timestamp"))
+            .withWatermark("ts", "1 hour")
+            .dropDuplicatesWithinWatermark("partition", "offset"),
+          "append")
+          .groupBy(col("partition").cast("long").as("partition"))
+          .agg(count(lit(1)).as("n"), max(col("offset")).as("max_offset"))
+          .orderBy(col("partition"))
+      },
       Some("""SELECT event_id % 3 AS "partition", count(*) AS n,
   max(event_id // 3) AS max_offset
 FROM events GROUP BY 1 ORDER BY "partition" NULLS FIRST""")),
@@ -440,9 +442,10 @@ ORDER BY h NULLS FIRST""")),
     // shape uses the file source). The two logs hold the same events in
     // different arrival orders (std vs late-replay), keys are unique per log,
     // so every envelope joins exactly its twin within the ±1h window; the
-    // oracle replays both logs' offset assignment in SQL.
+    // oracle replays both logs' offset assignment in SQL. NoTerminalBatch:
+    // inner join, so the terminal batch evicts only, never emits.
     GQuery("s25_replay_stream_join",
-      (s, d) => {
+      withStreamConfs(NoTerminalBatch) { (s, d) =>
         val std = s.readStream.format("graft-replay")
           .option("path", ReplayLog.ensureLog(s, d)).load()
           .select(col("key").cast("string").as("k1"),
@@ -458,8 +461,7 @@ ORDER BY h NULLS FIRST""")),
             col("k1") === col("k2")
               && col("t2") >= col("t1") - expr("INTERVAL 1 HOUR")
               && col("t2") <= col("t1") + expr("INTERVAL 1 HOUR")),
-          "append", noDataBatch = false) // inner join: terminal batch
-                                         // evicts only, never emits
+          "append")
           .select(col("k1"), col("o1"), col("o2"))
           .orderBy(col("k1"))
       },

@@ -8,7 +8,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * (Spark 4 routes Column through ColumnNode; `classic.ExpressionUtils` is the
   * supported classic-session path, but is package-private). Standard extension
   * -library shim: lives in the org.apache.spark.sql package solely to export
-  * these two conversions to the graft library. */
+  * these private[sql] entry points to the graft library. */
 object shims {
   /** `AbstractDataType` is private[sql] in Spark 4; exported so graft's
     * native expressions can declare `inputTypes` contracts. */
@@ -32,4 +32,11 @@ object shims {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
+
+  /** A child session carrying a COPY of this session's runtime confs, temp
+    * views and functions (`cloneSession` is private[sql]; `newSession`
+    * starts from the builder confs only). */
+  def cloneSession(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
 }

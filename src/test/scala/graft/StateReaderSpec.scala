@@ -17,7 +17,6 @@ class StateReaderSpec extends SparkSpec {
 
   test("windowed aggregation state reads back and matches the aggregate") {
     val ckpt = java.nio.file.Files.createTempDirectory("ssr-ckpt").toString
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val ev = spark.readStream.schema(Tables.eventSchema(spark, sf))
       .option("pathGlobFilter", "events.parquet").parquet(sf)
     val q = ev.groupBy(col("user_id")).agg(count(lit(1)).as("n"))
@@ -40,10 +39,12 @@ class StateReaderSpec extends SparkSpec {
   }
 
   test("a transformWithState value-state variable reads back by name") {
-    import spark.implicits._
+    val rocks = operators.StreamingQueries.streamSession(spark,
+      operators.StreamingQueries.RocksDbState)
+    import rocks.implicits._
     val ckpt = java.nio.file.Files.createTempDirectory("ssr-tws-ckpt").toString
     val typed = Tables.normalizeEventTs(
-      spark.readStream.schema(Tables.eventSchema(spark, sf))
+      rocks.readStream.schema(Tables.eventSchema(rocks, sf))
         .option("pathGlobFilter", "events.parquet").parquet(sf))
       .filter(col("event_type") === "purchase")
       .select(col("user_id"),
@@ -52,18 +53,9 @@ class StateReaderSpec extends SparkSpec {
     val out = typed.groupByKey(_._1)
       .transformWithState(new SpendProcessor, TimeMode.None(), OutputMode.Update())
       .toDF("user_id", "n_purch", "cents")
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val q = out.writeStream.format("memory").queryName("ssr_tws_sink")
-        .outputMode("update").option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } finally prev match {
-      case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
+    out.writeStream.format("memory").queryName("ssr_tws_sink")
+      .outputMode("update").option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
 
     // the processor registered one ValueState named "spend" — address it
     val spend = spark.read.format("statestore")

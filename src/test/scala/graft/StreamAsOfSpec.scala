@@ -8,6 +8,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryException, TimeMode, Trigger}
 
+import graft.operators.StreamingQueries
 import graft.streaming.StreamAsOfProcessor
 import graft.streaming.IdempotentSink
 
@@ -28,7 +29,7 @@ class StreamAsOfSpec extends SparkSpec {
     * pending at the final watermark are absent from the map. */
   private def run(batches: Seq[Seq[(Long, String, Long, Long)]])
       : Map[Long, Option[Long]] = {
-    val s = spark
+    val s = StreamingQueries.streamSession(spark, StreamingQueries.RocksDbState)
     import s.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
     val ms = MemoryStream[(Long, String, Timestamp, Long)]
@@ -42,25 +43,16 @@ class StreamAsOfSpec extends SparkSpec {
         TimeMode.EventTime(), OutputMode.Append())
       .toDF("user_id", "view_id", "q_id")
     val name = s"asof_spec_${System.nanoTime()}"
-    val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", java.nio.file.Files
-          .createTempDirectory(operators.StreamingQueries.tmpBase, "graft-asof")
-          .toString)
-        .start()
-      batches.foreach { b =>
-        ms.addData(b.map { case (u, k, m, id) => (u, k, minTs(m), id) })
-        q.processAllAvailable()
-      }
-      q.stop()
-    } finally prev match {
-      case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    val q = out.writeStream.format("memory").queryName(name)
+      .outputMode("append")
+      .option("checkpointLocation", java.nio.file.Files
+        .createTempDirectory(StreamingQueries.tmpBase, "graft-asof").toString)
+      .start()
+    batches.foreach { b =>
+      ms.addData(b.map { case (u, k, m, id) => (u, k, minTs(m), id) })
+      q.processAllAvailable()
     }
+    q.stop()
     s.table(name).collect()
       .map(r => r.getLong(1) -> Option(r.get(2)).map(_.asInstanceOf[Long]))
       .toMap
@@ -106,7 +98,7 @@ class StreamAsOfSpec extends SparkSpec {
     * from the replay envelope — the invariant is run-equivalence, not the
     * payload's meaning. */
   private def asofRecoveryRun(crashAtBatch: Option[Long]): Set[(Long, Long, Long)] = {
-    val s = spark
+    val s = StreamingQueries.streamSession(spark, StreamingQueries.RocksDbState)
     import s.implicits._
     val log = graft.sources.replay.ReplayLog.ensureLog(s, sf)
     val typed = s.readStream.format("graft-replay")
@@ -126,28 +118,20 @@ class StreamAsOfSpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("asof-ckpt").toString
     val sink = java.nio.file.Files.createTempDirectory("asof-sink").toString
     val injected = new AtomicBoolean(false)
-    val prev = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      def start() = out.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          IdempotentSink.parquet(sink)(df, batchId)
-          if (crashAtBatch.contains(batchId) && injected.compareAndSet(false, true))
-            throw new RuntimeException("injected crash after write, before commit")
-        }
-        .start()
-      crashAtBatch match {
-        case Some(_) =>
-          intercept[StreamingQueryException] { start().awaitTermination() }
-          start().awaitTermination()
-        case None => start().awaitTermination()
+    def start() = out.writeStream.outputMode("append")
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (df: DataFrame, batchId: Long) =>
+        IdempotentSink.parquet(sink)(df, batchId)
+        if (crashAtBatch.contains(batchId) && injected.compareAndSet(false, true))
+          throw new RuntimeException("injected crash after write, before commit")
       }
-    } finally prev match {
-      case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-      case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      .start()
+    crashAtBatch match {
+      case Some(_) =>
+        intercept[StreamingQueryException] { start().awaitTermination() }
+        start().awaitTermination()
+      case None => start().awaitTermination()
     }
     IdempotentSink.read(s, sink).collect()
       .map(r => (r.getLong(0), r.getLong(1),

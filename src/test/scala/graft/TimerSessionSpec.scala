@@ -17,10 +17,10 @@ import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 class TimerSessionSpec extends SparkSpec {
 
   test("gap-close and timer-expiry emit across separate micro-batches") {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", "2")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val s: org.apache.spark.sql.SparkSession =
+      operators.StreamingQueries.streamSession(spark,
+        operators.StreamingQueries.RocksDbState +
+          ("spark.sql.shuffle.partitions" -> "2"))
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
 

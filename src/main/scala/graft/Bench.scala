@@ -67,31 +67,10 @@ object Bench {
         SparkEntry.registry.filter(q => names(q.name))
       case None => SparkEntry.registry
     }
-    // The shared near-dup pair table is materialized OUTSIDE the per-query
-    // timings as a named setup step: six registry queries reuse it, and
-    // charging its generation to whichever of them ran first made their
-    // numbers depend on registry order / run history (the round-10 verdict's
-    // 1.5–1.8× "pair-memo flag family"). It still runs once per rep (reset
-    // between reps), so its cost stays visible — as `setup_pair_memo`.
-    val setupName = "setup_pair_memo"
-    // q91's one-time bucketed-table writes, split out the same way (VERDICT
-    // r12 #7): the layout cost stays visible as its own line instead of
-    // inflating the exchange-free SMJ's number ~10x.
-    val bucketName = "setup_buckets"
-    // The shared ANN training artifacts (coarse codebook, inverted file, PQ
-    // codebooks/codes/queries — reused by x79/x03b/x03d/x03e/s66), split
-    // out the same way in round 18 (VERDICT r17 #1): trained once per rep,
-    // charged to a named setup line instead of whichever ANN lane runs
-    // first. ADDITIVE bench change only — no query removed or renamed.
-    val annName = "setup_ann_memo"
-    // The shared NB language-id prediction table (trained once, read by
-    // x04_langid2 and x78b_langid2_audit), split out the same way.
-    val langidName = "setup_langid_memo"
-    // The shared near-dup cluster assignment (connected components over the
-    // memoized pair table, read by x07/x32/x56/x64), split out the same way:
-    // a driver-side union-find up to GraftOps.ClusterEdgesPerPartition
-    // edges, the distributed min-label loop above that.
-    val ccName = "setup_cc_memo"
+    // The shared setup artifacts, one timed line each (see SharedArtifact);
+    // a BENCH_ONLY run is standalone: its lanes pay their own builds
+    val setupLines =
+      if (only.isEmpty) operators.SharedArtifact.setupLines else Seq.empty
     def timedSetup(name: String)(body: => Unit): (String, Double, Boolean) = {
       val t0 = System.nanoTime()
       val ok = try { body; true }
@@ -102,25 +81,12 @@ object Bench {
       (name, (System.nanoTime() - t0) / 1e9, ok)
     }
     val runs = (1 to reps).map { rep =>
-      // each rep pays every cost honestly: drop cross-query memo tables so a
-      // repeat pass re-computes pair generation instead of timing a cache hit
-      if (rep > 1) {
-        operators.PipelineQueries.resetMemo()
-        operators.RelationalQueries3.resetBucketMemo()
+      // each rep pays every cost honestly: a repeat pass rebuilds the shared
+      // artifacts instead of timing a cache hit
+      if (rep > 1) operators.PipelineQueries.resetMemo()
+      val setup = setupLines.map { case (name, arts) =>
+        timedSetup(name)(operators.SharedArtifact.warm(spark, sfDir, arts))
       }
-      val setup = if (only.isEmpty) Seq(
-        timedSetup(setupName)(
-          operators.PipelineQueries.warmPairMemo(spark, sfDir)),
-        timedSetup(bucketName)(
-          operators.RelationalQueries3.ensureBucketTables(spark, sfDir)),
-        timedSetup(annName)(
-          operators.PipelineQueries.warmAnnMemo(spark, sfDir)),
-        timedSetup(langidName)(
-          operators.PipelineQueries.warmLangidMemo(spark, sfDir)),
-        timedSetup(ccName)(
-          operators.PipelineQueries.warmCcMemo(spark, sfDir)))
-      else Seq.empty // BENCH_ONLY = standalone adjudication: the named
-                     // query pays its own memo, like a cold process would
       setup ++ registry.map { q =>
         val t0 = System.nanoTime()
         val ok =
@@ -142,10 +108,7 @@ object Bench {
     // in EVERY rep. Failed queries are OMITTED from the timing map (their
     // time-to-throw is not a throughput number) and listed separately.
     val byName = runs.flatten.groupBy(_._1)
-    val ordered =
-      (if (only.isEmpty)
-         Seq(setupName, bucketName, annName, langidName, ccName)
-       else Seq.empty) ++ registry.map(_.name)
+    val ordered = setupLines.map(_._1) ++ registry.map(_.name)
     val good = ordered.flatMap { n =>
       val oks = byName(n).collect { case (_, v, true) => v }
       if (oks.isEmpty) None else Some(n -> oks.min)
@@ -211,10 +174,9 @@ object Bench {
       if (only.isEmpty)
         s""","queries_complete":false,"full_map_file":"$fullMapFile","full_map_sha256_16":"$fullSha","full_map_n":${good.size}"""
       else s""","queries_complete":false,"spot_run_only":true"""
-    // n_queries counts REGISTRY queries only; the shared-setup lines
-    // (setup_pair_memo, setup_buckets) are timed and present in the map
-    // but are not queries (VERDICT r14 cosmetic note)
-    val setupNames = Set(setupName, bucketName, annName, langidName, ccName)
+    // n_queries counts REGISTRY queries only; the setup lines are timed
+    // and present in the map but are not queries (VERDICT r14 cosmetic note)
+    val setupNames = setupLines.map(_._1).toSet
     val nRegistry = good.count(g => !setupNames(g._1))
     println(
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":$nRegistry,"n_setup":${good.size - nRegistry},"failed":$fs,"sf":"$sfDir","queries":$qsTop$pointer}""")

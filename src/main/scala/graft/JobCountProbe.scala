@@ -7,7 +7,9 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 /** Optimization-round harness: run named registry queries (noop sink) with a
   * listener counting jobs / stages / tasks — a pure declarative query should
   * cost ~1 job plus broadcast builds, so a high job count is a recompute /
-  * eager-work signal worth reading the query body for. Evidence capture
+  * eager-work signal worth reading the query body for. Every lane starts
+  * with the shared setup artifacts reset, so it pays its own builds and its
+  * count does not depend on where it sits in the list. Evidence capture
   * only; not part of the driver contract. */
 object JobCountProbe {
   def main(args: Array[String]): Unit = {
@@ -34,6 +36,7 @@ object JobCountProbe {
     println("name\tsec\tjobs\tstages\ttasks")
     names.foreach { n =>
       val q = byName(n)
+      operators.PipelineQueries.resetMemo()
       spark.sparkContext.setJobDescription(s"probe: $n")
       Thread.sleep(50) // let listener drain
       val (j0, s0, t0) = (jobs.get, stages.get, tasks.get)

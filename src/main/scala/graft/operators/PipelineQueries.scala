@@ -19,32 +19,18 @@ import org.apache.spark.sql.SparkSession
   */
 object PipelineQueries {
 
-  /** Drop memoized pair/ANN tables (Bench calls this between registry reps
-    * so a repeat pass re-pays generation instead of timing a cache hit). */
-  private[graft] def resetMemo(): Unit = {
-    PipelineShared.resetMemo()
-    PipelineSimilarityQueries.resetAnnMemo()
+  /** Reset every [[SharedArtifact]]. */
+  private[graft] def resetMemo(): Unit = SharedArtifact.all.foreach(_.reset())
+
+  /** Build the shared pair table (`setup_pair_memo`). */
+  private[graft] def warmPairMemo(s: SparkSession, d: String): Unit = {
+    PipelineShared.scoredPairs025(s, d); ()
   }
 
-  /** Materialize the shared pair table eagerly as Bench's NAMED
-    * `setup_pair_memo` step (see PipelineShared for why). */
-  private[graft] def warmPairMemo(s: SparkSession, d: String): Unit =
-    PipelineShared.warmPairMemo(s, d)
-
-  /** Materialize the shared ANN training artifacts eagerly as Bench's NAMED
-    * `setup_ann_memo` step (see PipelineSimilarityQueries for why). */
-  private[graft] def warmAnnMemo(s: SparkSession, d: String): Unit =
-    PipelineSimilarityQueries.warmAnnMemo(s, d)
-
-  /** Materialize the shared NB language-id predictions eagerly as Bench's
-    * NAMED `setup_langid_memo` step (see PipelineShared for why). */
-  private[graft] def warmLangidMemo(s: SparkSession, d: String): Unit =
-    PipelineShared.warmLangidMemo(s, d)
-
-  /** Materialize the shared near-dup cluster assignment eagerly as Bench's
-    * NAMED `setup_cc_memo` step (see PipelineShared for why). */
-  private[graft] def warmCcMemo(s: SparkSession, d: String): Unit =
-    PipelineShared.warmCcMemo(s, d)
+  /** Build the shared cluster assignment (`setup_cc_memo`). */
+  private[graft] def warmCcMemo(s: SparkSession, d: String): Unit = {
+    PipelineShared.nearDupClusters(s, d); ()
+  }
 
   /** The registry, in family order. Query bodies live in the five family
     * files (round-11 split, VERDICT r10 #9); every name and oracle is

@@ -14,12 +14,10 @@ case class MMRecord(doc_id: Long, payload: Array[Byte], mime: String, n_bytes: L
 case class MMFeature(doc_id: Long, n_bytes: Long, n_chunks: Long,
     checksum: Long, head_hex: String)
 
-/** Helpers shared by the five pipeline query families — the memoized
-  * near-dup pair table (computed once per (session, dir) and reused by
-  * every consumer, exactly like a production pipeline persisting its
-  * candidate pairs), the DuckDB shingle/connected-components oracle CTEs,
-  * and the table loader. Split out of the former monolithic
-  * PipelineQueries in round 11 (VERDICT r10 #9).
+/** Helpers shared by the five pipeline query families — the near-dup
+  * pair, cluster and language-id artifacts, the DuckDB
+  * shingle/connected-components oracle CTEs, and the table loader. Split
+  * out of the former monolithic PipelineQueries in round 11 (VERDICT r10 #9).
   */
 private[graft] object PipelineShared {
 
@@ -115,97 +113,42 @@ private[graft] object PipelineShared {
     "'https://cdn.example.com:8080/asset/' || doc_id || '.png?v=3'",
     "'https://' || source || '.example.org/page/' || ((doc_id * 3 + 5) % 97) || '/'")
 
-  /** The exact-Jaccard pair set over `documents` at (k=5, j>=0.5), shared
-    * verbatim by x02_ngram_jaccard, x07_dedup_clusters and
-    * x07_dedup_clusters_star — memoized once per (session, dir) and
-    * lineage-truncated with an eager localCheckpoint, so the pair-generation
-    * join (~55% of each x07 variant's cost) runs once per process instead of
-    * three times. localCheckpoint blocks live outside the SQL relation cache,
-    * so the bench harness's per-query `catalog.clearCache()` does not evict
-    * them. At 100 TB this is the same move a production pipeline makes:
-    * compute the candidate pair table once, write it, feed every consumer. */
-  private val pairMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  /** Scored exact-Jaccard pairs at j >= 0.25 — the SUPERSET table the
-    * round-18 memo actually holds. jaccardNearDups' candidate stage is
-    * threshold-INDEPENDENT (inverted index + df cap; the threshold is only
-    * the final filter on the exact j), so memoizing at the lowest consumer
-    * threshold (x33's 0.25 sweep floor) lets x33 reuse the memo verbatim
-    * while every 0.5 consumer applies a provably-equal `j >= 0.5` filter —
-    * identical candidate set, identical exact j doubles, same rows as the
-    * threshold=0.5 call the memo held before. */
-  private[operators] def scoredPairs025(s: SparkSession, d: String): DataFrame =
-    pairMemo.computeIfAbsent((s, d), _ =>
+  /** Scored exact-Jaccard pairs over `documents` at (k=5, j >= 0.25), a
+    * [[SharedArtifact]]. It holds the SUPERSET table: jaccardNearDups'
+    * candidate stage is threshold-INDEPENDENT (inverted index + df cap; the
+    * threshold is only the final filter on the exact j), so x33's 0.25
+    * sweep floor reads it verbatim, while x02, both x07 variants and every
+    * other 0.5 consumer apply a provably-equal `j >= 0.5` filter
+    * ([[nearDupPairs]]): identical candidate set, identical exact j
+    * doubles. At 100 TB this is the same move a production pipeline makes:
+    * compute the candidate pair table once and feed every consumer. */
+  private[operators] val scoredPairs025 =
+    new SharedArtifact[DataFrame]("setup_pair_memo")((s, d) =>
       graft.GraftOps.jaccardNearDups(t(s, d, "documents"),
         col("doc_id"), col("text"), k = 5, threshold = 0.25)
         .localCheckpoint())
   private[operators] def nearDupPairs(s: SparkSession, d: String): DataFrame =
     scoredPairs025(s, d).filter(col("j") >= 0.5)
 
-  /** Memoized near-dup cluster assignment (round 18): x07_dedup_clusters,
-    * x32_cluster_keeper, x56_leakage_free_split and x64_release_funnel all
-    * ran the IDENTICAL `dedupClusters(nearDupPairs, doc_a, doc_b)` — a
-    * production pipeline computes the cluster assignment once and feeds
-    * every decision layer from it. dedupClusters solves the components on
-    * the driver (union-find over the collected edges) while the pair graph
-    * has at most `GraftOps.ClusterEdgesPerPartition` (1M) directed edges,
-    * and runs its distributed min-label loop above that. Same memo contract
-    * as the pair table (computed per (session, dir), eagerly checkpointed,
-    * reset between bench reps, warmed by the named setup_cc_memo step;
-    * standalone runs pay their own solve). x07_dedup_clusters_star is NOT
-    * rewired — its declared machinery is the star-contraction algorithm
-    * itself. */
-  private val ccMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private[operators] def nearDupClusters(s: SparkSession, d: String): DataFrame =
-    ccMemo.computeIfAbsent((s, d), _ =>
+  /** Near-dup cluster assignment over [[nearDupPairs]], a
+    * [[SharedArtifact]] read by x07_dedup_clusters, x32_cluster_keeper,
+    * x56_leakage_free_split and x64_release_funnel. dedupClusters solves the
+    * components on the driver (union-find over the collected edges) while
+    * the pair graph has at most `GraftOps.ClusterEdgesPerPartition` (1M)
+    * directed edges, and runs its distributed min-label loop above that.
+    * x07_dedup_clusters_star does not read it: its declared machinery is
+    * the star-contraction algorithm itself. */
+  private[operators] val nearDupClusters =
+    new SharedArtifact[DataFrame]("setup_cc_memo")((s, d) =>
       graft.GraftOps.dedupClusters(nearDupPairs(s, d),
         col("doc_a"), col("doc_b")).localCheckpoint())
 
-  private[graft] def warmCcMemo(s: SparkSession, d: String): Unit = {
-    nearDupClusters(s, d)
-    ()
-  }
-
-  /** Memoized trained-classifier predictions (round 18): x04_langid2 and
-    * x78b_langid2_audit each ran the FULL NB train+score ([[langid2]]) —
-    * the production separation is train once, read the prediction table
-    * everywhere. Same contract as the pair memo: computed once per
-    * (session, dir), eagerly checkpointed, reset between bench reps,
-    * warmed by the named setup_langid_memo step; standalone runs pay their
-    * own training via computeIfAbsent. The memoized lineage IS langid2's —
-    * results cannot differ. */
-  private val langidMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private[operators] def langid2Memo(s: SparkSession, d: String): DataFrame =
-    langidMemo.computeIfAbsent((s, d), _ => langid2(s, d).localCheckpoint())
-
-  private[graft] def warmLangidMemo(s: SparkSession, d: String): Unit = {
-    langid2Memo(s, d)
-    ()
-  }
-
-  /** Drop memoized pair tables (Bench calls this between registry reps so a
-    * repeat pass re-pays pair generation instead of timing a cache hit). */
-  private[graft] def resetMemo(): Unit = {
-    pairMemo.values.forEach(df => df.unpersist())
-    pairMemo.clear()
-    ccMemo.values.forEach(df => df.unpersist())
-    ccMemo.clear()
-    langidMemo.values.forEach(df => df.unpersist())
-    langidMemo.clear()
-  }
-
-  /** Materialize the shared pair table eagerly (localCheckpoint runs the
-    * job). Bench calls this as a NAMED setup step before the timed registry
-    * pass, so pair generation is charged to `setup_pair_memo` instead of to
-    * whichever of x02/x07/x07_star/x56/x60/x64 happens to run first — the
-    * round-10 verdict traced a 1.5–1.8× flag family to exactly that
-    * accounting ambiguity. */
-  private[graft] def warmPairMemo(s: SparkSession, d: String): Unit = {
-    scoredPairs025(s, d)
-    ()
-  }
+  /** Trained NB language-id predictions ([[langid2]]), a [[SharedArtifact]]
+    * read by x04_langid2 and x78b_langid2_audit: train once, read the
+    * prediction table everywhere. */
+  private[operators] val langid2Memo =
+    new SharedArtifact[DataFrame]("setup_langid_memo")((s, d) =>
+      langid2(s, d).localCheckpoint())
 
   /** DuckDB replay of the FULL BPE pipeline (train 32 merges in 6
     * unrolled frontier rounds, then re-segment every document) — the CTE

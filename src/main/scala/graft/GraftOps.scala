@@ -81,10 +81,11 @@ object GraftOps {
     * always recomputes exact Jaccard from the full shingle sets. */
   sealed trait DfCapPolicy
   object DfCapPolicy {
-    /** Default: cap = max(64, ceil(8·sqrt(ndocs))), derived IN-PLAN from a
-      * broadcast one-row count — no driver action. Any single shingle's
-      * self-join fanout is then ≤ cap² = 64·ndocs rows, i.e. linear in the
-      * corpus, which is the invariant that survives a 100 TB scan. */
+    /** Default: cap = max(64, ceil(8·sqrt(ndocs))), ndocs being the exact
+      * row count of the shingle table, taken from the action that
+      * materializes it. Any single shingle's self-join fanout is then
+      * ≤ cap² = 64·ndocs rows, i.e. linear in the corpus, which is the
+      * invariant that survives a 100 TB scan. */
     case object Auto extends DfCapPolicy
     /** Explicit opt-out: uncapped single-pass exact join-count formulation.
       * Only safe on corpora known to share no high-df boilerplate. */
@@ -116,6 +117,15 @@ object GraftOps {
   private def spreadSmall(df: DataFrame): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < par) df.repartition(par) else df
+  }
+
+  /** `n` driver-side rows cut into contiguous [lo, hi) ranges, at most one
+    * per default-parallelism slot, for a `parallelize` of primitive column
+    * slices (no Row per result crosses the wire). */
+  private def slices(s: org.apache.spark.sql.SparkSession, n: Int)
+      : Seq[(Int, Int)] = {
+    val k = math.max(1, math.min(n, s.sparkContext.defaultParallelism))
+    (0 until k).map(i => ((n.toLong * i / k).toInt, (n.toLong * (i + 1) / k).toInt))
   }
 
   // ---- text shingling ------------------------------------------------------
@@ -212,6 +222,21 @@ object GraftOps {
           .otherwise("keep").as("verdict"))
   }
 
+  /** Shingle entries (the sum of every row's shingle-set size), and rows,
+    * up to which [[jaccardNearDups]] collects the shingle sets and solves
+    * on the driver. At the limit the driver holds the collected shingle
+    * strings while it interns them to int codes, then two ints per entry
+    * and a few per row; SCALE.md's driver broadcast budget states the
+    * heap measured there. */
+  private[graft] val NearDupDriverEntries = 1000000L
+
+  /** Candidate rows the driver solve may generate: Σ p·(p−1)/2 over the
+    * posting lists of the capped index (p = non-null ids holding the
+    * shingle), counted before any pair is built. It bounds the driver's
+    * work and, since every result pair is a candidate, the result rows
+    * (three primitives each, ~24 MB at the limit). */
+  private[graft] val NearDupDriverPairs = 1000000L
+
   /** Exact shingle-Jaccard near-dup pairs ≥ threshold via an inverted-index
     * join: explode shingles, join on shingle, count common per pair. Exact
     * answers without an all-pairs cross product.
@@ -223,14 +248,102 @@ object GraftOps {
     * the EXACT Jaccard from the full shingle sets, so every reported `j` is
     * still exact — the cap can only lose pairs whose entire overlap is capped
     * boilerplate (which near-dup removal wants to ignore anyway). The
-    * DEFAULT is [[DfCapPolicy.Auto]] — a corpus-derived cap (8·sqrt(ndocs))
-    * computed in-plan, so the one-boilerplate-line-makes-d²-rows failure
-    * mode cannot happen by default; [[DfCapPolicy.Exact]] is the explicit
-    * opt-out for corpora known to be chrome-free. */
+    * DEFAULT is [[DfCapPolicy.Auto]] — a corpus-derived cap (8·sqrt(ndocs)),
+    * so the one-boilerplate-line-makes-d²-rows failure mode cannot happen by
+    * default; [[DfCapPolicy.Exact]] is the explicit opt-out for corpora
+    * known to be chrome-free.
+    *
+    * The shingle table is materialized first; the action that does it also
+    * counts its rows (Auto's ndocs) and its shingle entries. Two paths
+    * follow:
+    *  - at most [[NearDupDriverEntries]] entries and rows, int or long ids
+    *    that do not repeat, and a candidate fanout of at most
+    *    [[NearDupDriverPairs]]: collect the shingle sets and solve the
+    *    candidate index and the exact verification on the driver, with the
+    *    plan's df filter (df ≥ 2 and df ≤ cap, rows with a null id counted
+    *    in df but never paired) and the plan's `common / (na + nb − common)`
+    *    doubles. On the 500-doc dedup benchmark corpus the plan runs ~17
+    *    Spark jobs; this path runs 4 and gives identical rows.
+    *  - otherwise: the distributed plan. df comes from a window over the
+    *    exploded index; Exact counts common in one self-join, a capped
+    *    index generates candidates that are verified on the full sets. Its
+    *    intermediates are released once the result is checkpointed.
+    * Both return an eager local checkpoint of `doc_a`, `doc_b`, `j`, with
+    * the input id type and nullability. */
   def jaccardNearDups(df: DataFrame, id: Column, text: Column,
       k: Int = 5, threshold: Double = 0.5,
       maxDf: DfCapPolicy = DfCapPolicy.Auto): DataFrame = {
-    val sh = shingles(df, id, text, k)
+    val (sh, n, entries) = countedShingles(df, id, text, k)
+    val local =
+      if (n <= NearDupDriverEntries && entries <= NearDupDriverEntries)
+        localNearDups(sh, n, threshold, maxDf)
+      else None
+    local.getOrElse(indexJoinPairs(sh, n, threshold, maxDf))
+  }
+
+  /** [[jaccardNearDups]]' distributed plan, whatever the input size — the
+    * path large corpora take; specs call it on small ones. */
+  private[graft] def indexJoinNearDups(df: DataFrame, id: Column,
+      text: Column, k: Int = 5, threshold: Double = 0.5,
+      maxDf: DfCapPolicy = DfCapPolicy.Auto): DataFrame = {
+    val (sh, n, _) = countedShingles(df, id, text, k)
+    indexJoinPairs(sh, n, threshold, maxDf)
+  }
+
+  /** The [[shingles]] table as a local checkpoint, with its row count and
+    * its total shingle entries, both from the one action that stores it. */
+  private def countedShingles(df: DataFrame, id: Column, text: Column,
+      k: Int): (DataFrame, Long, Long) = {
+    // lazy: the counting job below computes and stores the blocks (a cached
+    // relation would cost one more job, AQE's cache stage)
+    val sh = shingles(df, id, text, k).localCheckpoint(eager = false)
+    // a null text has a null set: no entries (size() may read -1 or null)
+    val counts = sh.select(col("nsh")).queryExecution.toRdd
+      .mapPartitions { rows =>
+        var n, e = 0L
+        rows.foreach { r =>
+          n += 1
+          if (!r.isNullAt(0)) e += math.max(0L, r.getLong(0))
+        }
+        Iterator.single((n, e))
+      }.collect()
+    (sh, counts.map(_._1).sum, counts.map(_._2).sum)
+  }
+
+  /** The df upper bound `maxDf` puts on the candidate index of `n` rows. */
+  private def dfCap(maxDf: DfCapPolicy, n: Long): Long = maxDf match {
+    case DfCapPolicy.Exact => Long.MaxValue
+    case DfCapPolicy.Fixed(cap) => cap
+    case DfCapPolicy.Auto =>
+      math.max(64L, math.ceil(8.0 * math.sqrt(n.toDouble)).toLong)
+  }
+
+  /** The distributed plan over the checkpointed shingle table `sh` of `n`
+    * rows: the candidate index is materialized, the result checkpointed,
+    * then the index and `sh` are released. */
+  private def indexJoinPairs(sh: DataFrame, n: Long, threshold: Double,
+      maxDf: DfCapPolicy): DataFrame = {
+    val ex = materialize(candidateIndex(sh, n, maxDf))
+    val out = indexJoinPlan(sh, ex, threshold, maxDf).localCheckpoint()
+    ex.unpersist()
+    releaseCheckpoint(sh)
+    out
+  }
+
+  /** Free the local-checkpoint blocks under `df`, without blocking
+    * (`Dataset.unpersist` frees nothing for a local checkpoint). */
+  private[graft] def releaseCheckpoint(df: org.apache.spark.sql.Dataset[_]): Unit =
+    df.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
+
+  /** The inverted-index rows that may generate candidates, lazily: Exact
+    * keeps (id, nsh, sg) with df ≥ 2, a capped policy (id, sg) with
+    * 2 ≤ df ≤ cap. */
+  private def candidateIndex(sh: DataFrame, n: Long,
+      maxDf: DfCapPolicy): DataFrame = {
     // Exact document-frequency pruning: a shingle held by a single document
     // contributes no pair, so df>=2 filtering shrinks the self-join input
     // without changing any intersection count (na/nb stay the full sizes).
@@ -240,53 +353,168 @@ object GraftOps {
     // a hot shingle skews this window exactly as it would the join, which is
     // what the cap bounds).
     val withDf = sh.select(col("id"), col("nsh"), explode(col("sh")).as("sg"))
-      .withColumn("df", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("sg"))))
+      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("sg"))))
     maxDf match {
+      case DfCapPolicy.Exact => withDf.filter(col("df") >= 2).drop("df")
+      case policy =>
+        withDf.filter(col("df") >= 2 && col("df") <= dfCap(policy, n))
+          .select(col("id"), col("sg"))
+    }
+  }
+
+  /** The pairs ≥ threshold that the candidate index `ex` over `sh` yields,
+    * lazily. */
+  private def indexJoinPlan(sh: DataFrame, ex: DataFrame, threshold: Double,
+      maxDf: DfCapPolicy): DataFrame = {
+    val joined = ex.as("a").join(ex.as("b"),
+      col("a.sg") === col("b.sg") && col("a.id") < col("b.id"))
+    val scored = maxDf match {
       case DfCapPolicy.Exact =>
-        val ex = materialize(withDf.filter(col("df") >= 2).drop("df"))
-        ex.as("a").join(ex.as("b"),
-            col("a.sg") === col("b.sg") && col("a.id") < col("b.id"))
-          .groupBy(col("a.id").as("doc_a"), col("b.id").as("doc_b"),
+        joined.groupBy(col("a.id").as("doc_a"), col("b.id").as("doc_b"),
             col("a.nsh").as("na"), col("b.nsh").as("nb"))
           .agg(count(lit(1)).as("common"))
-          .withColumn("j",
-            col("common").cast("double") / (col("na") + col("nb") - col("common")))
-          .filter(col("j") >= threshold)
-          .select(col("doc_a"), col("doc_b"), col("j"))
-      case policy =>
+      case _ =>
         // capped index generates candidates; exact verify on the full sets
         // (counting common over a pruned index would UNDERcount j — the cap
         // must never change a reported similarity, only candidate recall)
-        val capped = policy match {
-          case DfCapPolicy.Fixed(cap) =>
-            withDf.filter(col("df") >= 2 && col("df") <= cap)
-          case _ =>
-            // Auto: join the 1-row corpus count (broadcast — the blessed
-            // constant-size cross) and cap at max(64, ceil(8·sqrt(ndocs)));
-            // any surviving shingle fans out ≤ 64·ndocs candidate rows
-            val nd = sh.agg(
-              greatest(lit(64L), ceil(lit(8.0) * sqrt(count(lit(1)))))
-                .cast("long").as("autocap"))
-            withDf.join(broadcast(nd))
-              .filter(col("df") >= 2 && col("df") <= col("autocap"))
-        }
-        val ex = materialize(capped.select(col("id"), col("sg")))
-        val shm = materialize(sh)
-        val cand = ex.as("a").join(ex.as("b"),
-            col("a.sg") === col("b.sg") && col("a.id") < col("b.id"))
-          .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"))
+        joined.select(col("a.id").as("doc_a"), col("b.id").as("doc_b"))
           .distinct()
-        cand
-          .join(shm.as("sa"), col("doc_a") === col("sa.id"))
-          .join(shm.as("sb"), col("doc_b") === col("sb.id"))
-          .withColumn("common",
-            size(array_intersect(col("sa.sh"), col("sb.sh"))).cast("long"))
-          .withColumn("j",
-            col("common").cast("double") / (col("sa.nsh") + col("sb.nsh") - col("common")))
-          .filter(col("j") >= threshold)
-          .select(col("doc_a"), col("doc_b"), col("j"))
+          .join(sh.as("sa"), col("doc_a") === col("sa.id"))
+          .join(sh.as("sb"), col("doc_b") === col("sb.id"))
+          .select(col("doc_a"), col("doc_b"), col("sa.nsh").as("na"),
+            col("sb.nsh").as("nb"),
+            size(array_intersect(col("sa.sh"), col("sb.sh"))).cast("long")
+              .as("common"))
     }
+    scored
+      .withColumn("j",
+        col("common").cast("double") / (col("na") + col("nb") - col("common")))
+      .filter(col("j") >= threshold)
+      .select(col("doc_a"), col("doc_b"), col("j"))
+  }
+
+  /** [[jaccardNearDups]] solved on the driver over the collected shingle
+    * sets of the checkpointed `sh` (`n` rows): a checkpointed frame with
+    * the plan's schema, and `sh` released. None, with `sh` kept for the
+    * plan, when the ids are neither int nor long or an id repeats, or
+    * the candidate fanout passes [[NearDupDriverPairs]]. */
+  private def localNearDups(sh: DataFrame, n: Long, threshold: Double,
+      maxDf: DfCapPolicy): Option[DataFrame] = {
+    val toId: Long => Any = sh.schema("id").dataType match {
+      case LongType => (x: Long) => x
+      case IntegerType => (x: Long) => x.toInt
+      case _ => return None
+    }
+    // per partition: the ids with a null flag, each row's set size and the
+    // shingles of all its rows, flat (internal rows: no Row per document)
+    val parts = sh.select(col("id").cast("long"), col("sh"))
+      .queryExecution.toRdd.mapPartitions { rows =>
+        val ids = new scala.collection.mutable.ArrayBuilder.ofLong
+        val nulls = new scala.collection.mutable.ArrayBuilder.ofBoolean
+        val sizes = new scala.collection.mutable.ArrayBuilder.ofInt
+        val sgs = new scala.collection.mutable.ArrayBuilder.ofRef[String]
+        rows.foreach { r =>
+          nulls += r.isNullAt(0)
+          ids += (if (r.isNullAt(0)) 0L else r.getLong(0))
+          val a = if (r.isNullAt(1)) null else r.getArray(1)
+          val m = if (a == null) 0 else a.numElements()
+          sizes += m
+          for (x <- 0 until m) sgs += a.getUTF8String(x).toString
+        }
+        Iterator.single((ids.result(), nulls.result(), sizes.result(),
+          sgs.result()))
+      }.collect()
+    val ids = Array.concat(parts.map(_._1).toSeq: _*)
+    val nulls = Array.concat(parts.map(_._2).toSeq: _*)
+    val sizes = Array.concat(parts.map(_._3).toSeq: _*)
+    val start = sizes.scanLeft(0)(_ + _)
+    // intern the shingles to int codes; df(c) counts the rows holding c,
+    // null-id rows too, as the plan's window does
+    val codes = new Array[Int](start.last)
+    val codeOf = new java.util.HashMap[String, Integer]()
+    var e = 0
+    for (p <- parts; s <- p._4) {
+      val c = codeOf.putIfAbsent(s, codeOf.size)
+      codes(e) = if (c == null) codeOf.size - 1 else c.intValue
+      e += 1
+    }
+    val nCodes = codeOf.size
+    codeOf.clear()
+    val df = new Array[Int](nCodes)
+    codes.foreach(c => df(c) += 1)
+    val cap = dfCap(maxDf, n)
+    def isCand(c: Int): Boolean = df(c) >= 2 && df(c) <= cap
+
+    // rank r = the r-th non-null id in id order; a repeated id takes the plan
+    val order = ids.indices.filterNot(nulls(_)).sortBy(ids(_)).toArray
+    if ((1 until order.length).exists(r => ids(order(r)) == ids(order(r - 1))))
+      return None
+    // posting lists of the candidate codes, ranks ascending
+    val pstart = new Array[Int](nCodes + 1)
+    for (i <- order; x <- start(i) until start(i + 1) if isCand(codes(x)))
+      pstart(codes(x) + 1) += 1
+    for (c <- 0 until nCodes) pstart(c + 1) += pstart(c)
+    val fill = java.util.Arrays.copyOf(pstart, nCodes)
+    val post = new Array[Int](pstart(nCodes))
+    for (r <- order.indices; x <- start(order(r)) until start(order(r) + 1)
+        if isCand(codes(x))) {
+      post(fill(codes(x))) = r; fill(codes(x)) += 1
+    }
+    val fanout = (0 until nCodes).iterator.map { c =>
+      val p = (pstart(c + 1) - pstart(c)).toLong; p * (p - 1) / 2 }.sum
+    if (fanout > NearDupDriverPairs) return None
+
+    // each candidate pair once (seen(r2) == r), verified on the full sets
+    for (i <- sizes.indices) java.util.Arrays.sort(codes, start(i), start(i + 1))
+    def common(i: Int, i2: Int): Long = {
+      var x = start(i)
+      var y = start(i2)
+      var hits = 0L
+      while (x < start(i + 1) && y < start(i2 + 1)) {
+        if (codes(x) < codes(y)) x += 1
+        else if (codes(x) > codes(y)) y += 1
+        else { hits += 1; x += 1; y += 1 }
+      }
+      hits
+    }
+    val seen = Array.fill(order.length)(-1)
+    val (outA, outB) = (new scala.collection.mutable.ArrayBuilder.ofLong,
+      new scala.collection.mutable.ArrayBuilder.ofLong)
+    val outJ = new scala.collection.mutable.ArrayBuilder.ofDouble
+    for (r <- order.indices) {
+      val i = order(r)
+      for (x <- start(i) until start(i + 1) if isCand(codes(x))) {
+        val c = codes(x)
+        var q = pstart(c + 1) - 1
+        while (q >= pstart(c) && post(q) > r) {
+          val r2 = post(q)
+          if (seen(r2) != r) {
+            seen(r2) = r
+            val i2 = order(r2)
+            val cm = common(i, i2)
+            val j = cm.toDouble / (sizes(i).toLong + sizes(i2).toLong - cm)
+            if (j >= threshold) { outA += ids(i); outB += ids(i2); outJ += j }
+          }
+          q -= 1
+        }
+      }
+    }
+
+    val (as, bs, js) = (outA.result(), outB.result(), outJ.result())
+    val s = sh.sparkSession
+    val chunks = slices(s, as.length).map { case (lo, hi) =>
+      (java.util.Arrays.copyOfRange(as, lo, hi),
+        java.util.Arrays.copyOfRange(bs, lo, hi),
+        java.util.Arrays.copyOfRange(js, lo, hi))
+    }
+    val rows = s.sparkContext.parallelize(chunks, chunks.size).flatMap {
+      case (a, b, j) => a.indices.iterator.map(x => Row(toId(a(x)), toId(b(x)), j(x)))
+    }
+    val schema =
+      indexJoinPlan(sh, candidateIndex(sh, n, maxDf), threshold, maxDf).schema
+    val out = s.createDataFrame(rows, schema).localCheckpoint()
+    releaseCheckpoint(sh)
+    Some(out)
   }
 
   /** MinHash + LSH banding near-dup candidates, verified with exact Jaccard
@@ -672,14 +900,11 @@ object GraftOps {
     val labels = Array.tabulate(nIds)(k => ids(find(k)))
 
     val s = edges.sparkSession
-    val slices = math.max(1, math.min(nIds, s.sparkContext.defaultParallelism))
-    val chunks = (0 until slices).map { k =>
-      val (lo, hi) = ((nIds.toLong * k / slices).toInt,
-        (nIds.toLong * (k + 1) / slices).toInt)
+    val chunks = slices(s, nIds).map { case (lo, hi) =>
       (java.util.Arrays.copyOfRange(ids, lo, hi),
         java.util.Arrays.copyOfRange(labels, lo, hi))
     }
-    val rows = s.sparkContext.parallelize(chunks, slices).flatMap {
+    val rows = s.sparkContext.parallelize(chunks, chunks.size).flatMap {
       case (is, ls) => is.indices.iterator.map(j => Row(toId(is(j)), toId(ls(j))))
     }
     edges.unpersist()

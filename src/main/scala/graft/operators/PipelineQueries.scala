@@ -12,10 +12,16 @@ import org.apache.spark.sql.SparkSession
   * composition — hash-partitioned groupBys, inverted-index joins instead of
   * all-pairs cross products, band-bucket joins for LSH, broadcast for the
   * small query side of ANN. Driver-side collects happen only under a stated
-  * size bound. Near-dup clustering is one: `GraftOps.dedupClusters`
-  * collects the pair graph and runs a union-find on the driver while it has
-  * at most `GraftOps.ClusterEdgesPerPartition` (1M) directed edges (~16 MB
-  * of ids), and runs a distributed min-label loop above that.
+  * size bound. Two of them feed the shared dedup memos:
+  *  - `GraftOps.jaccardNearDups` (the pair memo) collects the shingle sets
+  *    and solves the candidate index and exact verification on the driver
+  *    while they have at most `GraftOps.NearDupDriverEntries` (1M) entries
+  *    and a candidate fanout of at most `GraftOps.NearDupDriverPairs` (1M),
+  *    and runs its distributed inverted-index join above that;
+  *  - `GraftOps.dedupClusters` (the cluster memo) collects the pair graph
+  *    and runs a union-find on the driver while it has at most
+  *    `GraftOps.ClusterEdgesPerPartition` (1M) directed edges (~16 MB of
+  *    ids), and runs a distributed min-label loop above that.
   */
 object PipelineQueries {
 

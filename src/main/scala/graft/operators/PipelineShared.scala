@@ -121,12 +121,16 @@ private[graft] object PipelineShared {
     * other 0.5 consumer apply a provably-equal `j >= 0.5` filter
     * ([[nearDupPairs]]): identical candidate set, identical exact j
     * doubles. At 100 TB this is the same move a production pipeline makes:
-    * compute the candidate pair table once and feed every consumer. */
+    * compute the candidate pair table once and feed every consumer.
+    * jaccardNearDups solves the pairs on the driver while the shingle sets
+    * have at most `GraftOps.NearDupDriverEntries` (1M) entries (and the
+    * candidate fanout at most `NearDupDriverPairs`), and runs its
+    * distributed inverted-index plan above that; either way it returns the
+    * eager local checkpoint this artifact stores. */
   private[operators] val scoredPairs025 =
     new SharedArtifact[DataFrame]("setup_pair_memo")((s, d) =>
       graft.GraftOps.jaccardNearDups(t(s, d, "documents"),
-        col("doc_id"), col("text"), k = 5, threshold = 0.25)
-        .localCheckpoint())
+        col("doc_id"), col("text"), k = 5, threshold = 0.25))
   private[operators] def nearDupPairs(s: SparkSession, d: String): DataFrame =
     scoredPairs025(s, d).filter(col("j") >= 0.5)
 

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
@@ -52,7 +51,7 @@ private[graft] final class SharedArtifact[A](val setupName: String)(
 
   def reset(): Unit = cells.keySet.forEach { k =>
     Option(cells.remove(k)).flatMap(_.value)
-      .foreach(a => SharedArtifact.frames(a).foreach(SharedArtifact.release))
+      .foreach(a => SharedArtifact.frames(a).foreach(graft.GraftOps.releaseCheckpoint))
   }
 }
 
@@ -93,10 +92,4 @@ private[graft] object SharedArtifact {
     case p: Product => p.productIterator.flatMap(frames).toSeq
     case _ => Nil
   }
-
-  private def release(df: Dataset[_]): Unit =
-    df.queryExecution.logical.foreach {
-      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
-      case _ =>
-    }
 }

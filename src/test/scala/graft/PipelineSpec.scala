@@ -258,12 +258,22 @@ class PipelineSpec extends SparkSpec {
       val cap = math.round(meanDf * 10)
       assert(cap < ndocs + 1, s"cap $cap does not prune boilerplate (df=${ndocs + 1})")
 
-      val exact = graft.GraftOps.jaccardNearDups(corpus, col("doc_id"), col("text"),
-          maxDf = graft.GraftOps.DfCapPolicy.Exact)
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-      val capped = graft.GraftOps.jaccardNearDups(corpus, col("doc_id"), col("text"),
-          maxDf = graft.GraftOps.DfCapPolicy.Fixed(cap))
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      // each policy through both paths: the driver solve that
+      // jaccardNearDups takes on this small corpus, and the distributed
+      // plan behind the indexJoinNearDups seam — equal rows, equal schemas
+      def pairs(policy: graft.GraftOps.DfCapPolicy): Map[(Long, Long), Double] = {
+        val local = graft.GraftOps.jaccardNearDups(corpus, col("doc_id"),
+          col("text"), maxDf = policy)
+        val plan = graft.GraftOps.indexJoinNearDups(corpus, col("doc_id"),
+          col("text"), maxDf = policy)
+        assert(local.schema === plan.schema, s"seed $seedNo $policy: schemas differ")
+        val rows = local.collect().toSeq
+        assert(rows.sortBy(_.toString) === plan.collect().toSeq.sortBy(_.toString),
+          s"seed $seedNo $policy: driver solve and plan differ")
+        rows.map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      }
+      val exact = pairs(graft.GraftOps.DfCapPolicy.Exact)
+      val capped = pairs(graft.GraftOps.DfCapPolicy.Fixed(cap))
       assert(capped.contains((0L, ndocs.toLong)),
         s"seed $seedNo: planted pair lost under df cap $cap")
       capped.foreach { case (pair, j) =>
@@ -281,8 +291,7 @@ class PipelineSpec extends SparkSpec {
       val autoCap = math.max(64L, math.ceil(8.0 * math.sqrt(ndocs + 1)).toLong)
       assert(autoCap < ndocs + 1,
         s"test corpus must put boilerplate df above the auto cap ($autoCap)")
-      val auto = graft.GraftOps.jaccardNearDups(corpus, col("doc_id"), col("text"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+      val auto = pairs(graft.GraftOps.DfCapPolicy.Auto)
       assert(auto === exact, s"seed $seedNo: default Auto path differs from exact")
     }
   }

@@ -228,7 +228,8 @@ ORDER BY a_id NULLS FIRST, b_id NULLS FIRST""")),
           .orderBy(col("score"), col("n_id"))
         cand.withColumn("salt", col("n_id") % 32)
           .withColumn("r1", row_number().over(w1)).filter(col("r1") <= 3)
-          .withColumn("rank", row_number().over(w2)).filter(col("rank") <= 3)
+          .withColumn("rank", row_number().over(w2).cast("long"))
+          .filter(col("rank") <= 3)
           .select(col("q_id"), col("rank"), col("n_id"),
             col("cell").cast("long").as("cell"),
             col("score").cast("decimal(18,6)").cast("double").as("score"))

@@ -1,18 +1,17 @@
 package graft.sources.replay
 
-import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream}
-
-import KafkaWire._
+import KafkaWire.{In, Out}
 
 /** The classic consumer-group membership state machine behind JoinGroup /
   * SyncGroup / Heartbeat / LeaveGroup (apis 11/14/12/13) — the
   * subscription-based rebalance surface librdkafka exposes through
   * `subscribe()` and the one seam of the reference's client the broker
   * double did not yet mirror (VERDICT r11 missing-2; the reference itself
-  * uses manual `assign`, `src/kafka/execution.rs:79`). Since round 14 each
-  * API speaks BOTH dialects (VERDICT r13 #1): the pre-flexible v0 and the
-  * flexible KIP-482 frame (JoinGroup v6 / SyncGroup v4 / Heartbeat v4 /
-  * LeaveGroup v4) — the state machine is shared; only the framing differs.
+  * uses manual `assign`, `src/kafka/execution.rs:79`). Each handler is one
+  * body for BOTH dialects: the pre-flexible v0 and the flexible KIP-482
+  * frame (JoinGroup v6 / SyncGroup v4 / Heartbeat v4 / LeaveGroup v4),
+  * framed by the [[KafkaWire]] codec; its version checks are the
+  * protocol's field-presence checks.
   *
   * JoinGroup v4+ additionally runs the MEMBER_ID_REQUIRED handshake
   * (KIP-394): an empty member id is answered with error 79 plus a
@@ -142,47 +141,32 @@ private[replay] final class GroupCoordinator {
     }
   }
 
-  // ---- version-dependent framing helpers ------------------------------------
-  private def rdStr(r: DataInputStream, flex: Boolean): String =
-    if (flex) readCompactString(r) else readString(r)
-  private def wrStr(o: DataOutputStream, flex: Boolean, s: String): Unit =
-    if (flex) writeCompactString(o, s) else writeString(o, s)
-
   /** JoinGroup (v0 or the flexible v6): parks the calling handler thread
     * until the join window closes, then answers (generation, protocol,
     * leader, memberId, and — for the leader only — every member's
     * subscription metadata). v4+ answers MEMBER_ID_REQUIRED (79) to an
     * empty member id first. */
-  def joinGroup(r: DataInputStream, version: Short): Array[Byte] = {
-    val flex = version >= 6
-    val groupId = rdStr(r, flex)
+  def joinGroup(r: In, o: Out): Unit = {
+    val version = r.version
+    val groupId = r.str()
     val sessionTimeout = r.readInt()
     if (version >= 1) r.readInt()       // rebalance_timeout_ms
-    var memberId = rdStr(r, flex)
-    val instanceId = if (flex) readCompactString(r) else null // KIP-345
-    val protocolType = rdStr(r, flex)
-    val nProtocols = if (flex) readCompactArrayLen(r) else r.readInt()
-    val protocols = (1 to nProtocols).map { _ =>
-      val name = rdStr(r, flex)
-      val md =
-        if (flex) {
-          val b = readCompactBytes(r); skipTagged(r)
-          if (b == null) Array.emptyByteArray else b
-        } else {
-          val len = r.readInt()
-          val b = new Array[Byte](math.max(len, 0)); r.readFully(b); b
-        }
+    var memberId = r.str()
+    val instanceId = if (version >= 5) r.str() else null // KIP-345
+    val protocolType = r.str()
+    val protocols = r.array {
+      val name = r.str()
+      val md = Option(r.bytes()).getOrElse(Array.emptyByteArray)
+      r.tags()
       (name, md)
     }
-    if (flex) skipTagged(r)
-    val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-    def errResp(code: Int, member: String): Array[Byte] = {
-      if (flex) o.writeInt(0)           // throttle_time_ms
+    r.tags()
+    def errResp(code: Int, member: String): Unit = {
+      if (version >= 2) o.writeInt(0)   // throttle_time_ms
       o.writeShort(code); o.writeInt(-1)
-      wrStr(o, flex, ""); wrStr(o, flex, ""); wrStr(o, flex, member)
-      if (flex) { writeCompactArrayLen(o, 0); writeEmptyTagged(o) }
-      else o.writeInt(0)
-      bo.toByteArray
+      o.str(""); o.str(""); o.str(member)
+      o.arrayLen(0)
+      o.tags()
     }
     if (protocolType != "consumer" || protocols.isEmpty ||
         !protocols.exists(p => GroupCoordinator.SupportedProtocols.contains(p._1)))
@@ -192,13 +176,13 @@ private[replay] final class GroupCoordinator {
       reapExpired(g)
       // success response at the CURRENT group state (shared by the normal
       // post-window path and the KIP-345 rejoin-without-rebalance path)
-      def okResp(member: String): Array[Byte] = {
-        if (flex) o.writeInt(0)         // throttle_time_ms
+      def okResp(member: String): Unit = {
+        if (version >= 2) o.writeInt(0) // throttle_time_ms
         o.writeShort(0)
         o.writeInt(g.generation)
-        wrStr(o, flex, g.protocolName)
-        wrStr(o, flex, g.leader)
-        wrStr(o, flex, member)
+        o.str(g.protocolName)
+        o.str(g.leader)
+        o.str(member)
         val listed: Seq[(String, Array[Byte])] =
           if (member == g.leader)
             g.members.toSeq.map { case (m, (ps, _)) =>
@@ -206,23 +190,14 @@ private[replay] final class GroupCoordinator {
                 .getOrElse(Array.emptyByteArray))
             }
           else Nil
-        if (flex) {
-          writeCompactArrayLen(o, listed.size)
-          listed.foreach { case (m, md) =>
-            writeCompactString(o, m)
-            writeCompactString(o,
-              g.staticIds.find(_._2 == m).map(_._1).orNull)
-            writeCompactBytes(o, md)
-            writeEmptyTagged(o)
-          }
-          writeEmptyTagged(o)
-        } else {
-          o.writeInt(listed.size)
-          listed.foreach { case (m, md) =>
-            writeString(o, m); o.writeInt(md.length); o.write(md)
-          }
+        o.array(listed) { case (m, md) =>
+          o.str(m)
+          if (version >= 5)             // group_instance_id
+            o.str(g.staticIds.find(_._2 == m).map(_._1).orNull)
+          o.bytes(md)
+          o.tags()
         }
-        bo.toByteArray
+        o.tags()
       }
       val static = instanceId != null && instanceId.nonEmpty
       var staticFresh = false           // instance id registered this call
@@ -332,39 +307,26 @@ private[replay] final class GroupCoordinator {
   /** SyncGroup (v0 or the flexible v4): the leader delivers every member's
     * assignment; follower calls park until it lands (or the wait lapses
     * into 27 so the client rejoins). */
-  def syncGroup(r: DataInputStream, version: Short): Array[Byte] = {
-    val flex = version >= 4
-    val groupId = rdStr(r, flex)
+  def syncGroup(r: In, o: Out): Unit = {
+    val version = r.version
+    val groupId = r.str()
     val generation = r.readInt()
-    val memberId = rdStr(r, flex)
-    val instanceId = if (flex) readCompactString(r) else null // KIP-345
-    val nAssign = if (flex) readCompactArrayLen(r) else r.readInt()
-    val assigns = (1 to nAssign).map { _ =>
-      val m = rdStr(r, flex)
-      val a =
-        if (flex) {
-          val b = readCompactBytes(r); skipTagged(r)
-          if (b == null) Array.emptyByteArray else b
-        } else {
-          val len = r.readInt()
-          val b = new Array[Byte](math.max(len, 0)); r.readFully(b); b
-        }
+    val memberId = r.str()
+    val instanceId = if (version >= 3) r.str() else null // KIP-345
+    val assigns = r.array {
+      val m = r.str()
+      val a = Option(r.bytes()).getOrElse(Array.emptyByteArray)
+      r.tags()
       m -> a
     }.toMap
-    if (flex) skipTagged(r)
-    val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-    def resp(code: Int, a: Array[Byte]): Array[Byte] = {
-      if (flex) {
-        o.writeInt(0)                   // throttle_time_ms
-        o.writeShort(code)
-        writeCompactBytes(o, a)
-        writeEmptyTagged(o)
-      } else {
-        o.writeShort(code); o.writeInt(a.length); o.write(a)
-      }
-      bo.toByteArray
+    r.tags()
+    def resp(code: Int, a: Array[Byte]): Unit = {
+      if (version >= 1) o.writeInt(0)   // throttle_time_ms
+      o.writeShort(code)
+      o.bytes(a)
+      o.tags()
     }
-    def err(code: Int): Array[Byte] = resp(code, Array.emptyByteArray)
+    def err(code: Int): Unit = resp(code, Array.emptyByteArray)
     val g = group(groupId)
     g.synchronized {
       reapExpired(g)
@@ -399,14 +361,12 @@ private[replay] final class GroupCoordinator {
   /** Heartbeat (v0 or the flexible v4): 0 while Stable at the right
     * generation; 27 during a rebalance (the rejoin signal); 25/22 for
     * ghosts. */
-  def heartbeat(r: DataInputStream, version: Short): Array[Byte] = {
-    val flex = version >= 4
-    val groupId = rdStr(r, flex)
+  def heartbeat(r: In, o: Out): Unit = {
+    val groupId = r.str()
     val generation = r.readInt()
-    val memberId = rdStr(r, flex)
-    val instanceId =
-      if (flex) { val i = readCompactString(r); skipTagged(r); i } else null
-    val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
+    val memberId = r.str()
+    val instanceId = if (r.version >= 3) r.str() else null // KIP-345
+    r.tags()
     val g = group(groupId)
     g.synchronized {
       reapExpired(g)
@@ -419,31 +379,25 @@ private[replay] final class GroupCoordinator {
           g.lastSeen(memberId) = System.currentTimeMillis()
           if (g.state == "Stable") 0 else 27
         }
-      if (flex) o.writeInt(0)           // throttle_time_ms
+      if (o.version >= 1) o.writeInt(0) // throttle_time_ms
       o.writeShort(code)
-      if (flex) writeEmptyTagged(o)
+      o.tags()
     }
-    bo.toByteArray
   }
 
   /** LeaveGroup (v0 or the flexible v4, whose request batches members):
     * removes each member and opens a rebalance for the rest. */
-  def leaveGroup(r: DataInputStream, version: Short): Array[Byte] = {
-    val flex = version >= 4
-    val groupId = rdStr(r, flex)
+  def leaveGroup(r: In, o: Out): Unit = {
+    val version = r.version
+    val groupId = r.str()
     val leaving: Seq[(String, String)] =
-      if (flex) {
-        val n = readCompactArrayLen(r)
-        val ms = (1 to n).map { _ =>
-          val m = readCompactString(r)
-          val inst = readCompactString(r) // group_instance_id (KIP-345)
-          skipTagged(r)
-          (m, inst)
-        }
-        skipTagged(r)
-        ms
-      } else Seq((readString(r), null))
-    val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
+      if (version >= 3) r.array {
+        val m = r.str()
+        val inst = r.str()              // group_instance_id (KIP-345)
+        r.tags()
+        (m, inst)
+      } else Seq((r.str(), null))
+    r.tags()
     val g = group(groupId)
     g.synchronized {
       val codes = leaving.map { case (requested, inst) =>
@@ -470,20 +424,18 @@ private[replay] final class GroupCoordinator {
           memberId -> 0
         }
       }
-      if (flex) {
-        o.writeInt(0)                   // throttle_time_ms
+      if (version >= 1) o.writeInt(0)   // throttle_time_ms
+      if (version >= 3) {
         o.writeShort(0)                 // top-level: per-member codes below
-        writeCompactArrayLen(o, codes.size)
-        codes.zip(leaving).foreach { case ((m, c), (_, inst)) =>
-          writeCompactString(o, m)
-          writeCompactString(o, inst)   // echo the request's instance id
+        o.array(codes.zip(leaving)) { case ((m, c), (_, inst)) =>
+          o.str(m)
+          o.str(inst)                   // echo the request's instance id
           o.writeShort(c)
-          writeEmptyTagged(o)
+          o.tags()
         }
-        writeEmptyTagged(o)
       } else o.writeShort(codes.head._2)
+      o.tags()
     }
-    bo.toByteArray
   }
 
   /** OffsetCommit generation fencing: -1/"" is the simple (non-member)

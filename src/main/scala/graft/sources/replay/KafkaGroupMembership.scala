@@ -1,15 +1,15 @@
 package graft.sources.replay
 
-import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream, IOException}
+import java.io.IOException
 
 import KafkaWire._
 
 /** Client half of the classic consumer-group membership protocol —
   * JoinGroup (api 11) / SyncGroup (api 14) / Heartbeat (api 12) /
-  * LeaveGroup (api 13) — speaking BOTH dialects since round 14 (VERDICT
-  * r13 #1): the pre-flexible v0 pins, and the flexible (KIP-482) versions
-  * (JoinGroup v6, SyncGroup v4, Heartbeat v4, LeaveGroup v4) negotiated
-  * per broker like the rest of the client. This is librdkafka's
+  * LeaveGroup (api 13) — one body per API for BOTH dialects: the
+  * pre-flexible v0 pins, and the flexible (KIP-482) versions (JoinGroup
+  * v6, SyncGroup v4, Heartbeat v4, LeaveGroup v4) negotiated per broker
+  * like the rest of the client. This is librdkafka's
   * `subscribe()` seam (the reference inherits it but uses manual `assign`,
   * `src/kafka/execution.rs:79`): members of a group get DISJOINT partition
   * assignments computed by an elected leader, and a failed heartbeat is
@@ -91,53 +91,43 @@ final class KafkaGroupMembership(client: KafkaLogClient, group: String,
   def needsRejoin: Boolean = lastRevokedV.nonEmpty
 
   private def subscriptionMetadata: Array[Byte] = {
-    val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-    if (!cooperative) {
-      o.writeShort(0)           // consumer protocol version
-      o.writeInt(1); writeString(o, topic)
-      o.writeInt(0)             // user_data: empty
-    } else {
+    val o = classicOut()
+    o.writeShort(if (cooperative) 1 else 0) // consumer protocol version
+    o.arrayLen(1); o.str(topic)
+    o.bytes(Array.emptyByteArray) // user_data: empty
+    if (cooperative) {
       // ConsumerProtocol v1: + owned_partitions ARRAY[(topic, [int32])]
-      o.writeShort(1)
-      o.writeInt(1); writeString(o, topic)
-      o.writeInt(0)             // user_data: empty
       val mine = ownedV
-      if (mine.isEmpty) o.writeInt(0)
+      if (mine.isEmpty) o.arrayLen(0)
       else {
-        o.writeInt(1); writeString(o, topic)
-        o.writeInt(mine.size); mine.foreach(o.writeInt)
+        o.arrayLen(1); o.str(topic)
+        o.array(mine)(o.writeInt)
       }
     }
-    bo.toByteArray
+    o.toByteArray
   }
 
   /** owned partitions of `topic` out of one member's subscription
     * metadata (v0 carries none). */
   private def parseOwned(md: Array[Byte]): Seq[Int] = {
     if (md == null || md.isEmpty) return Seq.empty
-    val in = new DataInputStream(new java.io.ByteArrayInputStream(md))
+    val in = classicIn(md)
     val version = in.readShort()
-    val nTopics = in.readInt()
-    (1 to nTopics).foreach(_ => readString(in))
-    val udLen = in.readInt()
-    if (udLen > 0) in.skipBytes(udLen)
+    in.array(in.str())          // topics
+    in.bytes()                  // user_data
     if (version < 1 || in.available() <= 0) return Seq.empty
-    val nOwned = in.readInt()
     var mine = Seq.empty[Int]
-    (1 to nOwned).foreach { _ =>
-      val t = readString(in)
-      val nP = in.readInt()
-      val ps = (1 to nP).map(_ => in.readInt())
+    in.array {
+      val t = in.str()
+      val ps = in.array(in.readInt())
       if (t == topic) mine = ps
     }
     mine
   }
 
-  /** One negotiated one-shot to the coordinator; returns (version, resp). */
-  private def call(name: String, api: Short, pinned: Short, flex: Short)
-      (body: Short => Array[Byte]): (Short, DataInputStream) =
-    client.oneShotVersioned(client.coordinator(group), name, api,
-      pinned, flex)(body)
+  /** One negotiated one-shot to the coordinator. */
+  private def call(api: Short)(body: Out => Unit): In =
+    client.oneShot(client.coordinator(group), api)(body)
 
   /** One full join+sync dance; returns this member's assigned partitions.
     * Retries the named transient outcomes (REBALANCE_IN_PROGRESS while the
@@ -151,49 +141,33 @@ final class KafkaGroupMembership(client: KafkaLogClient, group: String,
       if (attempts > 10)
         throw new IOException(s"kafka group '$group': join did not settle " +
           s"after $attempts attempts")
-      val (jv, jr) = call("JoinGroup", ApiJoinGroup, 0, 6) { v =>
-        // the instance id only rides the FLEXIBLE body this client writes
-        // (v6); guarding at the field's protocol floor (v5) would pass a
-        // version whose body builder silently drops the field
-        if (static && v < 6)
+      val jr = call(ApiJoinGroup) { o =>
+        if (static && o.version < 5)
           throw new IOException(s"kafka group '$group': static membership " +
-            s"(group.instance.id) needs the flexible JoinGroup dialect " +
-            s"(v6 in this client); negotiation picked v$v")
-        val jb = new ByteArrayOutputStream(); val jo = new DataOutputStream(jb)
-        val md = subscriptionMetadata
-        if (v >= 6) {
-          writeCompactString(jo, group)
-          jo.writeInt(sessionTimeoutMs)
-          jo.writeInt(sessionTimeoutMs) // rebalance_timeout_ms
-          writeCompactString(jo, memberIdV)
-          writeCompactString(jo, instanceIdOrNull) // KIP-345 (null = dynamic)
-          writeCompactString(jo, "consumer")
-          writeCompactArrayLen(jo, 1)
-          writeCompactString(jo, strategy)
-          writeCompactBytes(jo, md)
-          writeEmptyTagged(jo)
-          writeEmptyTagged(jo)
-        } else {
-          writeString(jo, group)
-          jo.writeInt(sessionTimeoutMs)
-          writeString(jo, memberIdV)
-          writeString(jo, "consumer")
-          jo.writeInt(1); writeString(jo, strategy)
-          jo.writeInt(md.length); jo.write(md)
-        }
-        jb.toByteArray
+            s"(group.instance.id) needs JoinGroup v5+ (v6 in this client); " +
+            s"negotiation picked v${o.version}")
+        o.str(group)
+        o.writeInt(sessionTimeoutMs)
+        if (o.version >= 1) o.writeInt(sessionTimeoutMs) // rebalance_timeout_ms
+        o.str(memberIdV)
+        if (o.version >= 5) o.str(instanceIdOrNull) // KIP-345 (null = dynamic)
+        o.str("consumer")
+        o.arrayLen(1)
+        o.str(strategy)
+        o.bytes(subscriptionMetadata)
+        o.tags()
+        o.tags()
       }
-      if (jv >= 6) jr.readInt() // throttle_time_ms
+      val jv = jr.version
+      if (jv >= 2) jr.readInt() // throttle_time_ms
       val jerr = jr.readShort()
       if (jerr == 25) { memberIdV = "" } // evicted: rejoin blank
       else if (jerr == 27) { Thread.sleep(50) }
       else if (jerr == 79 && jv >= 4) {
         // MEMBER_ID_REQUIRED: the broker assigned an id; rejoin with it
         jr.readInt()            // generation (-1)
-        if (jv >= 6) { readCompactString(jr); readCompactString(jr) }
-        else { readString(jr); readString(jr) } // protocol, leader
-        memberIdV =
-          if (jv >= 6) readCompactString(jr) else readString(jr)
+        jr.str(); jr.str()      // protocol, leader
+        memberIdV = jr.str()
         if (memberIdV == null || memberIdV.isEmpty)
           throw new IOException(s"kafka JoinGroup answered " +
             s"MEMBER_ID_REQUIRED without a member id for group '$group'")
@@ -207,24 +181,15 @@ final class KafkaGroupMembership(client: KafkaLogClient, group: String,
         throw new IOException(s"kafka JoinGroup error $jerr for group '$group'")
       else {
         val gen = jr.readInt()
-        if (jv >= 6) readCompactString(jr) else readString(jr) // protocol
-        val leaderId = if (jv >= 6) readCompactString(jr) else readString(jr)
-        val myId = if (jv >= 6) readCompactString(jr) else readString(jr)
-        val nMembers =
-          if (jv >= 6) readCompactArrayLen(jr) else jr.readInt()
-        val memberMeta = (1 to nMembers).map { _ =>
-          if (jv >= 6) {
-            val m = readCompactString(jr)
-            readCompactString(jr)       // group_instance_id
-            val b = readCompactBytes(jr)
-            skipTagged(jr)
-            (m, if (b == null) Array.emptyByteArray else b)
-          } else {
-            val m = readString(jr)
-            val len = jr.readInt()
-            val b = new Array[Byte](math.max(len, 0)); jr.readFully(b)
-            (m, b)
-          }
+        jr.str()                // protocol
+        val leaderId = jr.str()
+        val myId = jr.str()
+        val memberMeta = jr.array {
+          val m = jr.str()
+          if (jv >= 5) jr.str() // group_instance_id
+          val b = jr.bytes()
+          jr.tags()
+          (m, if (b == null) Array.emptyByteArray else b)
         }
         memberIdV = myId; generationV = gen; leaderV = leaderId == myId
         // leader computes the assignment over the topic's partitions:
@@ -281,41 +246,26 @@ final class KafkaGroupMembership(client: KafkaLogClient, group: String,
             }
           }
         def assignmentBytes(ps: Seq[Int]): Array[Byte] = {
-          val ab = new ByteArrayOutputStream(); val ao = new DataOutputStream(ab)
+          val ao = classicOut()
           ao.writeShort(0)      // assignment version
-          ao.writeInt(1); writeString(ao, topic)
-          ao.writeInt(ps.size); ps.foreach(ao.writeInt)
-          ao.writeInt(0)        // user_data: empty
-          ab.toByteArray
+          ao.arrayLen(1); ao.str(topic)
+          ao.array(ps)(ao.writeInt)
+          ao.bytes(Array.emptyByteArray) // user_data: empty
+          ao.toByteArray
         }
-        val (sv, sr) = call("SyncGroup", ApiSyncGroup, 0, 4) { v =>
-          val sb = new ByteArrayOutputStream(); val so = new DataOutputStream(sb)
-          if (v >= 4) {
-            writeCompactString(so, group)
-            so.writeInt(gen)
-            writeCompactString(so, myId)
-            writeCompactString(so, instanceIdOrNull) // KIP-345
-            writeCompactArrayLen(so, assignments.size)
-            assignments.foreach { case (m, ps) =>
-              writeCompactString(so, m)
-              writeCompactBytes(so, assignmentBytes(ps))
-              writeEmptyTagged(so)
-            }
-            writeEmptyTagged(so)
-          } else {
-            writeString(so, group)
-            so.writeInt(gen)
-            writeString(so, myId)
-            so.writeInt(assignments.size)
-            assignments.foreach { case (m, ps) =>
-              writeString(so, m)
-              val ab = assignmentBytes(ps)
-              so.writeInt(ab.length); so.write(ab)
-            }
+        val sr = call(ApiSyncGroup) { o =>
+          o.str(group)
+          o.writeInt(gen)
+          o.str(myId)
+          if (o.version >= 3) o.str(instanceIdOrNull) // KIP-345
+          o.array(assignments) { case (m, ps) =>
+            o.str(m)
+            o.bytes(assignmentBytes(ps))
+            o.tags()
           }
-          sb.toByteArray
+          o.tags()
         }
-        if (sv >= 4) sr.readInt() // throttle_time_ms
+        if (sr.version >= 1) sr.readInt() // throttle_time_ms
         val serr = sr.readShort()
         if (serr == 27 || serr == 22) { Thread.sleep(50) } // window re-opened
         else if (serr == 25) { memberIdV = "" }
@@ -327,13 +277,7 @@ final class KafkaGroupMembership(client: KafkaLogClient, group: String,
         else if (serr != 0)
           throw new IOException(s"kafka SyncGroup error $serr for group '$group'")
         else {
-          val assigned =
-            if (sv >= 4) readCompactBytes(sr)
-            else {
-              val alen = sr.readInt()
-              if (alen <= 0) null
-              else { val b = new Array[Byte](alen); sr.readFully(b); b }
-            }
+          val assigned = sr.bytes()
           if (assigned == null || assigned.isEmpty) {
             // a member subscribed past capacity — or, cooperative, a
             // generation in which everything it owned was revoked
@@ -341,15 +285,12 @@ final class KafkaGroupMembership(client: KafkaLogClient, group: String,
             ownedV = Seq.empty
             return Seq.empty
           }
-          val ar = new DataInputStream(
-            new java.io.ByteArrayInputStream(assigned))
+          val ar = classicIn(assigned)
           ar.readShort()        // assignment version
-          val nTopics = ar.readInt()
           var mine = Seq.empty[Int]
-          (1 to nTopics).foreach { _ =>
-            val t = readString(ar)
-            val nP = ar.readInt()
-            val ps = (1 to nP).map(_ => ar.readInt())
+          ar.array {
+            val t = ar.str()
+            val ps = ar.array(ar.readInt())
             if (t == topic) mine = ps
           }
           val settled = mine.sorted
@@ -368,22 +309,14 @@ final class KafkaGroupMembership(client: KafkaLogClient, group: String,
     * outcomes (evicted member, stale generation) also answer false after
     * resetting state so the rejoin starts blank. */
   def heartbeat(): Boolean = {
-    val (hv, r) = call("Heartbeat", ApiHeartbeat, 0, 4) { v =>
-      val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-      if (v >= 4) {
-        writeCompactString(o, group)
-        o.writeInt(generationV)
-        writeCompactString(o, memberIdV)
-        writeCompactString(o, instanceIdOrNull) // KIP-345
-        writeEmptyTagged(o)
-      } else {
-        writeString(o, group)
-        o.writeInt(generationV)
-        writeString(o, memberIdV)
-      }
-      bo.toByteArray
+    val r = call(ApiHeartbeat) { o =>
+      o.str(group)
+      o.writeInt(generationV)
+      o.str(memberIdV)
+      if (o.version >= 3) o.str(instanceIdOrNull) // KIP-345
+      o.tags()
     }
-    if (hv >= 4) r.readInt()    // throttle_time_ms
+    if (r.version >= 1) r.readInt() // throttle_time_ms
     r.readShort() match {
       case 0 => true
       case 27 => false
@@ -401,32 +334,25 @@ final class KafkaGroupMembership(client: KafkaLogClient, group: String,
   /** Clean exit: the coordinator rebalances the remainder immediately. */
   def leave(): Unit = {
     if (memberIdV.isEmpty) return
-    val (lv, r) = call("LeaveGroup", ApiLeaveGroup, 0, 4) { v =>
-      val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-      if (v >= 4) {
-        writeCompactString(o, group)
-        writeCompactArrayLen(o, 1) // members (batched since v3)
-        writeCompactString(o, memberIdV)
-        writeCompactString(o, instanceIdOrNull) // KIP-345
-        writeEmptyTagged(o)
-        writeEmptyTagged(o)
-      } else {
-        writeString(o, group)
-        writeString(o, memberIdV)
-      }
-      bo.toByteArray
+    val r = call(ApiLeaveGroup) { o =>
+      o.str(group)
+      if (o.version >= 3) {     // members, batched since v3
+        o.arrayLen(1)
+        o.str(memberIdV)
+        o.str(instanceIdOrNull) // KIP-345
+        o.tags()
+      } else o.str(memberIdV)
+      o.tags()
     }
-    if (lv >= 4) r.readInt()    // throttle_time_ms
+    if (r.version >= 1) r.readInt() // throttle_time_ms
     val e = r.readShort()
-    if (lv >= 4 && e == 0) {
-      val n = readCompactArrayLen(r)
-      (1 to n).foreach { _ =>
-        readCompactString(r); readCompactString(r)
-        val me = r.readShort(); skipTagged(r)
-        if (me != 0 && me != 25)
-          throw new IOException(
-            s"kafka LeaveGroup member error $me for group '$group'")
-      }
+    if (r.version >= 3 && e == 0) r.array {
+      r.str(); r.str()          // member_id, group_instance_id
+      val me = r.readShort()
+      r.tags()
+      if (me != 0 && me != 25)
+        throw new IOException(
+          s"kafka LeaveGroup member error $me for group '$group'")
     }
     if (e != 0 && e != 25)
       throw new IOException(s"kafka LeaveGroup error $e for group '$group'")

@@ -13,36 +13,38 @@ import org.apache.spark.internal.Logging
   * directly against the public Kafka protocol so the engine needs no broker
   * library on the classpath.
   *
-  * Protocol subset — TWO dialects since round 13 (VERDICT r12 #3): the
-  * non-flexible pre-tagged-field versions below (stable since Kafka 0.11,
-  * accepted by every broker that still serves them), plus the FLEXIBLE
-  * (KIP-482 compact) frames for ApiVersions v3 / Metadata v9 /
-  * ListOffsets v6 / Fetch v12 — the ENTIRE hot read path — and Produce v9
-  * on the write half, negotiated per broker in the ApiVersions preflight
-  * (highest mutually spoken wins, old pins as the fallback) — so a
-  * KRaft-era broker that retired the pre-flexible versions is served, not
-  * refused, ≡ the version negotiation librdkafka does transparently for
-  * the reference (Cargo.toml:8):
-  *   - Metadata v0 or v9 (api 3): partition ids + per-partition leader +
+  * Protocol subset — TWO dialects, negotiated per broker in the
+  * ApiVersions preflight (highest mutually spoken wins): the classic
+  * pre-tagged-field versions below (accepted by every broker that still
+  * serves them) and the FLEXIBLE (KIP-482) ones, so a KRaft-era broker
+  * that retired the pre-flexible versions is served, not refused, ≡ the
+  * version negotiation librdkafka does transparently for the reference
+  * (Cargo.toml:8). Each API body is written ONCE for both dialects
+  * against the [[KafkaWire]] codec; [[KafkaWire.Classic]] and
+  * [[KafkaWire.FlexibleSince]] name the two versions of each API:
+  *   - Metadata v0/v9 (api 3): partition ids + per-partition leader +
   *     broker address book. Re-requested every trigger via
   *     [[listPartitions]], so mid-stream partition growth is observed like
   *     the file client's re-listing.
-  *   - ListOffsets v2 or v6 (api 2): timestamp −2 → earliest, −1 → log-end. The
+  *   - ListOffsets v2/v6 (api 2): timestamp −2 → earliest, −1 → log-end. The
   *     planner's `[earliest, endOffset)` range IS the reference's
   *     `enable.partition.eof` bounded batch: each micro-batch plan reads to
   *     the frozen high watermark and stops. v2 carries the isolation level,
   *     so a read_committed consumer's "latest" is the LAST STABLE OFFSET —
   *     planned ranges never include records of a still-open transaction.
-  *   - ApiVersions v0 (+v3 flexible when served; api 18):
-  *     first-connection preflight — negotiates Metadata/Fetch versions,
-  *     verifies the broker still serves every remaining pinned version and
-  *     fails with a named error instead of a raw wire parse error if not
-  *     (tolerated as absent on pre-0.10 brokers).
-  *   - Fetch v4 or v12 (api 1): RecordBatch v2 (magic 2) decode, with all four
+  *   - ApiVersions v0 (+v3 when served; api 18): first-connection
+  *     preflight — negotiates every API's version, verifies the broker
+  *     serves the SASL pins, and fails with a named error instead of a raw
+  *     wire parse error if not (an error answer to ApiVersions itself is a
+  *     named error too).
+  *   - Fetch v4/v12 (api 1): RecordBatch v2 (magic 2) decode, with all four
   *     standard codecs (gzip/snappy/lz4/zstd — the records section is the
   *     compressed unit in v2, in the framing the official clients write);
   *     unknown codec ids or pre-v2 batches fail loudly — this client favors
   *     a diagnosable error over a silent wrong decode.
+  *   - Produce v3/v9 on the write half, and the coordinator, group,
+  *     transaction and admin APIs at their v0-era pins and flexible
+  *     versions.
   *
   * `path` is `bootstrap-host:port/topic`. Planning calls are one-shot
   * connections to the bootstrap broker; each [[openFrames]] cursor holds one
@@ -174,9 +176,7 @@ final class KafkaLogClient(path: String,
 
   private def authenticate(in: DataInputStream, out: DataOutputStream): Unit = {
     // SaslHandshake v1: negotiate the mechanism
-    val hb = new ByteArrayOutputStream(); val ho = new DataOutputStream(hb)
-    writeString(ho, saslMechanism)
-    val hr = request(in, out, ApiSaslHandshake, 1, hb.toByteArray)
+    val hr = call(in, out, ApiSaslHandshake, 1)(_.str(saslMechanism))
     val herr = hr.readShort()
     if (herr != 0)
       throw new IOException(
@@ -263,22 +263,14 @@ final class KafkaLogClient(path: String,
     * re-auth clock. */
   private def saslRound(in: DataInputStream, out: DataOutputStream,
       token: Array[Byte]): (Array[Byte], Long) = {
-    val v: Short = brokerRanges.flatMap(_.get(ApiSaslAuthenticate)) match {
-      case Some((lo, hi)) if lo <= 1 && 1 <= hi => 1
-      case _ => 0
-    }
-    val ab = new ByteArrayOutputStream(); val ao = new DataOutputStream(ab)
-    ab.reset(); ao.writeInt(token.length); ao.write(token)
-    val ar = request(in, out, ApiSaslAuthenticate, v, ab.toByteArray)
+    val v: Short = if (serves(ApiSaslAuthenticate, 1)) 1 else 0
+    val ar = call(in, out, ApiSaslAuthenticate, v)(_.bytes(token))
     val aerr = ar.readShort()
-    val msg = readString(ar)
+    val msg = ar.str()
     if (aerr != 0)
       throw new IOException("kafka SASL authentication failed (error " +
         s"$aerr${Option(msg).filter(_.nonEmpty).map(": " + _).getOrElse("")})")
-    val n = ar.readInt()
-    val bytes =
-      if (n <= 0) Array.emptyByteArray
-      else { val b = new Array[Byte](n); ar.readFully(b); b }
+    val bytes = Option(ar.bytes()).getOrElse(Array.emptyByteArray)
     val lifetimeMs = if (v >= 1) ar.readLong() else 0L
     (bytes, lifetimeMs)
   }
@@ -381,132 +373,84 @@ final class KafkaLogClient(path: String,
   /** The (name, api key, pinned version) dialect this client speaks with
     * NO flexible twin — only the SASL handshake pair, which must be
     * verified at preflight time because authentication happens before any
-    * other API can run. Everything else (hot path AND the coordinator /
-    * group / transaction / admin tail since round 14, VERDICT r13 #1)
-    * negotiates between its old non-flexible version and the flexible
-    * (KIP-482) one: the hot path eagerly in [[preflight]], the rest lazily
-    * at first use via [[pickVersion]] — so a configuration that never
-    * touches an API never fails on its ranges, and one that does gets a
-    * NAMED version error instead of a raw wire parse failure. */
+    * other API can run. Everything else negotiates between its classic
+    * version and the flexible (KIP-482) one ([[KafkaWire.Classic]],
+    * [[KafkaWire.FlexibleSince]]) via [[pickVersion]]. */
   private def pinnedApis: Seq[(String, Short, Short)] =
     if (useSasl) Seq[(String, Short, Short)](
       ("SaslHandshake", ApiSaslHandshake, 1),
       ("SaslAuthenticate", ApiSaslAuthenticate, 0)) else Nil
 
   @volatile private var preflighted = false
-  // negotiated per-API versions (preflight outcome). Defaults = the old
-  // pinned dialect, which is also what a pre-0.10 broker (no ApiVersions)
-  // gets — identical to rounds 1-12 behavior.
-  @volatile private var metadataVersion: Short = 0
-  @volatile private var fetchVersion: Short = 4
-  @volatile private var listOffsetsVersion: Short = 2
-  /** The broker's advertised version ranges (preflight outcome); None both
-    * before the preflight and for a pre-0.10 broker that errors the
-    * ApiVersions request itself — in either case the old pins apply. */
-  @volatile private var brokerRanges: Option[Map[Short, (Short, Short)]] = None
+  /** The broker's advertised version ranges (the preflight's outcome). */
+  @volatile private var brokerRanges = Map.empty[Short, (Short, Short)]
 
-  /** Highest mutually-spoken version for an API negotiated LAZILY at first
-    * use (every call site runs after [[open]] has preflighted): the
-    * flexible (KIP-482) version when the broker serves it, the old
-    * non-flexible pin when it does not, a NAMED error when it serves
-    * neither — and the old pin against a pre-0.10 broker with no
-    * ApiVersions at all (the pins are the oldest versions such a broker
-    * speaks anyway). This is the same negotiation [[preflight]] runs
-    * eagerly for the hot path, applied to the APIs only some
-    * configurations touch (group commit-back, membership, transactions,
-    * admin) — and to Produce, which formerly negotiated only when
-    * `graft.role=producer` was set (ADVICE r13: a produce() without that
-    * conf silently kept the v3 pin with no range check). */
-  private def pickVersion(name: String, k: Short, pinned: Short,
-      flex: Short): Short = brokerRanges match {
-    case None => pinned
-    case Some(ranges) =>
-      def serves(v: Short): Boolean =
-        ranges.get(k).exists { case (lo, hi) => v >= lo && v <= hi }
-      if (serves(flex)) flex
-      else if (serves(pinned)) pinned
-      else ranges.get(k) match {
-        case Some((lo, hi)) => throw new IOException(
-          s"kafka broker serves $name [$lo, $hi]; this client speaks " +
-            s"v$pinned (non-flexible) and v$flex (flexible) only")
-        case None => throw new IOException(
-          s"kafka broker does not expose api $k ($name)")
-      }
+  private def serves(k: Short, v: Short): Boolean =
+    brokerRanges.get(k).exists { case (lo, hi) => v >= lo && v <= hi }
+
+  /** Highest mutually-spoken version of an API: the flexible (KIP-482)
+    * version when the broker serves it, the classic pin when it does not,
+    * a NAMED error when it serves neither. Every call site runs after
+    * [[open]] has preflighted; the read path's three APIs are also picked
+    * eagerly in [[preflight]], the rest at first use — so a configuration
+    * that never touches an API (group commit-back, membership,
+    * transactions, admin) never fails on its ranges, and one that does
+    * gets a named version error instead of a raw wire parse failure. */
+  private def pickVersion(k: Short): Short = {
+    val (name, pinned) = Classic(k)
+    val flex = FlexibleSince(k)
+    if (serves(k, flex)) flex
+    else if (serves(k, pinned)) pinned
+    else brokerRanges.get(k) match {
+      case Some((lo, hi)) => throw new IOException(
+        s"kafka broker serves $name [$lo, $hi]; this client speaks " +
+          s"v$pinned (non-flexible) and v$flex (flexible) only")
+      case None => throw new IOException(
+        s"kafka broker does not expose api $k ($name)")
+    }
   }
 
   /** ApiVersions preflight on the first connection — sent before SASL,
     * exactly where real clients send it (brokers serve it pre-auth so
-    * clients can negotiate handshake versions). Round 13 (VERDICT r12 #3):
-    * the preflight now NEGOTIATES Metadata and Fetch between the
-    * non-flexible pins (v0/v4) and the flexible KIP-482 frames (v9/v12) —
-    * preferring the highest version both sides speak, like every real
-    * client — so a KRaft-era broker that retired the pre-flexible versions
-    * is SERVED, not refused. When the broker serves ApiVersions v3, the
-    * preflight also round-trips the flexible v3 form on the same
-    * connection (≡ KIP-511's upgrade; v0 is still sent first because a
-    * pre-0.10 broker closes the connection on versions it never knew,
-    * while every later broker answers v0 fine — one extra preflight RTT
-    * per process buys a downgrade path with no parse ambiguity). Remaining
-    * APIs stay pinned; a broker that dropped one fails with a named error
-    * instead of a raw wire parse error. A broker that errors the request
-    * itself (pre-0.10 vintage) skips the check — the pins are the oldest
-    * versions such a broker speaks anyway. */
+    * clients can negotiate handshake versions). v0 goes first: a broker
+    * older than 0.10 closes the connection on it and every later one
+    * answers it, so an error answer is a named failure, not a guess. When
+    * the broker serves ApiVersions v3, the preflight also round-trips the
+    * flexible v3 form on the same connection (≡ KIP-511's upgrade) and
+    * requires the same ranges. Metadata, Fetch and ListOffsets then
+    * negotiate eagerly — preferring the highest version both sides speak,
+    * like every real client — so a KRaft-era broker that retired the
+    * pre-flexible versions is SERVED, and a broker serving neither dialect
+    * of the read path fails here with a named error. */
   private def preflight(in: DataInputStream, out: DataOutputStream): Unit = {
-    val r = request(in, out, ApiApiVersions, 0, Array.emptyByteArray)
-    val err = r.readShort()
-    if (err != 0) { preflighted = true; return }
-    val n = r.readInt()
-    val ranges = (1 to n).map { _ =>
-      r.readShort() -> ((r.readShort(), r.readShort()))
-    }.toMap
-    def serves(k: Short, v: Short): Boolean =
-      ranges.get(k).exists { case (lo, hi) => v >= lo && v <= hi }
-    // flexible ApiVersions v3 round-trip when offered: proves the compact
-    // header/body path against this very broker and mirrors what a modern
-    // client's first frame looks like
-    if (serves(ApiApiVersions, 3)) {
-      val body = new ByteArrayOutputStream(); val o = new DataOutputStream(body)
-      writeCompactString(o, "graft")      // client_software_name
-      writeCompactString(o, "0.1")        // client_software_version
-      writeEmptyTagged(o)
-      val r3 = requestFlex(in, out, ApiApiVersions, 3, body.toByteArray)
-      val err3 = r3.readShort()
-      if (err3 != 0)
-        throw new IOException("kafka ApiVersions v3 failed with error " +
-          s"$err3 after the broker advertised [${ranges(ApiApiVersions)._1}," +
-          s" ${ranges(ApiApiVersions)._2}] for api 18")
-      val n3 = readCompactArrayLen(r3)
-      val ranges3 = (1 to n3).map { _ =>
-        val k = r3.readShort(); val lo = r3.readShort(); val hi = r3.readShort()
-        skipTagged(r3)
+    def ranges(r: In): Map[Short, (Short, Short)] = {
+      val err = r.readShort()
+      if (err != 0)
+        throw new IOException(s"kafka ApiVersions v${r.version} failed with " +
+          s"error $err — this client needs a broker that answers " +
+          "ApiVersions (Kafka 0.10+)")
+      r.array {
+        val k = r.readShort(); val lo = r.readShort(); val hi = r.readShort()
+        r.tags()
         k -> ((lo, hi))
       }.toMap
-      if (ranges3 != ranges)
+    }
+    brokerRanges = ranges(call(in, out, ApiApiVersions, 0)(_ => ()))
+    if (serves(ApiApiVersions, 3)) {
+      val ranges3 = ranges(call(in, out, ApiApiVersions, 3) { o =>
+        o.str("graft")          // client_software_name
+        o.str("0.1")            // client_software_version
+        o.tags()
+      })
+      if (ranges3 != brokerRanges)
         throw new IOException("kafka ApiVersions v0 and v3 advertise " +
           "different ranges — refusing to negotiate against an " +
-          s"inconsistent broker (v0: $ranges, v3: $ranges3)")
+          s"inconsistent broker (v0: $brokerRanges, v3: $ranges3)")
     }
-    // Metadata/Fetch: highest mutually-spoken version, old pins as fallback
-    def negotiate(name: String, k: Short, pinned: Short, flex: Short): Short =
-      if (serves(k, flex)) flex
-      else if (serves(k, pinned)) pinned
-      else ranges.get(k) match {
-        case Some((lo, hi)) => throw new IOException(
-          s"kafka broker serves $name [$lo, $hi]; this client speaks " +
-            s"v$pinned (non-flexible) and v$flex (flexible) only")
-        case None => throw new IOException(
-          s"kafka broker does not expose api $k ($name)")
-      }
-    metadataVersion = negotiate("Metadata", ApiMetadata, 0, 9)
-    fetchVersion = negotiate("Fetch", ApiFetch, 4, 12)
-    listOffsetsVersion = negotiate("ListOffsets", ApiListOffsets, 2, 6)
-    // everything else negotiates lazily at first use from these ranges
-    brokerRanges = Some(ranges)
-    val bad = pinnedApis.flatMap { case (name, k, v) =>
-      ranges.get(k) match {
-        case Some((lo, hi)) if v >= lo && v <= hi => None
-        case Some((lo, hi)) => Some(s"$name v$v (broker serves [$lo, $hi])")
-        case None => Some(s"$name v$v (broker does not expose api $k)")
+    Seq(ApiMetadata, ApiFetch, ApiListOffsets).foreach(pickVersion)
+    val bad = pinnedApis.collect { case (name, k, v) if !serves(k, v) =>
+      brokerRanges.get(k).fold(s"$name v$v (broker does not expose api $k)") {
+        case (lo, hi) => s"$name v$v (broker serves [$lo, $hi])"
       }
     }
     if (bad.nonEmpty)
@@ -516,38 +460,25 @@ final class KafkaLogClient(path: String,
     preflighted = true
   }
 
-  /** one configured connection, one request/response (planning-side). */
-  private[replay] def oneShot(addr: String, apiKey: Short, apiVersion: Short,
-      body: Array[Byte]): DataInputStream = {
+  /** One request/response on an open connection, `body` written for
+    * `version` in its dialect. */
+  private def call(in: DataInputStream, out: DataOutputStream, apiKey: Short,
+      version: Short)(body: Out => Unit): In = {
+    val o = new Out(version, isFlexible(apiKey, version))
+    body(o)
+    request(in, out, apiKey, version, o.toByteArray)
+  }
+
+  /** One configured connection, one request/response (planning side) at
+    * the negotiated version. The connection opens FIRST (forcing the
+    * preflight on a fresh client) and only then is the version picked and
+    * the body written for it — a body written before negotiation would be
+    * framed as the wrong version. */
+  private[replay] def oneShot(addr: String, apiKey: Short)
+      (body: Out => Unit): In = {
     val (s, in, out) = open(addr)
-    try request(in, out, apiKey, apiVersion, body)
+    try call(in, out, apiKey, pickVersion(apiKey))(body)
     finally s.close() // response fully buffered by request()
-  }
-
-  /** [[oneShot]] over the flexible (header v2) framing. */
-  private[replay] def oneShotFlex(addr: String, apiKey: Short,
-      apiVersion: Short, body: Array[Byte]): DataInputStream = {
-    val (s, in, out) = open(addr)
-    try requestFlex(in, out, apiKey, apiVersion, body)
-    finally s.close()
-  }
-
-  /** One-shot with LAZY version negotiation: opens the connection first
-    * (forcing the preflight on a fresh client), THEN picks the version and
-    * builds the version-dependent body — the ordering the round-13 v9
-    * misframe taught (a body built before negotiation gets framed as the
-    * just-negotiated version). Returns (negotiated version, response). */
-  private[replay] def oneShotVersioned(addr: String, name: String,
-      apiKey: Short, pinned: Short, flex: Short)
-      (body: Short => Array[Byte]): (Short, DataInputStream) = {
-    val (s, in, out) = open(addr)
-    try {
-      val v = pickVersion(name, apiKey, pinned, flex)
-      val b = body(v)
-      val r = if (isFlexible(apiKey, v)) requestFlex(in, out, apiKey, v, b)
-        else request(in, out, apiKey, v, b)
-      (v, r)
-    } finally s.close()
   }
 
   // ---- admin ---------------------------------------------------------------
@@ -561,59 +492,36 @@ final class KafkaLogClient(path: String,
     * create would surface later as an UNKNOWN_TOPIC produce error, far
     * from the cause. */
   def createTopics(topics: Seq[(String, Int)], timeoutMs: Int = 30000): Unit = {
-    val (v, in) = oneShotVersioned(bootstrap, "CreateTopics",
-      ApiCreateTopics, 0, 5) { v =>
-      val body = new ByteArrayOutputStream()
-      val o = new DataOutputStream(body)
-      if (v >= 5) {
-        writeCompactArrayLen(o, topics.size)
-        topics.foreach { case (name, partitions) =>
-          writeCompactString(o, name)
-          o.writeInt(partitions)
-          o.writeShort(1)       // replication_factor (single-node)
-          writeCompactArrayLen(o, 0) // assignments: broker assigns
-          writeCompactArrayLen(o, 0) // configs: defaults
-          writeEmptyTagged(o)
-        }
-        o.writeInt(timeoutMs)
-        o.writeBoolean(false)   // validate_only
-        writeEmptyTagged(o)
-      } else {
-        o.writeInt(topics.size)
-        topics.foreach { case (name, partitions) =>
-          writeString(o, name)
-          o.writeInt(partitions)
-          o.writeShort(1)       // replication_factor (single-node)
-          o.writeInt(0)         // replica_assignment: broker assigns
-          o.writeInt(0)         // config_entries: defaults
-        }
-        o.writeInt(timeoutMs)
+    val r = oneShot(bootstrap, ApiCreateTopics) { o =>
+      o.array(topics) { case (name, partitions) =>
+        o.str(name)
+        o.writeInt(partitions)
+        o.writeShort(1)         // replication_factor (single-node)
+        o.arrayLen(0)           // assignments: broker assigns
+        o.arrayLen(0)           // configs: defaults
+        o.tags()
       }
-      body.toByteArray
+      o.writeInt(timeoutMs)
+      if (o.version >= 1) o.writeBoolean(false) // validate_only
+      o.tags()
     }
-    val failed =
+    val v = r.version
+    if (v >= 2) r.readInt()     // throttle_time_ms
+    val failed = r.array {
+      val name = r.str()
+      val err = r.readShort()
+      if (v >= 1) r.str()       // error_message (nullable)
       if (v >= 5) {
-        in.readInt()            // throttle_time_ms
-        val n = readCompactArrayLen(in)
-        (1 to n).map { _ =>
-          val name = readCompactString(in)
-          val err = in.readShort()
-          readCompactString(in) // error_message (nullable)
-          in.readInt()          // num_partitions
-          in.readShort()        // replication_factor
-          val nConfigs = readCompactArrayLen(in)
-          (1 to math.max(nConfigs, 0)).foreach { _ =>
-            readCompactString(in); readCompactString(in)
-            in.readBoolean(); in.readByte(); in.readBoolean(); skipTagged(in)
-          }
-          skipTagged(in)
-          (name, err)
-        }.filter(_._2 != 0)
-      } else {
-        val n = in.readInt()
-        (1 to n).map(_ => (readString(in), in.readShort()))
-          .filter(_._2 != 0)
+        r.readInt()             // num_partitions
+        r.readShort()           // replication_factor
+        r.array {               // configs
+          r.str(); r.str(); r.readBoolean(); r.readByte(); r.readBoolean()
+          r.tags()
+        }
       }
+      r.tags()
+      (name, err)
+    }.filter(_._2 != 0)
     if (failed.nonEmpty) {
       val named = failed.map { case (t, e) =>
         val name = e match {
@@ -634,89 +542,50 @@ final class KafkaLogClient(path: String,
 
   private case class Meta(brokers: Map[Int, String], leaders: Map[Int, Int])
 
-  private def fetchMeta(): Meta =
-    if (metadataVersion >= 9) fetchMetaV9() else fetchMetaV0()
-
-  private def fetchMetaV0(): Meta = {
-    val body = new ByteArrayOutputStream()
-    val o = new DataOutputStream(body)
-    o.writeInt(1); writeString(o, topic) // topics: [topic]
-    val in = oneShot(bootstrap, ApiMetadata, 0, body.toByteArray)
-    val nBrokers = in.readInt()
-    val brokers = (1 to nBrokers).map { _ =>
-      val id = in.readInt(); val host = readString(in); val port = in.readInt()
+  /** Metadata for this client's topic: the broker address book and each
+    * partition's leader (v0, or the flexible v9 with its rack, cluster id,
+    * leader epoch, offline replicas and authorized-operations fields). */
+  private def fetchMeta(): Meta = {
+    val r = oneShot(bootstrap, ApiMetadata) { o =>
+      o.arrayLen(1); o.str(topic); o.tags()
+      if (o.version >= 4) o.writeBoolean(false) // allow_auto_topic_creation
+      // include_cluster_authorized_operations (v8-v10), include_topic_…
+      if (o.version >= 8 && o.version <= 10) o.writeBoolean(false)
+      if (o.version >= 8) o.writeBoolean(false)
+      o.tags()
+    }
+    val v = r.version
+    if (v >= 3) r.readInt()     // throttle_time_ms
+    val brokers = r.array {
+      val id = r.readInt(); val host = r.str(); val port = r.readInt()
+      if (v >= 1) r.str()       // rack (nullable)
+      r.tags()
       id -> s"$host:$port"
     }.toMap
-    val nTopics = in.readInt()
+    if (v >= 2) r.str()         // cluster_id (nullable)
+    if (v >= 1) r.readInt()     // controller_id
     var leaders = Map.empty[Int, Int]
-    (1 to nTopics).foreach { _ =>
-      val err = in.readShort(); val name = readString(in)
+    r.array {
+      val err = r.readShort(); val name = r.str()
+      if (v >= 1) r.readBoolean() // is_internal
       if (err != 0)
         throw new IOException(s"kafka metadata error $err for topic '$name'")
-      val nParts = in.readInt()
-      (1 to nParts).foreach { _ =>
-        val perr = in.readShort(); val pid = in.readInt(); val leader = in.readInt()
-        skipIntArray(in) // replicas
-        skipIntArray(in) // isr
+      r.array {
+        val perr = r.readShort(); val pid = r.readInt(); val leader = r.readInt()
+        if (v >= 7) r.readInt() // leader_epoch
+        r.skipIntArray()        // replicas
+        r.skipIntArray()        // isr
+        if (v >= 5) r.skipIntArray() // offline_replicas
+        r.tags()
         if (perr != 0)
           throw new IOException(s"kafka metadata error $perr for $name/$pid")
         if (name == topic) leaders += pid -> leader
       }
+      if (v >= 8) r.readInt()   // topic_authorized_operations
+      r.tags()
     }
-    if (leaders.isEmpty)
-      throw new IOException(s"kafka topic '$topic' has no partitions at $bootstrap")
-    Meta(brokers, leaders)
-  }
-
-  /** Metadata over the flexible v9 frame (compact strings/arrays, tagged
-    * buffers, leader_epoch + offline_replicas + authorized-operations
-    * fields) — same Meta out, only the wire differs. */
-  private def fetchMetaV9(): Meta = {
-    val body = new ByteArrayOutputStream()
-    val o = new DataOutputStream(body)
-    writeCompactArrayLen(o, 1)
-    writeCompactString(o, topic); writeEmptyTagged(o)
-    o.writeBoolean(false)       // allow_auto_topic_creation
-    o.writeBoolean(false)       // include_cluster_authorized_operations
-    o.writeBoolean(false)       // include_topic_authorized_operations
-    writeEmptyTagged(o)
-    val in = oneShotFlex(bootstrap, ApiMetadata, 9, body.toByteArray)
-    in.readInt()                // throttle_time_ms
-    val nBrokers = readCompactArrayLen(in)
-    val brokers = (1 to nBrokers).map { _ =>
-      val id = in.readInt(); val host = readCompactString(in)
-      val port = in.readInt()
-      readCompactString(in)     // rack (nullable)
-      skipTagged(in)
-      id -> s"$host:$port"
-    }.toMap
-    readCompactString(in)       // cluster_id (nullable)
-    in.readInt()                // controller_id
-    val nTopics = readCompactArrayLen(in)
-    var leaders = Map.empty[Int, Int]
-    (1 to nTopics).foreach { _ =>
-      val err = in.readShort(); val name = readCompactString(in)
-      in.readBoolean()          // is_internal
-      if (err != 0)
-        throw new IOException(s"kafka metadata error $err for topic '$name'")
-      val nParts = readCompactArrayLen(in)
-      (1 to nParts).foreach { _ =>
-        val perr = in.readShort(); val pid = in.readInt()
-        val leader = in.readInt()
-        in.readInt()            // leader_epoch
-        skipCompactIntArray(in) // replicas
-        skipCompactIntArray(in) // isr
-        skipCompactIntArray(in) // offline_replicas
-        skipTagged(in)
-        if (perr != 0)
-          throw new IOException(s"kafka metadata error $perr for $name/$pid")
-        if (name == topic) leaders += pid -> leader
-      }
-      in.readInt()              // topic_authorized_operations
-      skipTagged(in)
-    }
-    in.readInt()                // cluster_authorized_operations
-    skipTagged(in)
+    if (v >= 8 && v <= 10) r.readInt() // cluster_authorized_operations
+    r.tags()
     if (leaders.isEmpty)
       throw new IOException(s"kafka topic '$topic' has no partitions at $bootstrap")
     Meta(brokers, leaders)
@@ -732,21 +601,19 @@ final class KafkaLogClient(path: String,
   override def listPartitions(): Seq[Int] = fetchMeta().leaders.keys.toSeq.sorted
 
   /** ListOffsets at `ts` (−1 latest, −2 earliest) against the leader, over
-    * the negotiated version: the flexible v6 (KIP-482 compact frames;
-    * carries current_leader_epoch, −1 = unknown) when the broker speaks it,
-    * the non-flexible v2 pin otherwise. Both are ISOLATION-AWARE (v2 was
-    * the first): under read_committed the "latest" offset is the LAST
-    * STABLE OFFSET, so every planned micro-batch range ends at
-    * transactionally-decided data — a range can never include records of a
-    * still-open transaction. */
+    * the negotiated version: the flexible v6 (carries
+    * current_leader_epoch, −1 = unknown) or the non-flexible v2 pin. Both
+    * are ISOLATION-AWARE (v2 was the first): under read_committed the
+    * "latest" offset is the LAST STABLE OFFSET, so every planned
+    * micro-batch range ends at transactionally-decided data — a range can
+    * never include records of a still-open transaction. */
   private def listOffset(p: Int, ts: Long): Long =
     listOffsetRaw(p, ts) match {
       case off if off >= 0 => off
       case _ => throw new IOException(s"kafka ListOffsets missing $topic/$p")
     }
 
-  /** ListOffsets by REAL timestamp (KIP-79 semantics the v6 path always
-    * accepted but no lane exercised — VERDICT r16 #8): the earliest offset
+  /** ListOffsets by REAL timestamp (KIP-79 semantics): the earliest offset
     * whose record timestamp is >= `tsMs`, None when the log holds no such
     * record. Works over both dialects (the broker double resolves v2 and
     * v6 identically). */
@@ -757,59 +624,30 @@ final class KafkaLogClient(path: String,
   }
 
   private def listOffsetRaw(p: Int, ts: Long): Long = {
-    val meta = fetchMeta()
-    val addr = leaderAddr(meta, p)
-    val body = new ByteArrayOutputStream()
-    val o = new DataOutputStream(body)
+    val r = oneShot(leaderAddr(fetchMeta(), p), ApiListOffsets) { o =>
+      o.writeInt(-1)            // replica_id: consumer
+      o.writeByte(if (readCommitted) 1 else 0) // isolation_level
+      o.arrayLen(1); o.str(topic)
+      o.arrayLen(1); o.writeInt(p)
+      if (o.version >= 4) o.writeInt(-1) // current_leader_epoch: unknown
+      o.writeLong(ts)
+      o.tags(); o.tags(); o.tags() // partition, topic, request
+    }
+    r.readInt()                 // throttle_time_ms
     var result = -1L
-    if (listOffsetsVersion >= 6) {
-      o.writeInt(-1)            // replica_id: consumer
-      o.writeByte(if (readCommitted) 1 else 0) // isolation_level
-      writeCompactArrayLen(o, 1); writeCompactString(o, topic)
-      writeCompactArrayLen(o, 1)
-      o.writeInt(p); o.writeInt(-1) // current_leader_epoch: unknown
-      o.writeLong(ts); writeEmptyTagged(o)
-      writeEmptyTagged(o); writeEmptyTagged(o)
-      val in = oneShotFlex(addr, ApiListOffsets, 6, body.toByteArray)
-      in.readInt()              // throttle_time_ms
-      val nTopics = readCompactArrayLen(in)
-      (1 to nTopics).foreach { _ =>
-        val name = readCompactString(in)
-        val nParts = readCompactArrayLen(in)
-        (1 to nParts).foreach { _ =>
-          val pid = in.readInt(); val err = in.readShort()
-          in.readLong()         // timestamp
-          val off = in.readLong()
-          in.readInt()          // leader_epoch
-          skipTagged(in)
-          if (err != 0)
-            throw new IOException(
-              s"kafka ListOffsets error $err for $name/$pid")
-          if (name == topic && pid == p) result = off
-        }
-        skipTagged(in)
+    r.array {
+      val name = r.str()
+      r.array {
+        val pid = r.readInt(); val err = r.readShort()
+        r.readLong()            // timestamp
+        val off = r.readLong()
+        if (r.version >= 4) r.readInt() // leader_epoch
+        r.tags()
+        if (err != 0)
+          throw new IOException(s"kafka ListOffsets error $err for $name/$pid")
+        if (name == topic && pid == p) result = off
       }
-    } else {
-      o.writeInt(-1)            // replica_id: consumer
-      o.writeByte(if (readCommitted) 1 else 0) // isolation_level
-      o.writeInt(1); writeString(o, topic)
-      o.writeInt(1); o.writeInt(p); o.writeLong(ts)
-      val in = oneShot(addr, ApiListOffsets, 2, body.toByteArray)
-      in.readInt()              // throttle_time_ms
-      val nTopics = in.readInt()
-      (1 to nTopics).foreach { _ =>
-        val name = readString(in)
-        val nParts = in.readInt()
-        (1 to nParts).foreach { _ =>
-          val pid = in.readInt(); val err = in.readShort()
-          in.readLong()         // timestamp
-          val off = in.readLong()
-          if (err != 0)
-            throw new IOException(
-              s"kafka ListOffsets error $err for $name/$pid")
-          if (name == topic && pid == p) result = off
-        }
-      }
+      r.tags()
     }
     result // -1 = no answer (timestamp past the log end, or topic missing)
   }
@@ -823,36 +661,32 @@ final class KafkaLogClient(path: String,
   override def sizeInBytes(p: Int): Long = recordCount(p) * 1024L
 
   // ---- consumer-group offset commit-back -----------------------------------
-  // FindCoordinator v0 (api 10) + OffsetCommit v2 (api 8) + OffsetFetch v1
-  // (api 9): the ≡ of rdkafka's enable.auto.commit (reference
-  // tests/utils.rs:272). Commit-back is ecosystem observability — external
-  // lag monitors watching the group see this consumer's progress — while
-  // the Spark checkpoint WAL stays the restart truth (the reference never
-  // reads committed offsets back either; SURVEY §3.2).
+  // FindCoordinator (api 10) + OffsetCommit (api 8) + OffsetFetch (api 9),
+  // each v0/v2/v1 or the flexible v3/v8/v6: the ≡ of rdkafka's
+  // enable.auto.commit (reference tests/utils.rs:272). Commit-back is
+  // ecosystem observability — external lag monitors watching the group see
+  // this consumer's progress — while the Spark checkpoint WAL stays the
+  // restart truth (the reference never reads committed offsets back
+  // either; SURVEY §3.2).
 
   /** The group coordinator's address for `group` (a real cluster routes
-    * group state to one broker; the bootstrap answers FindCoordinator,
-    * v0 or the flexible v3 — v3 adds key_type, 0 = consumer group). */
+    * group state to one broker; the bootstrap answers FindCoordinator —
+    * v1+ adds key_type, 0 = consumer group). */
   private[replay] def coordinator(group: String): String = {
-    val (v, in) = oneShotVersioned(bootstrap, "FindCoordinator",
-      ApiFindCoordinator, 0, 3) { v =>
-      val body = new ByteArrayOutputStream(); val o = new DataOutputStream(body)
-      if (v >= 3) {
-        writeCompactString(o, group)
-        o.writeByte(0)          // key_type: consumer group
-        writeEmptyTagged(o)
-      } else writeString(o, group)
-      body.toByteArray
+    val r = oneShot(bootstrap, ApiFindCoordinator) { o =>
+      o.str(group)
+      if (o.version >= 1) o.writeByte(0) // key_type: consumer group
+      o.tags()
     }
-    if (v >= 3) in.readInt()    // throttle_time_ms
-    val err = in.readShort()
-    val errMsg = if (v >= 3) Option(readCompactString(in)) else None
+    if (r.version >= 1) r.readInt() // throttle_time_ms
+    val err = r.readShort()
+    val errMsg = if (r.version >= 1) Option(r.str()) else None
     if (err != 0)
       throw new IOException(s"kafka FindCoordinator error $err for group " +
         s"'$group'${errMsg.fold("")(m => s": $m")}")
-    in.readInt()                // node id
-    val host = if (v >= 3) readCompactString(in) else readString(in)
-    val port = in.readInt()
+    r.readInt()                 // node id
+    val host = r.str()
+    val port = r.readInt()
     s"$host:$port"
   }
 
@@ -867,95 +701,67 @@ final class KafkaLogClient(path: String,
       memberId: String, offsets: Map[Int, Long],
       groupInstanceId: String = null): Unit = {
     if (offsets.isEmpty) return
-    val (v, in) = oneShotVersioned(coordinator(group), "OffsetCommit",
-      ApiOffsetCommit, 2, 8) { v =>
-      val body = new ByteArrayOutputStream(); val o = new DataOutputStream(body)
-      if (v >= 8) {
-        writeCompactString(o, group)
-        o.writeInt(generation)
-        writeCompactString(o, memberId)
-        writeCompactString(o, groupInstanceId) // KIP-345 (null = dynamic)
-        writeCompactArrayLen(o, 1); writeCompactString(o, topic)
-        writeCompactArrayLen(o, offsets.size)
-        offsets.toSeq.sortBy(_._1).foreach { case (p, off) =>
-          o.writeInt(p); o.writeLong(off)
-          o.writeInt(-1)        // committed_leader_epoch: not tracked
-          writeCompactString(o, "")
-          writeEmptyTagged(o)
-        }
-        writeEmptyTagged(o); writeEmptyTagged(o)
-      } else {
-        writeString(o, group)
-        o.writeInt(generation)
-        writeString(o, memberId)
-        o.writeLong(-1L)        // retention: broker default
-        o.writeInt(1); writeString(o, topic)
-        o.writeInt(offsets.size)
-        offsets.toSeq.sortBy(_._1).foreach { case (p, off) =>
-          o.writeInt(p); o.writeLong(off); writeString(o, "")
-        }
+    val r = oneShot(coordinator(group), ApiOffsetCommit) { o =>
+      val v = o.version
+      o.str(group)
+      o.writeInt(generation)
+      o.str(memberId)
+      if (v >= 7) o.str(groupInstanceId) // KIP-345 (null = dynamic)
+      if (v >= 2 && v <= 4) o.writeLong(-1L) // retention: broker default
+      o.arrayLen(1); o.str(topic)
+      o.array(offsets.toSeq.sortBy(_._1)) { case (p, off) =>
+        o.writeInt(p); o.writeLong(off)
+        if (v >= 6) o.writeInt(-1) // committed_leader_epoch: not tracked
+        o.str("")               // metadata
+        o.tags()
       }
-      body.toByteArray
+      o.tags(); o.tags()
     }
-    if (v >= 8) in.readInt()    // throttle_time_ms
-    val nTopics = if (v >= 8) readCompactArrayLen(in) else in.readInt()
-    (1 to nTopics).foreach { _ =>
-      val name = if (v >= 8) readCompactString(in) else readString(in)
-      val nParts = if (v >= 8) readCompactArrayLen(in) else in.readInt()
-      (1 to nParts).foreach { _ =>
-        val pid = in.readInt(); val err = in.readShort()
-        if (v >= 8) skipTagged(in)
+    if (r.version >= 3) r.readInt() // throttle_time_ms
+    r.array {
+      val name = r.str()
+      r.array {
+        val pid = r.readInt(); val err = r.readShort()
+        r.tags()
         if (err != 0)
           throw new IOException(
             s"kafka OffsetCommit error $err for $name/$pid group '$group'" +
               (if (generation != -1) s" (member $memberId gen $generation)"
                else ""))
       }
-      if (v >= 8) skipTagged(in)
+      r.tags()
     }
   }
 
   override def committedOffsets(group: String,
       parts: Seq[Int]): Map[Int, Long] = {
     if (parts.isEmpty) return Map.empty
-    val (v, in) = oneShotVersioned(coordinator(group), "OffsetFetch",
-      ApiOffsetFetch, 1, 6) { v =>
-      val body = new ByteArrayOutputStream(); val o = new DataOutputStream(body)
-      if (v >= 6) {
-        writeCompactString(o, group)
-        writeCompactArrayLen(o, 1); writeCompactString(o, topic)
-        writeCompactArrayLen(o, parts.size)
-        parts.sorted.foreach(o.writeInt)
-        writeEmptyTagged(o); writeEmptyTagged(o)
-      } else {
-        writeString(o, group)
-        o.writeInt(1); writeString(o, topic)
-        o.writeInt(parts.size)
-        parts.sorted.foreach(o.writeInt)
-      }
-      body.toByteArray
+    val r = oneShot(coordinator(group), ApiOffsetFetch) { o =>
+      o.str(group)
+      o.arrayLen(1); o.str(topic)
+      o.array(parts.sorted)(o.writeInt)
+      o.tags(); o.tags()
     }
-    if (v >= 6) in.readInt()    // throttle_time_ms
-    val nTopics = if (v >= 6) readCompactArrayLen(in) else in.readInt()
+    val v = r.version
+    if (v >= 3) r.readInt()     // throttle_time_ms
     var out = Map.empty[Int, Long]
-    (1 to nTopics).foreach { _ =>
-      val name = if (v >= 6) readCompactString(in) else readString(in)
-      val nParts = if (v >= 6) readCompactArrayLen(in) else in.readInt()
-      (1 to nParts).foreach { _ =>
-        val pid = in.readInt(); val off = in.readLong()
-        if (v >= 6) in.readInt() // committed_leader_epoch
-        if (v >= 6) readCompactString(in) else readString(in) // metadata
-        val err = in.readShort()
-        if (v >= 6) skipTagged(in)
+    r.array {
+      val name = r.str()
+      r.array {
+        val pid = r.readInt(); val off = r.readLong()
+        if (v >= 5) r.readInt() // committed_leader_epoch
+        r.str()                 // metadata
+        val err = r.readShort()
+        r.tags()
         if (err != 0)
           throw new IOException(
             s"kafka OffsetFetch error $err for $name/$pid group '$group'")
         if (name == topic && off >= 0) out += pid -> off
       }
-      if (v >= 6) skipTagged(in)
+      r.tags()
     }
-    if (v >= 6) {
-      val topErr = in.readShort()
+    if (v >= 2) {
+      val topErr = r.readShort()
       if (topErr != 0)
         throw new IOException(
           s"kafka OffsetFetch top-level error $topErr for group '$group'")
@@ -964,10 +770,10 @@ final class KafkaLogClient(path: String,
   }
 
   // ---- producer side --------------------------------------------------------
-  // Produce v3 (api 0): the write half of the wire dialect — v3 is the first
-  // version that carries RecordBatch v2 (the format this client encodes) and
-  // the last before flexible headers, so it pairs with the consume pins
-  // above. The reference only produces in its test harness (populate_topic,
+  // Produce v3 or the flexible v9 (api 0): the write half of the wire
+  // dialect — v3 is the first version that carries RecordBatch v2 (the
+  // format this client encodes) and the last before flexible headers, so it
+  // pairs with the consume pins above. The reference only produces in its test harness (populate_topic,
   // tests/utils.rs:156-212, an rdkafka FutureProducer); here the same
   // capability backs the graft-replay SINK (ReplayWrite), so a streaming
   // query can write its output back to a topic.
@@ -1014,23 +820,15 @@ final class KafkaLogClient(path: String,
   private var txnHasOffsets = false
 
   private def ensureProducerId(): Unit = if (idempotent && producerId < 0) {
-    val (_, r) = oneShotVersioned(bootstrap, "InitProducerId",
-      ApiInitProducerId, 0, 2) { v =>
-      val body = new ByteArrayOutputStream(); val o = new DataOutputStream(body)
-      if (v >= 2) writeCompactString(o, transactionalId.orNull)
-      else transactionalId match {
-        case Some(id) => writeString(o, id)
-        case None => o.writeShort(-1) // null: idempotence only
-      }
+    val r = oneShot(bootstrap, ApiInitProducerId) { o =>
+      o.str(transactionalId.orNull) // null: idempotence only
       // transaction.timeout.ms ≡ librdkafka's knob: the broker aborts (and
       // fences) a transaction left open past this — the liveness bound that
       // keeps a crashed writer from pinning the LSO forever
       o.writeInt(conf.get("transaction.timeout.ms").map(_.toInt)
         .getOrElse(60000))
-      if (v >= 2) writeEmptyTagged(o)
-      body.toByteArray
+      o.tags()
     }
-    // response layout (throttle, error, pid, epoch) is shared by v0 and v2
     r.readInt()                 // throttle_time_ms
     val err = r.readShort()
     if (err != 0)
@@ -1056,31 +854,19 @@ final class KafkaLogClient(path: String,
     * coordinator as part of the open transaction (sent lazily on first
     * produce to `p`). */
   private def addPartitionToTxn(p: Int): Unit = {
-    val (v, r) = oneShotVersioned(bootstrap, "AddPartitionsToTxn",
-      ApiAddPartitionsToTxn, 0, 3) { v =>
-      val body = new ByteArrayOutputStream(); val o = new DataOutputStream(body)
-      if (v >= 3) {
-        writeCompactString(o, transactionalId.get)
-        o.writeLong(producerId); o.writeShort(producerEpoch)
-        writeCompactArrayLen(o, 1); writeCompactString(o, topic)
-        writeCompactArrayLen(o, 1); o.writeInt(p)
-        writeEmptyTagged(o); writeEmptyTagged(o)
-      } else {
-        writeString(o, transactionalId.get)
-        o.writeLong(producerId); o.writeShort(producerEpoch)
-        o.writeInt(1); writeString(o, topic)
-        o.writeInt(1); o.writeInt(p)
-      }
-      body.toByteArray
+    val r = oneShot(bootstrap, ApiAddPartitionsToTxn) { o =>
+      o.str(transactionalId.get)
+      o.writeLong(producerId); o.writeShort(producerEpoch)
+      o.arrayLen(1); o.str(topic)
+      o.arrayLen(1); o.writeInt(p)
+      o.tags(); o.tags()
     }
     r.readInt()                 // throttle_time_ms
-    val nTopics = if (v >= 3) readCompactArrayLen(r) else r.readInt()
-    (1 to nTopics).foreach { _ =>
-      val name = if (v >= 3) readCompactString(r) else readString(r)
-      val nParts = if (v >= 3) readCompactArrayLen(r) else r.readInt()
-      (1 to nParts).foreach { _ =>
+    r.array {
+      val name = r.str()
+      r.array {
         val pid = r.readInt(); val err = r.readShort()
-        if (v >= 3) skipTagged(r)
+        r.tags()
         if (err == 90) throw new IOException(
           s"kafka AddPartitionsToTxn error 90 for $name/$pid: producer " +
             s"fenced — a newer producer re-registered transactional.id " +
@@ -1088,7 +874,7 @@ final class KafkaLogClient(path: String,
         if (err != 0) throw new IOException(
           s"kafka AddPartitionsToTxn error $err for $name/$pid")
       }
-      if (v >= 3) skipTagged(r)
+      r.tags()
     }
     txnPartitions += p
   }
@@ -1115,16 +901,11 @@ final class KafkaLogClient(path: String,
         "sendOffsetsToTxn must be called inside beginTxn()/endTxn()")
       if (offsets.isEmpty) return
       ensureProducerId()
-      val (_, ar) = oneShotVersioned(bootstrap, "AddOffsetsToTxn",
-        ApiAddOffsetsToTxn, 0, 3) { v =>
-        val body = new ByteArrayOutputStream()
-        val o = new DataOutputStream(body)
-        if (v >= 3) writeCompactString(o, transactionalId.get)
-        else writeString(o, transactionalId.get)
+      val ar = oneShot(bootstrap, ApiAddOffsetsToTxn) { o =>
+        o.str(transactionalId.get)
         o.writeLong(producerId); o.writeShort(producerEpoch)
-        if (v >= 3) { writeCompactString(o, group); writeEmptyTagged(o) }
-        else writeString(o, group)
-        body.toByteArray
+        o.str(group)
+        o.tags()
       }
       ar.readInt()              // throttle_time_ms
       val aerr = ar.readShort()
@@ -1137,46 +918,30 @@ final class KafkaLogClient(path: String,
       // to the wire even if the TxnOffsetCommit below fails and the
       // caller aborts
       txnHasOffsets = true
-      val (v, r) = oneShotVersioned(coordinator(group), "TxnOffsetCommit",
-        ApiTxnOffsetCommit, 0, 3) { v =>
-        val body = new ByteArrayOutputStream()
-        val o = new DataOutputStream(body)
-        if (v >= 3) {
-          writeCompactString(o, transactionalId.get)
-          writeCompactString(o, group)
-          o.writeLong(producerId); o.writeShort(producerEpoch)
+      val r = oneShot(coordinator(group), ApiTxnOffsetCommit) { o =>
+        o.str(transactionalId.get)
+        o.str(group)
+        o.writeLong(producerId); o.writeShort(producerEpoch)
+        if (o.version >= 3) {
           o.writeInt(-1)        // generation_id: simple consumer (KIP-447)
-          writeCompactString(o, "")   // member_id
-          writeCompactString(o, null) // group_instance_id
-          writeCompactArrayLen(o, 1); writeCompactString(o, topic)
-          writeCompactArrayLen(o, offsets.size)
-          offsets.toSeq.sortBy(_._1).foreach { case (p, off) =>
-            o.writeInt(p); o.writeLong(off)
-            o.writeInt(-1)      // committed_leader_epoch (v2+)
-            writeCompactString(o, "")
-            writeEmptyTagged(o)
-          }
-          writeEmptyTagged(o); writeEmptyTagged(o)
-        } else {
-          writeString(o, transactionalId.get)
-          writeString(o, group)
-          o.writeLong(producerId); o.writeShort(producerEpoch)
-          o.writeInt(1); writeString(o, topic)
-          o.writeInt(offsets.size)
-          offsets.toSeq.sortBy(_._1).foreach { case (p, off) =>
-            o.writeInt(p); o.writeLong(off); writeString(o, "")
-          }
+          o.str("")             // member_id
+          o.str(null)           // group_instance_id
         }
-        body.toByteArray
+        o.arrayLen(1); o.str(topic)
+        o.array(offsets.toSeq.sortBy(_._1)) { case (p, off) =>
+          o.writeInt(p); o.writeLong(off)
+          if (o.version >= 2) o.writeInt(-1) // committed_leader_epoch
+          o.str("")             // metadata
+          o.tags()
+        }
+        o.tags(); o.tags()
       }
       r.readInt()               // throttle_time_ms
-      val nTopics = if (v >= 3) readCompactArrayLen(r) else r.readInt()
-      (1 to nTopics).foreach { _ =>
-        val name = if (v >= 3) readCompactString(r) else readString(r)
-        val nParts = if (v >= 3) readCompactArrayLen(r) else r.readInt()
-        (1 to nParts).foreach { _ =>
+      r.array {
+        val name = r.str()
+        r.array {
           val pid = r.readInt(); val err = r.readShort()
-          if (v >= 3) skipTagged(r)
+          r.tags()
           if (err == 47) throw new IOException(
             s"kafka TxnOffsetCommit error 47 for $name/$pid: producer " +
               "fenced — a newer producer re-registered transactional.id " +
@@ -1184,15 +949,16 @@ final class KafkaLogClient(path: String,
           if (err != 0) throw new IOException(
             s"kafka TxnOffsetCommit error $err for $name/$pid group '$group'")
         }
-        if (v >= 3) skipTagged(r)
+        r.tags()
       }
     }
 
-  /** EndTxn v0: commit (true) or abort (false) the open transaction — the
-    * coordinator writes the control markers into every added partition.
-    * On a single-broker cluster the bootstrap IS the coordinator; a
-    * multi-broker dialect would resolve it via FindCoordinator key_type 1
-    * first (the group path above shows the shape). */
+  /** EndTxn (v0 or the flexible v3): commit (true) or abort (false) the
+    * open transaction — the coordinator writes the control markers into
+    * every added partition. On a single-broker cluster the bootstrap IS
+    * the coordinator; a multi-broker dialect would resolve it via
+    * FindCoordinator key_type 1 first (the group path above shows the
+    * shape). */
   def endTxn(commit: Boolean): Unit = synchronized {
     require(txnOpen, "no open transaction to end")
     if (txnPartitions.isEmpty && !txnHasOffsets) {
@@ -1204,16 +970,12 @@ final class KafkaLogClient(path: String,
       txnOpen = false
       return
     }
-    val (_, r) = oneShotVersioned(bootstrap, "EndTxn", ApiEndTxn, 0, 3) { v =>
-      val body = new ByteArrayOutputStream(); val o = new DataOutputStream(body)
-      if (v >= 3) writeCompactString(o, transactionalId.get)
-      else writeString(o, transactionalId.get)
+    val r = oneShot(bootstrap, ApiEndTxn) { o =>
+      o.str(transactionalId.get)
       o.writeLong(producerId); o.writeShort(producerEpoch)
       o.writeBoolean(commit)
-      if (v >= 3) writeEmptyTagged(o)
-      body.toByteArray
+      o.tags()
     }
-    // response layout (throttle, error) is shared by v0 and v3
     r.readInt()                 // throttle_time_ms
     val err = r.readShort()
     if (err == 90) throw new IOException(
@@ -1248,54 +1010,30 @@ final class KafkaLogClient(path: String,
     val recordSet =
       encodeRecordBatchV2(recs, codec, producerId, producerEpoch, baseSeq,
         transactional = transactionalId.isDefined)
-    // the envelope is built INSIDE attempt(), after fetchMeta() has forced
-    // the preflight: the Produce version is negotiated lazily there
-    // (ADVICE r13: keying negotiation off graft.role left role-less
-    // produce() calls on an unchecked v3 pin), and a fresh producer's
-    // first produce() would otherwise encode the pinned-v3 body and then
-    // frame it as the just-negotiated v9 (a deterministic rebuild — same
-    // inputs — so the ambiguous-failure retry still resends the IDENTICAL
-    // wire batch)
-    def reqBody(produceVersion: Short): Array[Byte] = {
-      val body = new ByteArrayOutputStream(); val o = new DataOutputStream(body)
-      if (produceVersion >= 9) {
-        // flexible (KIP-482) v9 frame; the record set itself is the same
-        // RecordBatch v2 bytes — only the envelope changes
-        writeCompactString(o, transactionalId.orNull) // compact nullable
-        o.writeShort(-1)        // acks: all in-sync replicas
-        o.writeInt(30000)       // timeout_ms
-        writeCompactArrayLen(o, 1); writeCompactString(o, topic)
-        writeCompactArrayLen(o, 1); o.writeInt(p)
-        writeCompactBytes(o, recordSet)
-        writeEmptyTagged(o); writeEmptyTagged(o); writeEmptyTagged(o)
-      } else {
-        transactionalId match {
-          case Some(id) => writeString(o, id)
-          case None => o.writeShort(-1) // null: non-transactional
-        }
-        o.writeShort(-1)        // acks: all in-sync replicas
-        o.writeInt(30000)       // timeout_ms
-        o.writeInt(1); writeString(o, topic)
-        o.writeInt(1); o.writeInt(p)
-        o.writeInt(recordSet.length); o.write(recordSet)
-      }
-      body.toByteArray
-    }
-
+    // the envelope is written INSIDE attempt(), after fetchMeta() has
+    // forced the preflight: the Produce version is negotiated lazily there,
+    // and a fresh producer's first produce() would otherwise encode the
+    // pinned-v3 body and then frame it as the just-negotiated v9 (a
+    // deterministic rebuild — same inputs — so the ambiguous-failure retry
+    // still resends the IDENTICAL wire batch). The record set itself is
+    // the same RecordBatch v2 bytes in both dialects.
     def attempt(): Long = {
       if (prodMeta == null) prodMeta = fetchMeta()
       // negotiated AFTER fetchMeta() forced the preflight; validated
-      // against the broker's advertised ranges on every produce path,
-      // whether or not this client was constructed with graft.role set
-      val produceVersion = pickVersion("Produce", ApiProduce, 3, 9)
-      val reqBytes = reqBody(produceVersion)
+      // against the broker's advertised ranges on every produce path
+      val v = pickVersion(ApiProduce)
       val addr = leaderAddr(prodMeta, p)
       val (_, in, out) = prodConns.getOrElse(addr, {
         val c = open(addr); prodConns += addr -> c; c
       })
-      val r = try {
-        if (produceVersion >= 9) requestFlex(in, out, ApiProduce, 9, reqBytes)
-        else request(in, out, ApiProduce, 3, reqBytes)
+      val r = try call(in, out, ApiProduce, v) { o =>
+        o.str(transactionalId.orNull) // null: non-transactional
+        o.writeShort(-1)        // acks: all in-sync replicas
+        o.writeInt(30000)       // timeout_ms
+        o.arrayLen(1); o.str(topic)
+        o.arrayLen(1); o.writeInt(p)
+        o.bytes(recordSet)
+        o.tags(); o.tags(); o.tags() // partition, topic, request
       } catch { case e: IOException =>
         // connection gone (broker bounce / leader move): drop cached state
         // so a retry re-resolves metadata and re-dials
@@ -1303,49 +1041,28 @@ final class KafkaLogClient(path: String,
         prodMeta = null
         throw e
       }
-      def checkErr(err: Short, name: String, pid: Int): Unit = {
-        if (err == 47)          // INVALID_PRODUCER_EPOCH
-          throw new IOException("kafka produce error 47 for " +
-            s"$name/$pid: producer fenced — a newer producer " +
-            s"re-registered transactional.id '${transactionalId.orNull}'")
-        if (err != 0)
-          throw new IOException(s"kafka produce error $err for $name/$pid")
-      }
       var base = -1L
-      if (produceVersion >= 9) {
-        val nTopics = readCompactArrayLen(r)
-        (1 to nTopics).foreach { _ =>
-          val name = readCompactString(r)
-          val nParts = readCompactArrayLen(r)
-          (1 to nParts).foreach { _ =>
-            val pid = r.readInt(); val err = r.readShort()
-            val off = r.readLong()
-            r.readLong()        // log_append_time
-            r.readLong()        // log_start_offset
-            val nRecErrs = readCompactArrayLen(r)
-            (1 to math.max(nRecErrs, 0)).foreach { _ =>
-              r.readInt(); readCompactString(r); skipTagged(r)
-            }
-            readCompactString(r) // error_message (nullable)
-            skipTagged(r)
-            checkErr(err, name, pid)
-            if (name == topic && pid == p) base = off
+      r.array {
+        val name = r.str()
+        r.array {
+          val pid = r.readInt(); val err = r.readShort()
+          val off = r.readLong()
+          r.readLong()          // log_append_time
+          if (v >= 5) r.readLong() // log_start_offset
+          if (v >= 8) {
+            r.array { r.readInt(); r.str(); r.tags() } // record_errors
+            r.str()             // error_message (nullable)
           }
-          skipTagged(r)
+          r.tags()
+          if (err == 47)        // INVALID_PRODUCER_EPOCH
+            throw new IOException("kafka produce error 47 for " +
+              s"$name/$pid: producer fenced — a newer producer " +
+              s"re-registered transactional.id '${transactionalId.orNull}'")
+          if (err != 0)
+            throw new IOException(s"kafka produce error $err for $name/$pid")
+          if (name == topic && pid == p) base = off
         }
-      } else {
-        val nTopics = r.readInt()
-        (1 to nTopics).foreach { _ =>
-          val name = readString(r)
-          val nParts = r.readInt()
-          (1 to nParts).foreach { _ =>
-            val pid = r.readInt(); val err = r.readShort()
-            val off = r.readLong()
-            r.readLong()        // log_append_time
-            checkErr(err, name, pid)
-            if (name == topic && pid == p) base = off
-          }
-        }
+        r.tags()
       }
       if (base < 0)
         throw new IOException(s"kafka produce response missing $topic/$p")
@@ -1420,7 +1137,7 @@ final class KafkaLogClient(path: String,
       ensureConn()
       maybeReauth(sin, sout)
       val fetched =
-        try Some(if (fetchVersion >= 12) fetchOnceV12() else fetchOnceV4())
+        try Some(fetchOnce())
         catch {
           // EXACT per-partition error 1 — "fetch error 1 for t/p"; a
           // substring match on "error 1" would also swallow errors
@@ -1454,44 +1171,7 @@ final class KafkaLogClient(path: String,
       nextOffset = math.max(scanPos, nextOffset)
     }
 
-    private def fetchOnceV4(): (Array[Byte], Seq[AbortedTxn]) = {
-      val body = new ByteArrayOutputStream()
-      val o = new DataOutputStream(body)
-      o.writeInt(-1)            // replica_id
-      o.writeInt(100)           // max_wait_ms
-      o.writeInt(1)             // min_bytes
-      o.writeInt(1 << 22)       // max_bytes (4 MiB)
-      o.writeByte(if (readCommitted) 1 else 0) // isolation_level
-      o.writeInt(1); writeString(o, topic)
-      o.writeInt(1); o.writeInt(p); o.writeLong(nextOffset); o.writeInt(1 << 22)
-      val in = request(sin, sout, ApiFetch, 4, body.toByteArray)
-      in.readInt()              // throttle_time_ms
-      val nTopics = in.readInt()
-      var recordSet: Array[Byte] = null
-      var aborted: Seq[AbortedTxn] = Nil
-      (1 to nTopics).foreach { _ =>
-        val name = readString(in)
-        val nParts = in.readInt()
-        (1 to nParts).foreach { _ =>
-          val pid = in.readInt(); val err = in.readShort()
-          in.readLong()         // high_watermark
-          in.readLong()         // last_stable_offset
-          val nAborted = in.readInt()
-          val ab = (1 to math.max(nAborted, 0)).map { _ =>
-            AbortedTxn(in.readLong(), in.readLong())
-          }
-          val len = in.readInt()
-          val bytes = if (len <= 0) Array.emptyByteArray
-            else { val b = new Array[Byte](len); in.readFully(b); b }
-          if (err != 0)
-            throw new IOException(s"kafka fetch error $err for $name/$pid")
-          if (name == topic && pid == p) { recordSet = bytes; aborted = ab }
-        }
-      }
-      (recordSet, aborted)
-    }
-
-    // ---- KIP-227 fetch-session state (v12 only) ----------------------------
+    // ---- KIP-227 fetch-session state (v7+) ---------------------------------
     // session_id 0 + epoch 0 opens a session on the first fetch; the broker
     // answers with a session id and every later fetch is INCREMENTAL
     // (advancing epoch, delta partition state). `fetch.sessions=false`
@@ -1503,87 +1183,79 @@ final class KafkaLogClient(path: String,
     private var fetchSessionId = 0
     private var fetchSessionEpoch = 0
 
-    /** One Fetch over the flexible v12 frame (KIP-482): leader-epoch
-      * fields -1 (no epoch tracking), records as COMPACT_NULLABLE_BYTES,
-      * and the KIP-227 session fields — incremental sessions by default
-      * (each fetch re-sends this cursor's one partition, whose offset
-      * advanced, and the broker may omit empty partitions from the
-      * response), sessionless (0, -1) with `fetch.sessions=false`. Same
-      * record-set + aborted-txn semantics out as v4 — only the wire
-      * differs. */
-    private def fetchOnceV12(): (Array[Byte], Seq[AbortedTxn]) = {
+    /** One Fetch at the negotiated version (v4, or the flexible v12 with
+      * leader-epoch fields -1 — no epoch tracking — and the KIP-227 session
+      * fields: incremental sessions by default, each fetch re-sending this
+      * cursor's one partition, whose offset advanced, while the broker may
+      * omit empty partitions from the response; sessionless (0, -1) with
+      * `fetch.sessions=false`). Returns the record set and the aborted
+      * transactions listed for it. */
+    private def fetchOnce(): (Array[Byte], Seq[AbortedTxn]) = {
       val (sid, epoch) =
         if (useFetchSessions) (fetchSessionId, fetchSessionEpoch) else (0, -1)
-      val body = new ByteArrayOutputStream()
-      val o = new DataOutputStream(body)
-      o.writeInt(-1)            // replica_id
-      o.writeInt(100)           // max_wait_ms
-      o.writeInt(1)             // min_bytes
-      o.writeInt(1 << 22)       // max_bytes
-      o.writeByte(if (readCommitted) 1 else 0) // isolation_level
-      o.writeInt(sid)           // session_id
-      o.writeInt(epoch)         // session_epoch
-      writeCompactArrayLen(o, 1)
-      writeCompactString(o, topic)
-      writeCompactArrayLen(o, 1)
-      o.writeInt(p)
-      o.writeInt(-1)            // current_leader_epoch: not tracked
-      o.writeLong(nextOffset)
-      o.writeInt(-1)            // last_fetched_epoch
-      o.writeLong(-1L)          // log_start_offset (consumers send -1)
-      o.writeInt(1 << 22)       // partition_max_bytes
-      writeEmptyTagged(o)       // partition
-      writeEmptyTagged(o)       // topic
-      writeCompactArrayLen(o, 0) // forgotten_topics_data
-      writeCompactString(o, "") // rack_id
-      writeEmptyTagged(o)       // request
-      val in = requestFlex(sin, sout, ApiFetch, 12, body.toByteArray)
-      in.readInt()              // throttle_time_ms
-      val topErr = in.readShort()
-      if (topErr == 70 || topErr == 71) {
-        // FETCH_SESSION_ID_NOT_FOUND / INVALID_FETCH_SESSION_EPOCH: the
-        // broker evicted (or never had) our session — drain the error
-        // frame and retry ONCE as a session-opening full fetch
-        in.readInt()            // session_id
-        val n = readCompactArrayLen(in)
-        if (n > 0) throw new IOException(
-          s"kafka fetch v12 session error $topErr carried topic data")
-        skipTagged(in)
-        if (epoch <= 0)         // the full fetch itself failed: broker bug
-          throw new IOException(
-            s"kafka fetch v12 session error $topErr on a full fetch")
-        fetchSessionId = 0
-        fetchSessionEpoch = 0
-        return fetchOnceV12()
+      val r = call(sin, sout, ApiFetch, pickVersion(ApiFetch)) { o =>
+        val v = o.version
+        o.writeInt(-1)          // replica_id
+        o.writeInt(100)         // max_wait_ms
+        o.writeInt(1)           // min_bytes
+        o.writeInt(1 << 22)     // max_bytes (4 MiB)
+        o.writeByte(if (readCommitted) 1 else 0) // isolation_level
+        if (v >= 7) { o.writeInt(sid); o.writeInt(epoch) } // session id, epoch
+        o.arrayLen(1); o.str(topic)
+        o.arrayLen(1); o.writeInt(p)
+        if (v >= 9) o.writeInt(-1) // current_leader_epoch: not tracked
+        o.writeLong(nextOffset)
+        if (v >= 12) o.writeInt(-1) // last_fetched_epoch
+        if (v >= 5) o.writeLong(-1L) // log_start_offset (consumers send -1)
+        o.writeInt(1 << 22)     // partition_max_bytes
+        o.tags(); o.tags()      // partition, topic
+        if (v >= 7) o.arrayLen(0) // forgotten_topics_data
+        if (v >= 11) o.str("")  // rack_id
+        o.tags()
       }
-      if (topErr != 0)
-        throw new IOException(s"kafka fetch v12 top-level error $topErr")
-      val respSessionId = in.readInt()
-      if (useFetchSessions) {
-        // a granted/kept session advances the epoch; id 0 = no session
-        fetchSessionId = respSessionId
-        fetchSessionEpoch = if (respSessionId == 0) 0 else epoch + 1
+      val v = r.version
+      r.readInt()               // throttle_time_ms
+      if (v >= 7) {
+        val topErr = r.readShort()
+        val respSessionId = r.readInt()
+        if (topErr == 70 || topErr == 71) {
+          // FETCH_SESSION_ID_NOT_FOUND / INVALID_FETCH_SESSION_EPOCH: the
+          // broker evicted (or never had) our session — retry ONCE as a
+          // session-opening full fetch
+          if (r.arrayLen() > 0) throw new IOException(
+            s"kafka fetch v$v session error $topErr carried topic data")
+          if (epoch <= 0)       // the full fetch itself failed: broker bug
+            throw new IOException(
+              s"kafka fetch v$v session error $topErr on a full fetch")
+          fetchSessionId = 0
+          fetchSessionEpoch = 0
+          return fetchOnce()
+        }
+        if (topErr != 0)
+          throw new IOException(s"kafka fetch v$v top-level error $topErr")
+        if (useFetchSessions) {
+          // a granted/kept session advances the epoch; id 0 = no session
+          fetchSessionId = respSessionId
+          fetchSessionEpoch = if (respSessionId == 0) 0 else epoch + 1
+        }
       }
-      val nTopics = readCompactArrayLen(in)
       var recordSet: Array[Byte] = null
       var aborted: Seq[AbortedTxn] = Nil
-      (1 to nTopics).foreach { _ =>
-        val name = readCompactString(in)
-        val nParts = readCompactArrayLen(in)
-        (1 to nParts).foreach { _ =>
-          val pid = in.readInt(); val err = in.readShort()
-          in.readLong()         // high_watermark
-          in.readLong()         // last_stable_offset
-          in.readLong()         // log_start_offset
-          val nAborted = readCompactArrayLen(in)
-          val ab = (1 to math.max(nAborted, 0)).map { _ =>
-            val t = AbortedTxn(in.readLong(), in.readLong())
-            skipTagged(in)
+      r.array {
+        val name = r.str()
+        r.array {
+          val pid = r.readInt(); val err = r.readShort()
+          r.readLong()          // high_watermark
+          r.readLong()          // last_stable_offset
+          if (v >= 5) r.readLong() // log_start_offset
+          val ab = r.array {
+            val t = AbortedTxn(r.readLong(), r.readLong())
+            r.tags()
             t
           }
-          in.readInt()          // preferred_read_replica
-          val bytes = readCompactBytes(in)
-          skipTagged(in)        // partition (diverging epoch etc. ride here)
+          if (v >= 11) r.readInt() // preferred_read_replica
+          val bytes = r.bytes()
+          r.tags()              // partition (diverging epoch etc. ride here)
           if (err != 0)
             throw new IOException(s"kafka fetch error $err for $name/$pid")
           if (name == topic && pid == p) {
@@ -1591,9 +1263,9 @@ final class KafkaLogClient(path: String,
             aborted = ab
           }
         }
-        skipTagged(in)          // topic
+        r.tags()                // topic
       }
-      skipTagged(in)            // response
+      r.tags()                  // response
       (recordSet, aborted)
     }
 
@@ -1629,10 +1301,24 @@ final class KafkaLogClient(path: String,
   }
 }
 
-/** Kafka wire-protocol primitives shared by [[KafkaLogClient]] and the
-  * in-process broker double. Big-endian framing; BOTH header dialects —
-  * non-flexible (pre-tagged-field) v1 and the flexible (KIP-482) v2 with
-  * compact strings/arrays/bytes and tagged-field buffers. */
+/** Kafka wire-protocol primitives shared by [[KafkaLogClient]], the
+  * in-process broker double and its group coordinator. Big-endian framing
+  * in BOTH dialects: the classic (pre-tagged-field) one and the flexible
+  * (KIP-482) one with compact strings/arrays/bytes and tagged-field
+  * buffers.
+  *
+  * The codec contract: every API body is written ONCE, against an [[Out]]
+  * (request or response being built) or an [[In]] (one being parsed), each
+  * bound to one API version. Fixed-width fields are the plain
+  * `DataOutputStream`/`DataInputStream` calls, the same in both dialects;
+  * the variable-width ones — `str`, `bytes`, `arrayLen`/`array`,
+  * `skipIntArray` — and the tagged-field buffers (`tags`, a no-op on a
+  * classic version) pick their framing from the version, and
+  * [[FlexibleSince]] is the one place that says which version is flexible.
+  * A body's own version checks are field-presence checks only: `v >= N`
+  * for a field the protocol added at version N. [[request]] and
+  * [[readRequest]]/[[writeResponse]] frame the headers of both sides the
+  * same way. */
 private[replay] object KafkaWire {
   val ApiProduce: Short = 0
   val ApiFetch: Short = 1
@@ -1664,10 +1350,13 @@ private[replay] object KafkaWire {
     * aborted-producer scan. */
   final case class AbortedTxn(pid: Long, firstOffset: Long)
 
-  def writeString(o: DataOutputStream, s: String): Unit = {
-    val b = s.getBytes("UTF-8")
-    o.writeShort(b.length); o.write(b)
-  }
+  /** Classic STRING / NULLABLE_STRING: int16 length, -1 encodes null. */
+  def writeString(o: DataOutputStream, s: String): Unit =
+    if (s == null) o.writeShort(-1)
+    else {
+      val b = s.getBytes("UTF-8")
+      o.writeShort(b.length); o.write(b)
+    }
 
   def readString(in: DataInputStream): String = {
     val len = in.readShort()
@@ -1675,50 +1364,12 @@ private[replay] object KafkaWire {
     else { val b = new Array[Byte](len); in.readFully(b); new String(b, "UTF-8") }
   }
 
-  def skipIntArray(in: DataInputStream): Unit = {
-    val n = in.readInt()
-    (1 to n).foreach(_ => in.readInt())
-  }
-
-  def skipCompactIntArray(in: DataInputStream): Unit = {
-    val n = readCompactArrayLen(in)
-    (1 to n).foreach(_ => in.readInt())
-  }
-
-  /** size-framed request with the v1 request header; returns the response
-    * body stream positioned after the correlation id. */
-  def request(in: DataInputStream, out: DataOutputStream, apiKey: Short,
-      apiVersion: Short, body: Array[Byte]): DataInputStream = {
-    val header = new ByteArrayOutputStream()
-    val h = new DataOutputStream(header)
-    h.writeShort(apiKey); h.writeShort(apiVersion)
-    h.writeInt(1)               // correlation id (sequential per-connection)
-    writeString(h, ClientId)
-    out.writeInt(header.size() + body.length)
-    out.write(header.toByteArray); out.write(body); out.flush()
-    val size = in.readInt()
-    val resp = new Array[Byte](size)
-    in.readFully(resp)
-    val r = new DataInputStream(new ByteArrayInputStream(resp))
-    r.readInt()                 // correlation id
-    r
-  }
-
-  // ---- KIP-482 flexible/compact encoding ------------------------------------
-  // Flexible request versions frame with header v2 (v1 + a tagged-field
-  // buffer), COMPACT strings/arrays/bytes (UNSIGNED-varint length+1, 0 =
-  // null) and a tagged-field buffer closing every structure. This dialect
-  // speaks it for ApiVersions v3, Metadata v9 and Fetch v12 — the versions a
-  // KRaft-era broker that retired the pre-flexible frames still serves —
-  // negotiated in the preflight with fallback to the pinned old versions
-  // (≡ what librdkafka does transparently for the reference, Cargo.toml:8).
-
-  /** Flexible request versions per api key in THIS dialect (the protocol's
-    * own flexibleVersions floor for each). Round 14 (VERDICT r13 #1) closed
-    * the tail: the coordinator, group-membership, transaction and admin
-    * APIs negotiate their flexible twins too, so a KRaft-era broker that
-    * retired every pre-flexible version keeps commit-back, subscribe mode,
-    * transactions and topic creation — not just the hot read+write path. */
+  /** Flexible request versions per api key in this dialect (the protocol's
+    * own flexibleVersions floor for each) — which is also the flexible
+    * version the client speaks for each. Covers the whole client: the hot
+    * read+write path, the coordinator, group-membership, transaction and
+    * admin APIs, so a KRaft-era broker that retired every pre-flexible
+    * version serves all of it. */
   val FlexibleSince: Map[Short, Short] =
     Map(ApiApiVersions -> 3, ApiMetadata -> 9, ApiFetch -> 12,
       ApiListOffsets -> 6, ApiProduce -> 9,
@@ -1729,6 +1380,133 @@ private[replay] object KafkaWire {
       ApiEndTxn -> 3, ApiTxnOffsetCommit -> 3, ApiCreateTopics -> 5)
   def isFlexible(apiKey: Short, apiVersion: Short): Boolean =
     FlexibleSince.get(apiKey).exists(apiVersion >= _)
+
+  /** The classic (pre-flexible) version this dialect speaks for each API,
+    * with the API's name for errors: the fallback against a broker that
+    * does not serve the [[FlexibleSince]] version. */
+  val Classic: Map[Short, (String, Short)] = Map(
+    ApiProduce -> ("Produce", 3), ApiFetch -> ("Fetch", 4),
+    ApiListOffsets -> ("ListOffsets", 2), ApiMetadata -> ("Metadata", 0),
+    ApiOffsetCommit -> ("OffsetCommit", 2),
+    ApiOffsetFetch -> ("OffsetFetch", 1),
+    ApiFindCoordinator -> ("FindCoordinator", 0),
+    ApiJoinGroup -> ("JoinGroup", 0), ApiHeartbeat -> ("Heartbeat", 0),
+    ApiLeaveGroup -> ("LeaveGroup", 0), ApiSyncGroup -> ("SyncGroup", 0),
+    ApiApiVersions -> ("ApiVersions", 0),
+    ApiCreateTopics -> ("CreateTopics", 0),
+    ApiInitProducerId -> ("InitProducerId", 0),
+    ApiAddPartitionsToTxn -> ("AddPartitionsToTxn", 0),
+    ApiAddOffsetsToTxn -> ("AddOffsetsToTxn", 0),
+    ApiEndTxn -> ("EndTxn", 0), ApiTxnOffsetCommit -> ("TxnOffsetCommit", 0))
+
+  /** True for the two versions of `apiKey` this dialect speaks. */
+  def speaks(apiKey: Short, apiVersion: Short): Boolean =
+    Classic.get(apiKey).exists(_._2 == apiVersion) ||
+      FlexibleSince.get(apiKey).contains(apiVersion)
+
+  /** Body writer for one API version (see the codec contract above). */
+  final class Out private (buf: ByteArrayOutputStream, val version: Short,
+      val flex: Boolean) extends DataOutputStream(buf) {
+    def this(version: Short, flex: Boolean) =
+      this(new ByteArrayOutputStream(), version, flex)
+    def str(s: String): Unit =
+      if (flex) writeCompactString(this, s) else writeString(this, s)
+    def bytes(b: Array[Byte]): Unit =
+      if (flex) writeCompactBytes(this, b)
+      else if (b == null) writeInt(-1)
+      else { writeInt(b.length); write(b) }
+    def arrayLen(n: Int): Unit =
+      if (flex) writeCompactArrayLen(this, n) else writeInt(n)
+    def array[A](xs: Iterable[A])(elem: A => Unit): Unit = {
+      arrayLen(xs.size); xs.foreach(elem)
+    }
+    /** The empty tagged-field buffer that closes a flexible structure. */
+    def tags(): Unit = if (flex) writeEmptyTagged(this)
+    def toByteArray: Array[Byte] = buf.toByteArray
+  }
+
+  /** Body reader for one API version over `frame` from `offset` (see the
+    * codec contract above). */
+  final class In(frame: Array[Byte], offset: Int, val version: Short,
+      val flex: Boolean) extends DataInputStream(
+        new ByteArrayInputStream(frame, offset, frame.length - offset)) {
+    def str(): String = if (flex) readCompactString(this) else readString(this)
+    /** NULLABLE_BYTES (int32 or compact length; null when absent). */
+    def bytes(): Array[Byte] =
+      if (flex) readCompactBytes(this)
+      else {
+        val n = readInt()
+        if (n < 0) null else { val b = new Array[Byte](n); readFully(b); b }
+      }
+    def arrayLen(): Int = if (flex) readCompactArrayLen(this) else readInt()
+    /** Read an array's elements in order (a null array reads as empty). */
+    def array[A](elem: => A): IndexedSeq[A] = (1 to arrayLen()).map(_ => elem)
+    def skipIntArray(): Unit = array(readInt())
+    /** Skip a tagged-field buffer (this dialect ignores every tag — the
+      * KIP-482 forward-compatibility contract). */
+    def tags(): Unit = if (flex) skipTagged(this)
+  }
+
+  /** Writer and reader for payloads that are classic-framed whatever the
+    * carrying API's version: SASL frames and the embedded consumer
+    * protocol (subscription and assignment bytes). */
+  def classicOut(): Out = new Out(0, flex = false)
+  def classicIn(b: Array[Byte]): In = new In(b, 0, 0, flex = false)
+
+  /** One size-framed request and its response on an open connection: the
+    * request header is v1 (api key, version, correlation id, client id) on
+    * a classic version and v2 (+ a tagged-field buffer; client_id stays a
+    * classic string) on a flexible one. Returns the response body reader,
+    * positioned past the response header — v1 (correlation id + tagged
+    * fields) on a flexible version, except ApiVersions, whose response
+    * header is PINNED at v0 (KIP-511: the broker can't know the client's
+    * flexible support before parsing, so ApiVersionsResponse never gained
+    * header tags). */
+  def request(in: DataInputStream, out: DataOutputStream, apiKey: Short,
+      apiVersion: Short, body: Array[Byte]): In = {
+    val flex = isFlexible(apiKey, apiVersion)
+    val h = new Out(apiVersion, flex)
+    h.writeShort(apiKey); h.writeShort(apiVersion)
+    h.writeInt(1)               // correlation id (one request per round trip)
+    writeString(h, ClientId)
+    h.tags()
+    out.writeInt(h.size() + body.length)
+    out.write(h.toByteArray); out.write(body); out.flush()
+    val resp = new Array[Byte](in.readInt())
+    in.readFully(resp)
+    val r = new In(resp, 4, apiVersion, flex) // past the correlation id
+    if (apiKey != ApiApiVersions) r.tags()
+    r
+  }
+
+  /** The broker half of [[request]]: parse one request frame's header.
+    * Returns (api key, correlation id, body reader for the version). */
+  def readRequest(frame: Array[Byte]): (Short, Int, In) = {
+    val h = classicIn(frame)
+    val apiKey = h.readShort()
+    val version = h.readShort()
+    val correlationId = h.readInt()
+    h.str()                     // client_id
+    val r = new In(frame, frame.length - h.available(), version,
+      isFlexible(apiKey, version))
+    r.tags()
+    (apiKey, correlationId, r)
+  }
+
+  /** The broker half of [[request]]'s response framing. */
+  def writeResponse(out: DataOutputStream, apiKey: Short, version: Short,
+      correlationId: Int, body: Array[Byte]): Unit = {
+    val tagged = isFlexible(apiKey, version) && apiKey != ApiApiVersions
+    out.writeInt(4 + (if (tagged) 1 else 0) + body.length)
+    out.writeInt(correlationId)
+    if (tagged) out.writeByte(0) // empty tagged-field buffer
+    out.write(body)
+    out.flush()
+  }
+
+  // ---- KIP-482 compact encoding ---------------------------------------------
+  // COMPACT strings/arrays/bytes carry an UNSIGNED-varint length+1 (0 =
+  // null); a tagged-field buffer closes every flexible structure.
 
   /** UNSIGNED varint (compact lengths, tagged-field counts — NOT zigzag). */
   def readUvarint(in: DataInputStream): Int = {
@@ -1776,8 +1554,6 @@ private[replay] object KafkaWire {
   def writeCompactArrayLen(o: DataOutputStream, n: Int): Unit =
     writeUvarint(o, n + 1)
 
-  /** Skip a tagged-field buffer (this dialect sends none and ignores any —
-    * the KIP-482 forward-compatibility contract). */
   def skipTagged(in: DataInputStream): Unit = {
     val n = readUvarint(in)
     (1 to n).foreach { _ =>
@@ -1788,32 +1564,6 @@ private[replay] object KafkaWire {
   }
 
   def writeEmptyTagged(o: DataOutputStream): Unit = writeUvarint(o, 0)
-
-  /** size-framed FLEXIBLE request (header v2) — like [[request]] but with
-    * the tagged-field buffer after client_id (client_id itself stays a
-    * legacy two-byte-length string, per the protocol) and a header-v1
-    * response (correlation id + tagged fields)… except ApiVersions, whose
-    * response header is PINNED at v0 (KIP-511: the broker can't know the
-    * client's flexible support before parsing, so ApiVersionsResponse never
-    * gained header tags). */
-  def requestFlex(in: DataInputStream, out: DataOutputStream, apiKey: Short,
-      apiVersion: Short, body: Array[Byte]): DataInputStream = {
-    val header = new ByteArrayOutputStream()
-    val h = new DataOutputStream(header)
-    h.writeShort(apiKey); h.writeShort(apiVersion)
-    h.writeInt(1)
-    writeString(h, ClientId)
-    writeEmptyTagged(h)
-    out.writeInt(header.size() + body.length)
-    out.write(header.toByteArray); out.write(body); out.flush()
-    val size = in.readInt()
-    val resp = new Array[Byte](size)
-    in.readFully(resp)
-    val r = new DataInputStream(new ByteArrayInputStream(resp))
-    r.readInt()                 // correlation id
-    if (apiKey != ApiApiVersions) skipTagged(r) // response header v1
-    r
-  }
 
   // ---- varints (zigzag, protobuf layout — Kafka record fields) -------------
 

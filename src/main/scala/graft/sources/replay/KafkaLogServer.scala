@@ -4,20 +4,20 @@ import java.io.{BufferedInputStream, BufferedOutputStream, ByteArrayOutputStream
 import java.net.{ServerSocket, Socket}
 
 /** Wire-faithful single-node Kafka broker double for [[KafkaLogClient]]:
-  * speaks the exact protocol subset the client consumes — Metadata v0 AND
-  * the flexible (KIP-482) v9, ListOffsets v1/v2 AND the flexible v6,
-  * Fetch v4 AND the flexible v12 with RecordBatch v2, ApiVersions v0 AND
-  * the flexible v3, Produce v3 AND the flexible v9
-  * (+CRC-32C verification and idempotent-producer sequence absorption,
-  * shared verbatim between both Produce envelopes),
-  * InitProducerId v0 — serving one
+  * speaks the exact protocol subset the client speaks — each API at its
+  * classic version AND its flexible (KIP-482) one ([[KafkaWire.speaks]]):
+  * Metadata v0/v9, ListOffsets v2/v6, Fetch v4/v12 with RecordBatch v2,
+  * ApiVersions v0/v3, Produce v3/v9 (+CRC-32C verification and
+  * idempotent-producer sequence absorption), the transaction, coordinator,
+  * group-membership ([[GroupCoordinator]]) and CreateTopics APIs, and the
+  * SASL handshake — each handler one body for both dialects, serving one
   * topic from a file-backed [[ReplayLog]] directory. Lives in MAIN scope
   * (like [[SocketLogServer]], the socket backend's double) so the declared
   * registry queries s56/s57 can run the kafka wire client and the produce
   * sink through the driver's DuckDB correctness gate, not just the specs;
   * the fault-injection knobs (truncateTail, forgeScramServerSig,
-  * dropProduceResponses, apiVersionsError, legacyMagic) are all off by
-  * default and only exercised from the test suites. Persistent connections
+  * dropProduceResponses, legacyMagic) are all off by default and only
+  * exercised from the test suites. Persistent connections
   * (the client's frame cursor issues sequential Fetch requests on one
   * socket). Batches are capped at [[batchRecords]] records so a ranged read
   * exercises the multi-batch and multi-fetch decode paths, and the tail of
@@ -42,7 +42,6 @@ final class KafkaLogServer(dir: String, topic: String,
     forgeScramServerSig: Boolean = false,
     legacyMagic: Option[Int] = None,
     advertiseApis: Option[Seq[(Short, Short, Short)]] = None,
-    apiVersionsError: Short = 0,
     explicitPartitions: Option[Seq[Int]] = None,
     requireCreate: Boolean = false,
     maxReauthMs: Long = 0L) extends AutoCloseable {
@@ -426,18 +425,10 @@ final class KafkaLogServer(dir: String, topic: String,
         }
       }
       while (!closed) { // persistent connection: serve requests until EOF
-        val size = in.readInt()
-        val req = new Array[Byte](size)
-        in.readFully(req)
-        val r = new DataInputStream(new java.io.ByteArrayInputStream(req))
-        val apiKey = r.readShort()
-        val apiVersion = r.readShort()
-        val correlationId = r.readInt()
-        readString(r) // client id
-        // flexible (KIP-482) requests use header v2: the tagged-field
-        // buffer follows client_id
-        val flex = isFlexible(apiKey, apiVersion)
-        if (flex) skipTagged(r)
+        val frame = new Array[Byte](in.readInt())
+        in.readFully(frame)
+        val (apiKey, correlationId, r) = readRequest(frame)
+        val v = r.version
         // KIP-368 enforcement: past the session lifetime only the re-auth
         // sequence (and ApiVersions) is served; anything else kills the
         // connection, exactly a real broker with connections.max.reauth.ms
@@ -447,131 +438,103 @@ final class KafkaLogServer(dir: String, topic: String,
             apiKey != ApiApiVersions)
           throw new IOException("fake broker: SASL session lifetime " +
             "exceeded without re-authentication (KIP-368)")
-        val body = apiKey match {
-          case ApiSaslHandshake if apiVersion == 1 =>
-            val mech = readString(r)
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
+        val o = new Out(v, r.flex)
+        apiKey match {
+          case ApiSaslHandshake if v == 1 =>
+            val mech = r.str()
             val mechOk = saslMechs.contains(mech) &&
               (if (mech == "OAUTHBEARER") oauthToken.isDefined else sasl.isDefined)
             if (mechOk) {
               mechanism = mech
               o.writeShort(0)
             } else o.writeShort(33)     // UNSUPPORTED_SASL_MECHANISM
-            o.writeInt(saslMechs.size); saslMechs.foreach(writeString(o, _))
-            bo.toByteArray
-          case ApiSaslAuthenticate if apiVersion == 0 || apiVersion == 1 =>
+            o.array(saslMechs)(o.str)
+          case ApiSaslAuthenticate if v == 0 || v == 1 =>
             if (mechanism == null)
               throw new IOException("fake broker: authenticate before handshake")
-            val n = r.readInt()
-            val tok = new Array[Byte](n); r.readFully(tok)
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            if (mechanism == "PLAIN") {
-              val parts = new String(tok, "UTF-8").split("\u0000", -1)
-              val ok = parts.length == 3 &&
-                sasl.contains((parts(1), parts(2)))
-              if (ok) {
-                markAuthed()
-                o.writeShort(0); o.writeShort(-1)  // no error message
+            val tok = r.bytes()
+            val failed = 58             // SASL_AUTHENTICATION_FAILED
+            val none = Array.emptyByteArray
+            // (error, error message, auth_bytes) of this leg
+            val (err, msg, reply): (Int, String, Array[Byte]) =
+              if (mechanism == "PLAIN") {
+                val parts = new String(tok, "UTF-8").split("\u0000", -1)
+                if (parts.length == 3 && sasl.contains((parts(1), parts(2)))) {
+                  markAuthed(); (0, null, none)
+                } else (failed, "Authentication failed: invalid credentials", none)
+              } else if (mechanism == "OAUTHBEARER") {
+                if (oauthErrJson != null) {
+                  // the post-challenge dummy %x01 leg → named failure
+                  val json = oauthErrJson
+                  oauthErrJson = null
+                  (failed, json, none)
+                } else {
+                  val Bearer = "n,,\u0001auth=Bearer (.+)\u0001\u0001".r
+                  new String(tok, "UTF-8") match {
+                    case Bearer(t) if oauthToken.contains(t) =>
+                      markAuthed(); (0, null, none) // success: empty auth_bytes
+                    case _ =>
+                      // RFC 7628 error JSON rides as a CHALLENGE (error 0)
+                      oauthErrJson = """{"status":"invalid_token"}"""
+                      (0, null, oauthErrJson.getBytes("UTF-8"))
+                  }
+                }
               } else {
-                o.writeShort(58)        // SASL_AUTHENTICATION_FAILED
-                writeString(o, "Authentication failed: invalid credentials")
-              }
-              o.writeInt(0)             // empty auth_bytes
-            } else if (mechanism == "OAUTHBEARER") {
-              val msg = new String(tok, "UTF-8")
-              if (oauthErrJson != null) {
-                // the post-challenge dummy %x01 leg → named failure
-                o.writeShort(58)        // SASL_AUTHENTICATION_FAILED
-                writeString(o, oauthErrJson)
-                o.writeInt(0)
-                oauthErrJson = null
-              } else {
-                val Bearer = "n,,\u0001auth=Bearer (.+)\u0001\u0001".r
-                msg match {
-                  case Bearer(t) if oauthToken.contains(t) =>
-                    markAuthed()
-                    o.writeShort(0); o.writeShort(-1)
-                    o.writeInt(0)       // success: empty auth_bytes
-                  case _ =>
-                    // RFC 7628 error JSON rides as a CHALLENGE (error 0)
-                    oauthErrJson = """{"status":"invalid_token"}"""
-                    o.writeShort(0); o.writeShort(-1)
-                    val eb = oauthErrJson.getBytes("UTF-8")
-                    o.writeInt(eb.length); o.write(eb)
+                val (reply, done, err) = scramLeg(new String(tok, "UTF-8"))
+                scramState = if (done || err != null) null else scramState
+                if (err != null) (failed, err, none)
+                else {
+                  if (done) markAuthed()
+                  (0, null, reply.getBytes("UTF-8"))
                 }
               }
-            } else {
-              val (reply, done, err) =
-                scramLeg(new String(tok, "UTF-8"))
-              scramState = if (done || err != null) null else scramState
-              if (err != null) {
-                o.writeShort(58)        // SASL_AUTHENTICATION_FAILED
-                writeString(o, err)
-                o.writeInt(0)
-              } else {
-                if (done) markAuthed()
-                o.writeShort(0); o.writeShort(-1)
-                val rb = reply.getBytes("UTF-8")
-                o.writeInt(rb.length); o.write(rb)
-              }
-            }
+            o.writeShort(err); o.str(msg); o.bytes(reply)
             // KIP-368: v1+ responses carry session_lifetime_ms (0 = the
             // broker does not require re-authentication)
-            if (apiVersion >= 1) o.writeLong(maxReauthMs)
-            bo.toByteArray
-          case ApiApiVersions if apiVersion == 0 =>
+            if (v >= 1) o.writeLong(maxReauthMs)
+          case ApiApiVersions if speaks(apiKey, v) =>
             // served pre-auth, like real brokers (clients use it to
             // negotiate the SASL handshake version)
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            o.writeShort(apiVersionsError)
-            if (apiVersionsError == 0) {
-              o.writeInt(apiRanges.size)
-              apiRanges.foreach { case (k, lo, hi) =>
-                o.writeShort(k); o.writeShort(lo); o.writeShort(hi)
-              }
-            } else o.writeInt(0)
-            bo.toByteArray
-          case ApiApiVersions if apiVersion == 3 =>
-            // the flexible form (compact array + per-key and trailing
-            // tagged buffers, throttle_time_ms after the array); request
-            // body = client_software_name/version + tags
-            readCompactString(r); readCompactString(r); skipTagged(r)
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            o.writeShort(apiVersionsError)
-            if (apiVersionsError == 0) {
-              writeCompactArrayLen(o, apiRanges.size)
-              apiRanges.foreach { case (k, lo, hi) =>
-                o.writeShort(k); o.writeShort(lo); o.writeShort(hi)
-                writeEmptyTagged(o)
-              }
-            } else writeCompactArrayLen(o, 0)
-            o.writeInt(0)                  // throttle_time_ms
-            writeEmptyTagged(o)
-            bo.toByteArray
+            if (v >= 3) { r.str(); r.str(); r.tags() } // client software
+            o.writeShort(0)             // error
+            o.array(apiRanges) { case (k, lo, hi) =>
+              o.writeShort(k); o.writeShort(lo); o.writeShort(hi); o.tags()
+            }
+            if (v >= 1) o.writeInt(0)   // throttle_time_ms
+            o.tags()
           case _ if !authed =>
             // real brokers kill the connection on pre-auth API use
             throw new IOException(
               s"fake broker: api $apiKey before SASL authentication")
-          case ApiProduce if apiVersion == 3 =>
-            val txnId = readString(r)   // transactional_id (nullable)
+          case _ if !speaks(apiKey, v) || !apiRanges.exists {
+                case (k, lo, hi) => k == apiKey && v >= lo && v <= hi } =>
+            // a version the double does not speak, or does not advertise:
+            // real brokers drop the connection on what they cannot parse
+            throw new IOException(s"fake broker: unsupported api $apiKey v$v")
+          case ApiProduce =>
+            // the append path (CRC check, idempotence, txn gating, offset
+            // assignment) is produceAppend's, for both envelopes
+            val txnId = r.str()         // transactional_id (nullable)
             r.readShort(); r.readInt()  // acks, timeout_ms
-            val nTopics = r.readInt()
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            o.writeInt(nTopics)
-            (1 to nTopics).foreach { _ =>
-              val name = readString(r)
-              val nParts = r.readInt()
-              writeString(o, name)
-              o.writeInt(nParts)
-              (1 to nParts).foreach { _ =>
+            mirror(r, o) {
+              val name = r.str()
+              o.str(name)
+              mirror(r, o) {
                 val p = r.readInt()
-                val len = r.readInt()
-                val rs = new Array[Byte](len); r.readFully(rs)
-                val (err, baseOff) = produceAppend(txnId, name, p, rs)
+                val (err, baseOff) = produceAppend(txnId, name, p, r.bytes())
+                r.tags()
                 o.writeInt(p); o.writeShort(err); o.writeLong(baseOff)
                 o.writeLong(-1L)        // log_append_time: create-time batch
+                if (v >= 5) o.writeLong(0L) // log_start_offset
+                if (v >= 8) {
+                  o.arrayLen(0)         // record_errors
+                  o.str(null)           // error_message
+                }
+                o.tags()
               }
+              r.tags(); o.tags()
             }
+            r.tags()
             if (dropProduceResponses > 0) {
               // ambiguous-failure injection: the append above HAPPENED but
               // the producer never hears back — it must retry and the
@@ -580,51 +543,11 @@ final class KafkaLogServer(dir: String, topic: String,
               throw new EOFException("fake broker: produce response dropped")
             }
             o.writeInt(0)               // throttle_time_ms (tails Produce)
-            bo.toByteArray
-          case ApiProduce if apiVersion == 9 =>
-            // flexible (KIP-482) v9 envelope; the append path (CRC check,
-            // idempotence, txn gating, offset assignment) is IDENTICAL to
-            // v3 — produceAppend is shared
-            val txnId = readCompactString(r) // transactional_id (nullable)
-            r.readShort(); r.readInt()  // acks, timeout_ms
-            val nTopics = readCompactArrayLen(r)
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            writeCompactArrayLen(o, nTopics)
-            (1 to nTopics).foreach { _ =>
-              val name = readCompactString(r)
-              val nParts = readCompactArrayLen(r)
-              writeCompactString(o, name)
-              writeCompactArrayLen(o, nParts)
-              (1 to nParts).foreach { _ =>
-                val p = r.readInt()
-                val rs = readCompactBytes(r)
-                skipTagged(r)
-                val (err, baseOff) = produceAppend(txnId, name, p, rs)
-                o.writeInt(p); o.writeShort(err); o.writeLong(baseOff)
-                o.writeLong(-1L)        // log_append_time: create-time batch
-                o.writeLong(0L)         // log_start_offset
-                writeCompactArrayLen(o, 0) // record_errors
-                writeCompactString(o, null) // error_message
-                writeEmptyTagged(o)
-              }
-              skipTagged(r)
-              writeEmptyTagged(o)
-            }
-            skipTagged(r)
-            if (dropProduceResponses > 0) {
-              dropProduceResponses -= 1
-              throw new EOFException("fake broker: produce response dropped")
-            }
-            o.writeInt(0)               // throttle_time_ms (tails Produce)
-            writeEmptyTagged(o)
-            bo.toByteArray
-          case ApiInitProducerId if apiVersion == 0 || apiVersion == 2 =>
-            // v2 = the flexible twin (KIP-482 compact framing), identical
-            // assignment/fencing logic
-            val txnId =
-              if (apiVersion >= 2) readCompactString(r) else readString(r)
+            o.tags()
+          case ApiInitProducerId =>
+            val txnId = r.str()
             val timeoutMs = r.readInt() // transaction_timeout_ms
-            if (apiVersion >= 2) skipTagged(r)
+            r.tags()
             val (pid, epoch) =
               if (txnId == null) (pidCounter.getAndIncrement(), 0: Short)
               else txnProducers.compute(txnId, (_, prev) =>
@@ -640,16 +563,13 @@ final class KafkaLogServer(dir: String, topic: String,
               val it = seqStore.keySet.iterator()
               while (it.hasNext) if (it.next()._1 == pid) it.remove()
             }
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
             o.writeInt(0)               // throttle_time_ms
             o.writeShort(0)             // error
             o.writeLong(pid)
             o.writeShort(epoch)
-            if (apiVersion >= 2) writeEmptyTagged(o)
-            bo.toByteArray
-          case ApiAddPartitionsToTxn if apiVersion == 0 || apiVersion == 3 =>
-            val flexTxn = apiVersion >= 3
-            val txnId = if (flexTxn) readCompactString(r) else readString(r)
+            o.tags()
+          case ApiAddPartitionsToTxn =>
+            val txnId = r.str()
             val pid = r.readLong(); val pepoch = r.readShort()
             val reg = Option(txnProducers.get(txnId))
             val fenced = reg.exists(t => t._1 == pid && pepoch < t._2)
@@ -657,16 +577,11 @@ final class KafkaLogServer(dir: String, topic: String,
             if (registered)
               openTxns.computeIfAbsent(pid, _ => new OpenTxn(
                 Option(txnTimeouts.get(pid)).fold(60000)(_.intValue)))
-            val nTopics = if (flexTxn) readCompactArrayLen(r) else r.readInt()
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
             o.writeInt(0)               // throttle_time_ms
-            if (flexTxn) writeCompactArrayLen(o, nTopics) else o.writeInt(nTopics)
-            (1 to nTopics).foreach { _ =>
-              val name = if (flexTxn) readCompactString(r) else readString(r)
-              val nParts = if (flexTxn) readCompactArrayLen(r) else r.readInt()
-              if (flexTxn) writeCompactString(o, name) else writeString(o, name)
-              if (flexTxn) writeCompactArrayLen(o, nParts) else o.writeInt(nParts)
-              (1 to nParts).foreach { _ =>
+            mirror(r, o) {
+              val name = r.str()
+              o.str(name)
+              mirror(r, o) {
                 val p = r.readInt()
                 val err =
                   if (fenced) 90        // PRODUCER_FENCED
@@ -678,96 +593,75 @@ final class KafkaLogServer(dir: String, topic: String,
                     txn.synchronized { txn.partitions += p }
                     0
                   }
-                o.writeInt(p); o.writeShort(err)
-                if (flexTxn) writeEmptyTagged(o)
+                o.writeInt(p); o.writeShort(err); o.tags()
               }
-              if (flexTxn) { skipTagged(r); writeEmptyTagged(o) }
+              r.tags(); o.tags()
             }
-            if (flexTxn) { skipTagged(r); writeEmptyTagged(o) }
-            bo.toByteArray
-          case ApiAddOffsetsToTxn if apiVersion == 0 || apiVersion == 3 =>
+            r.tags(); o.tags()
+          case ApiAddOffsetsToTxn =>
             // registers the consumer group's offsets with the open txn —
             // same fencing/registration rules as AddPartitionsToTxn; the
             // double needs no per-group marker partition (offsets stage
             // inside the OpenTxn), but the txn must exist from here on
-            val flexAo = apiVersion >= 3
-            val txnId = if (flexAo) readCompactString(r) else readString(r)
+            val txnId = r.str()
             val pid = r.readLong(); val pepoch = r.readShort()
-            if (flexAo) readCompactString(r) else readString(r) // group_id
-            if (flexAo) skipTagged(r)
+            r.str()                     // group_id
+            r.tags()
             val reg = Option(txnProducers.get(txnId))
             val fenced = reg.exists(t => t._1 == pid && pepoch < t._2)
             val registered = reg.exists(t => t._1 == pid && t._2 == pepoch)
             if (registered && !fenced)
               openTxns.computeIfAbsent(pid, _ => new OpenTxn(
                 Option(txnTimeouts.get(pid)).fold(60000)(_.intValue)))
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
             o.writeInt(0)               // throttle_time_ms
             o.writeShort(
               if (fenced) 90            // PRODUCER_FENCED
               else if (!registered) 48  // INVALID_TXN_STATE
               else 0)
-            if (flexAo) writeEmptyTagged(o)
-            bo.toByteArray
-          case ApiTxnOffsetCommit if apiVersion == 0 || apiVersion == 3 =>
+            o.tags()
+          case ApiTxnOffsetCommit =>
             // stage consumer offsets INSIDE the transaction: they land in
             // committedStore only when the COMMIT marker does (endOpenTxn)
-            val flexTo = apiVersion >= 3
-            val txnId = if (flexTo) readCompactString(r) else readString(r)
-            val group = if (flexTo) readCompactString(r) else readString(r)
+            val txnId = r.str()
+            val group = r.str()
             val pid = r.readLong(); val pepoch = r.readShort()
+            // KIP-447 (v3+): the consumer's (generation, member, instance)
             val (generation, member, instTo) =
-              if (flexTo) {
-                val g = r.readInt()
-                val m = readCompactString(r)
-                val i = readCompactString(r) // group_instance_id (KIP-345)
-                (g, m, i)
-              } else (-1, "", null)
+              if (v >= 3) (r.readInt(), r.str(), r.str()) else (-1, "", null)
             val reg = Option(txnProducers.get(txnId))
             val fenced = reg.exists(t => t._1 == pid && pepoch < t._2)
             val registered = reg.exists(t => t._1 == pid && t._2 == pepoch)
             val txn = openTxns.get(pid)
-            // KIP-447: the v3 frame also carries the consumer's
-            // (generation, member) — fenced-out consumers are rejected by
-            // the group coordinator exactly like a plain OffsetCommit
+            // fenced-out consumers are rejected by the group coordinator
+            // exactly like a plain OffsetCommit
             val groupFence =
               groupCoordinator.validateCommit(group, generation, member, instTo)
             val code: Int =
               if (fenced) 47            // INVALID_PRODUCER_EPOCH
               else if (!registered || txn == null) 48 // INVALID_TXN_STATE
               else groupFence
-            val nTopics = if (flexTo) readCompactArrayLen(r) else r.readInt()
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
             o.writeInt(0)               // throttle_time_ms
-            if (flexTo) writeCompactArrayLen(o, nTopics) else o.writeInt(nTopics)
-            (1 to nTopics).foreach { _ =>
-              val name = if (flexTo) readCompactString(r) else readString(r)
-              val nParts = if (flexTo) readCompactArrayLen(r) else r.readInt()
-              if (flexTo) writeCompactString(o, name) else writeString(o, name)
-              if (flexTo) writeCompactArrayLen(o, nParts) else o.writeInt(nParts)
-              (1 to nParts).foreach { _ =>
+            mirror(r, o) {
+              val name = r.str()
+              o.str(name)
+              mirror(r, o) {
                 val p = r.readInt(); val off = r.readLong()
-                if (flexTo) {
-                  r.readInt()           // committed_leader_epoch (v2+)
-                  readCompactString(r); skipTagged(r)
-                } else readString(r)    // metadata
+                if (v >= 2) r.readInt() // committed_leader_epoch
+                r.str()                 // metadata
+                r.tags()
                 if (code == 0) txn.synchronized {
                   txn.stagedOffsets((group, name, p)) = off
                 }
-                o.writeInt(p); o.writeShort(code)
-                if (flexTo) writeEmptyTagged(o)
+                o.writeInt(p); o.writeShort(code); o.tags()
               }
-              if (flexTo) { skipTagged(r); writeEmptyTagged(o) }
+              r.tags(); o.tags()
             }
-            if (flexTo) { skipTagged(r); writeEmptyTagged(o) }
-            bo.toByteArray
-          case ApiEndTxn if apiVersion == 0 || apiVersion == 3 =>
-            val flexTxn = apiVersion >= 3
-            val txnId = if (flexTxn) readCompactString(r) else readString(r)
+            r.tags(); o.tags()
+          case ApiEndTxn =>
+            val txnId = r.str()
             val pid = r.readLong(); val pepoch = r.readShort()
             val commit = r.readBoolean()
-            if (flexTxn) skipTagged(r)
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
+            r.tags()
             o.writeInt(0)               // throttle_time_ms
             val reg = Option(txnProducers.get(txnId))
             if (reg.exists(t => t._1 == pid && pepoch < t._2))
@@ -779,45 +673,22 @@ final class KafkaLogServer(dir: String, topic: String,
               endOpenTxn(pid, commit)
               o.writeShort(0)
             }
-            if (flexTxn) writeEmptyTagged(o)
-            bo.toByteArray
-          case ApiCreateTopics if apiVersion == 0 || apiVersion == 5 =>
-            val flexCt = apiVersion >= 5
-            val nTopics = if (flexCt) readCompactArrayLen(r) else r.readInt()
-            val reqs = (1 to nTopics).map { _ =>
-              if (flexCt) {
-                val name = readCompactString(r)
-                val nParts = r.readInt()
-                val rf = r.readShort()
-                val nAssign = readCompactArrayLen(r)
-                (1 to math.max(nAssign, 0)).foreach { _ =>
-                  r.readInt(); skipCompactIntArray(r); skipTagged(r)
-                }
-                val nConfigs = readCompactArrayLen(r)
-                (1 to math.max(nConfigs, 0)).foreach { _ =>
-                  readCompactString(r); readCompactString(r); skipTagged(r)
-                }
-                skipTagged(r)
-                (name, nParts, rf)
-              } else {
-                val name = readString(r)
-                val nParts = r.readInt()
-                val rf = r.readShort()
-                val nAssign = r.readInt()
-                (1 to nAssign).foreach { _ => r.readInt(); skipIntArray(r) }
-                val nConfigs = r.readInt()
-                (1 to nConfigs).foreach { _ => readString(r); readString(r) }
-                (name, nParts, rf)
-              }
+            o.tags()
+          case ApiCreateTopics =>
+            val reqs = r.array {
+              val name = r.str()
+              val nParts = r.readInt()
+              val rf = r.readShort()
+              r.array { r.readInt(); r.skipIntArray(); r.tags() } // assignments
+              r.array { r.str(); r.str(); r.tags() } // configs
+              r.tags()
+              (name, nParts, rf)
             }
             r.readInt()             // timeout_ms (in-process: instantaneous)
-            val validateOnly = if (flexCt) r.readBoolean() else false
-            if (flexCt) skipTagged(r)
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            if (flexCt) o.writeInt(0)   // throttle_time_ms
-            if (flexCt) writeCompactArrayLen(o, reqs.size)
-            else o.writeInt(reqs.size)
-            reqs.foreach { case (name, nParts, rf) =>
+            val validateOnly = v >= 1 && r.readBoolean()
+            r.tags()
+            if (v >= 2) o.writeInt(0)   // throttle_time_ms
+            o.array(reqs) { case (name, nParts, rf) =>
               val err: Int =
                 if (activeTopic.contains(name)) 36 // TOPIC_ALREADY_EXISTS
                 else if (activeTopic.isDefined) 42 // INVALID_REQUEST: the
@@ -826,129 +697,85 @@ final class KafkaLogServer(dir: String, topic: String,
                 else if (rf != 1 && rf != -1) 38   // INVALID_REPLICATION_FACTOR
                 else if (validateOnly) 0           // checked, not created
                 else { created = Some((name, 0 until nParts)); 0 }
-              if (flexCt) {
-                writeCompactString(o, name); o.writeShort(err)
-                writeCompactString(o, null)      // error_message
+              o.str(name); o.writeShort(err)
+              if (v >= 1) o.str(null)      // error_message
+              if (v >= 5) {
                 o.writeInt(if (err == 0) nParts else -1)
                 o.writeShort(if (err == 0) 1 else -1)
-                writeCompactArrayLen(o, 0)       // configs
-                writeEmptyTagged(o)
-              } else { writeString(o, name); o.writeShort(err) }
+                o.arrayLen(0)              // configs
+              }
+              o.tags()
             }
-            if (flexCt) writeEmptyTagged(o)
-            bo.toByteArray
-          case ApiMetadata if apiVersion == 0 => metadata(r)
-          case ApiMetadata if apiVersion == 9 => metadataV9(r)
-          case ApiListOffsets if apiVersion == 1 || apiVersion == 2 =>
-            listOffsets(r, apiVersion)
-          case ApiListOffsets if apiVersion == 6 => listOffsetsV6(r)
-          case ApiFetch if apiVersion == 4 => fetch(r)
-          case ApiFetch if apiVersion == 12 => fetchV12(r)
-          case ApiFindCoordinator if apiVersion == 0 || apiVersion == 3 =>
-            val flexFc = apiVersion >= 3
-            if (flexFc) { readCompactString(r); r.readByte(); skipTagged(r) }
-            else readString(r)          // group id: single node = coordinator
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            if (flexFc) {
-              o.writeInt(0)             // throttle_time_ms
-              o.writeShort(0)           // error
-              writeCompactString(o, null) // error_message
-              o.writeInt(0)             // node id
-              writeCompactString(o, "127.0.0.1"); o.writeInt(boundPort)
-              writeEmptyTagged(o)
-            } else {
-              o.writeShort(0); o.writeInt(0)
-              writeString(o, "127.0.0.1"); o.writeInt(boundPort)
-            }
-            bo.toByteArray
-          case ApiJoinGroup if apiVersion == 0 || apiVersion == 6 =>
-            groupCoordinator.joinGroup(r, apiVersion)
-          case ApiSyncGroup if apiVersion == 0 || apiVersion == 4 =>
-            groupCoordinator.syncGroup(r, apiVersion)
-          case ApiHeartbeat if apiVersion == 0 || apiVersion == 4 =>
-            groupCoordinator.heartbeat(r, apiVersion)
-          case ApiLeaveGroup if apiVersion == 0 || apiVersion == 4 =>
-            groupCoordinator.leaveGroup(r, apiVersion)
-          case ApiOffsetCommit if apiVersion == 2 || apiVersion == 8 =>
-            val flexOc = apiVersion >= 8
-            val group = if (flexOc) readCompactString(r) else readString(r)
+            o.tags()
+          case ApiMetadata => metadata(r, o)
+          case ApiListOffsets => listOffsets(r, o)
+          case ApiFetch => fetch(r, o)
+          case ApiFindCoordinator =>
+            r.str()                     // key: single node = coordinator
+            if (v >= 1) r.readByte()    // key_type
+            r.tags()
+            if (v >= 1) o.writeInt(0)   // throttle_time_ms
+            o.writeShort(0)             // error
+            if (v >= 1) o.str(null)     // error_message
+            o.writeInt(0)               // node id
+            o.str("127.0.0.1"); o.writeInt(boundPort)
+            o.tags()
+          case ApiJoinGroup => groupCoordinator.joinGroup(r, o)
+          case ApiSyncGroup => groupCoordinator.syncGroup(r, o)
+          case ApiHeartbeat => groupCoordinator.heartbeat(r, o)
+          case ApiLeaveGroup => groupCoordinator.leaveGroup(r, o)
+          case ApiOffsetCommit =>
+            val group = r.str()
             val generation = r.readInt()
-            val member = if (flexOc) readCompactString(r) else readString(r)
-            val instOc =
-              if (flexOc) readCompactString(r) // group_instance_id (KIP-345)
-              else { r.readLong(); null }      // retention (removed in v5+)
+            val member = r.str()
+            val inst = if (v >= 7) r.str() else null // group_instance_id
+            if (v >= 2 && v <= 4) r.readLong() // retention_time_ms
             // generation fencing: a member commit must carry the LIVE
             // generation; -1/"" is the simple consumer and always passes.
             // KIP-345: a replaced static incarnation is fenced (82) by its
             // instance id so it can never clobber its successor's offsets.
             val fence =
-              groupCoordinator.validateCommit(group, generation, member, instOc)
-            val nTopics = if (flexOc) readCompactArrayLen(r) else r.readInt()
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            if (flexOc) o.writeInt(0)   // throttle_time_ms
-            if (flexOc) writeCompactArrayLen(o, nTopics) else o.writeInt(nTopics)
-            (1 to nTopics).foreach { _ =>
-              val name = if (flexOc) readCompactString(r) else readString(r)
-              val nParts = if (flexOc) readCompactArrayLen(r) else r.readInt()
-              if (flexOc) writeCompactString(o, name) else writeString(o, name)
-              if (flexOc) writeCompactArrayLen(o, nParts) else o.writeInt(nParts)
-              (1 to nParts).foreach { _ =>
+              groupCoordinator.validateCommit(group, generation, member, inst)
+            if (v >= 3) o.writeInt(0)   // throttle_time_ms
+            mirror(r, o) {
+              val name = r.str()
+              o.str(name)
+              mirror(r, o) {
                 val p = r.readInt(); val off = r.readLong()
-                if (flexOc) {
-                  r.readInt()           // committed_leader_epoch
-                  readCompactString(r); skipTagged(r)
-                } else readString(r)    // metadata
+                if (v >= 6) r.readInt() // committed_leader_epoch
+                r.str()                 // metadata
+                r.tags()
                 if (fence == 0) committedStore.put((group, name, p), off)
-                o.writeInt(p); o.writeShort(fence)
-                if (flexOc) writeEmptyTagged(o)
+                o.writeInt(p); o.writeShort(fence); o.tags()
               }
-              if (flexOc) { skipTagged(r); writeEmptyTagged(o) }
+              r.tags(); o.tags()
             }
-            if (flexOc) { skipTagged(r); writeEmptyTagged(o) }
-            bo.toByteArray
-          case ApiOffsetFetch if apiVersion == 1 || apiVersion == 6 =>
-            val flexOf = apiVersion >= 6
-            val group = if (flexOf) readCompactString(r) else readString(r)
-            val nTopics = if (flexOf) readCompactArrayLen(r) else r.readInt()
-            val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-            if (flexOf) o.writeInt(0)   // throttle_time_ms
-            if (flexOf) writeCompactArrayLen(o, math.max(nTopics, 0))
-            else o.writeInt(nTopics)
-            (1 to math.max(nTopics, 0)).foreach { _ =>
-              val name = if (flexOf) readCompactString(r) else readString(r)
-              val nParts = if (flexOf) readCompactArrayLen(r) else r.readInt()
-              if (flexOf) writeCompactString(o, name) else writeString(o, name)
-              if (flexOf) writeCompactArrayLen(o, nParts) else o.writeInt(nParts)
-              (1 to nParts).foreach { _ =>
+            r.tags(); o.tags()
+          case ApiOffsetFetch =>
+            val group = r.str()
+            if (v >= 3) o.writeInt(0)   // throttle_time_ms
+            mirror(r, o) {
+              val name = r.str()
+              o.str(name)
+              mirror(r, o) {
                 val p = r.readInt()
                 val off = Option(committedStore.get((group, name, p)))
                   .map(Long.unbox).getOrElse(-1L)
                 o.writeInt(p); o.writeLong(off)
-                if (flexOf) {
-                  o.writeInt(-1)        // committed_leader_epoch
-                  writeCompactString(o, ""); o.writeShort(0)
-                  writeEmptyTagged(o)
-                } else { writeString(o, ""); o.writeShort(0) }
+                if (v >= 5) o.writeInt(-1) // committed_leader_epoch
+                o.str("")               // metadata
+                o.writeShort(0)         // error
+                o.tags()
               }
-              if (flexOf) { skipTagged(r); writeEmptyTagged(o) }
+              r.tags(); o.tags()
             }
-            if (flexOf) {
-              skipTagged(r)
-              o.writeShort(0)           // top-level error_code
-              writeEmptyTagged(o)
-            }
-            bo.toByteArray
+            r.tags()
+            if (v >= 2) o.writeShort(0) // top-level error_code
+            o.tags()
           case other =>
-            throw new IOException(s"fake broker: unsupported api $other v$apiVersion")
+            throw new IOException(s"fake broker: unsupported api $other v$v")
         }
-        // flexible responses carry header v1 (correlation id + tagged
-        // buffer) — EXCEPT ApiVersions, pinned at header v0 per KIP-511
-        val flexHeader = flex && apiKey != ApiApiVersions
-        out.writeInt(4 + (if (flexHeader) 1 else 0) + body.length)
-        out.writeInt(correlationId)
-        if (flexHeader) out.writeByte(0)   // empty tagged-field buffer
-        out.write(body)
-        out.flush()
+        writeResponse(out, apiKey, v, correlationId, o.toByteArray)
       }
     } catch {
       // a client disconnect (EOF) or a bad frame drops the connection like
@@ -958,90 +785,55 @@ final class KafkaLogServer(dir: String, topic: String,
     } finally sock.close()
   }
 
-  private def metadata(r: DataInputStream): Array[Byte] = {
-    // honor the request's topic list: a topic this broker does not serve
-    // (not yet created under requireCreate, or simply foreign) answers
-    // UNKNOWN_TOPIC_OR_PARTITION per topic, like a real broker with
-    // auto-creation off; an empty request (= all topics) lists the active
-    // topic if there is one
-    val requested = {
-      val n = r.readInt()
-      if (n <= 0) activeTopic.toSeq else (1 to n).map(_ => readString(r))
-    }
-    val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-    o.writeInt(1)                       // brokers
-    o.writeInt(0); writeString(o, "127.0.0.1"); o.writeInt(boundPort)
-    o.writeInt(requested.size)          // topics
-    requested.foreach { name =>
-      if (activeTopic.contains(name)) {
-        o.writeShort(0); writeString(o, name)
-        val parts = partitionIds
-        o.writeInt(parts.size)
-        parts.foreach { p =>
-          o.writeShort(0); o.writeInt(p); o.writeInt(0) // error, id, leader
-          o.writeInt(1); o.writeInt(0) // replicas [0]
-          o.writeInt(1); o.writeInt(0) // isr [0]
-        }
-      } else {
-        o.writeShort(3)                 // UNKNOWN_TOPIC_OR_PARTITION
-        writeString(o, name)
-        o.writeInt(0)                   // no partitions
-      }
-    }
-    bo.toByteArray
+  /** Answer a request array element for element: the response array gets
+    * the request's length, and `elem` reads one request element and writes
+    * its answer. */
+  private def mirror(r: In, o: Out)(elem: => Unit): Unit = {
+    val n = r.arrayLen()
+    o.arrayLen(n)
+    (1 to n).foreach(_ => elem)
   }
 
-  /** Metadata over the flexible v9 frame — same topic/partition answers as
-    * [[metadata]], re-framed per KIP-482 (compact strings/arrays, tagged
-    * buffers, leader_epoch/offline_replicas/rack/cluster_id and the v8-v10
-    * authorized-operations fields). */
-  private def metadataV9(r: DataInputStream): Array[Byte] = {
-    val requested = {
-      val n = readCompactArrayLen(r)
-      if (n <= 0) activeTopic.toSeq
-      else (1 to n).map { _ =>
-        val name = readCompactString(r); skipTagged(r); name
+  /** Metadata (v0, or the flexible v9 with rack, cluster id, leader epoch,
+    * offline replicas and the authorized-operations fields). Honors the
+    * request's topic list: a topic this broker does not serve (not yet
+    * created under requireCreate, or simply foreign) answers
+    * UNKNOWN_TOPIC_OR_PARTITION per topic, like a real broker with
+    * auto-creation off; an empty request (= all topics) lists the active
+    * topic if there is one. */
+  private def metadata(r: In, o: Out): Unit = {
+    val v = r.version
+    val names = r.array { val name = r.str(); r.tags(); name }
+    val requested = if (names.isEmpty) activeTopic.toSeq else names
+    if (v >= 4) r.readBoolean()         // allow_auto_topic_creation
+    if (v >= 8 && v <= 10) r.readBoolean() // include_cluster_authorized_…
+    if (v >= 8) r.readBoolean()         // include_topic_authorized_operations
+    r.tags()
+    if (v >= 3) o.writeInt(0)           // throttle_time_ms
+    o.arrayLen(1)                       // brokers
+    o.writeInt(0); o.str("127.0.0.1"); o.writeInt(boundPort)
+    if (v >= 1) o.str(null)             // rack
+    o.tags()
+    if (v >= 2) o.str("graft-double")   // cluster_id
+    if (v >= 1) o.writeInt(0)           // controller_id
+    o.array(requested) { name =>
+      val known = activeTopic.contains(name)
+      o.writeShort(if (known) 0 else 3) // 3 = UNKNOWN_TOPIC_OR_PARTITION
+      o.str(name)
+      if (v >= 1) o.writeBoolean(false) // is_internal
+      o.array(if (known) partitionIds else Nil) { p =>
+        o.writeShort(0); o.writeInt(p); o.writeInt(0) // error, id, leader
+        if (v >= 7) o.writeInt(0)       // leader_epoch
+        o.arrayLen(1); o.writeInt(0)    // replicas [0]
+        o.arrayLen(1); o.writeInt(0)    // isr [0]
+        if (v >= 5) o.arrayLen(0)       // offline_replicas
+        o.tags()
       }
+      if (v >= 8) o.writeInt(Int.MinValue) // topic_authorized_operations: none
+      o.tags()
     }
-    r.readBoolean()                     // allow_auto_topic_creation
-    r.readBoolean()                     // include_cluster_authorized_operations
-    r.readBoolean()                     // include_topic_authorized_operations
-    skipTagged(r)
-    val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-    o.writeInt(0)                       // throttle_time_ms
-    writeCompactArrayLen(o, 1)          // brokers
-    o.writeInt(0); writeCompactString(o, "127.0.0.1"); o.writeInt(boundPort)
-    writeCompactString(o, null)         // rack
-    writeEmptyTagged(o)
-    writeCompactString(o, "graft-double") // cluster_id
-    o.writeInt(0)                       // controller_id
-    writeCompactArrayLen(o, requested.size)
-    requested.foreach { name =>
-      if (activeTopic.contains(name)) {
-        o.writeShort(0); writeCompactString(o, name)
-        o.writeBoolean(false)           // is_internal
-        val parts = partitionIds
-        writeCompactArrayLen(o, parts.size)
-        parts.foreach { p =>
-          o.writeShort(0); o.writeInt(p); o.writeInt(0) // error, id, leader
-          o.writeInt(0)                 // leader_epoch
-          writeCompactArrayLen(o, 1); o.writeInt(0)     // replicas [0]
-          writeCompactArrayLen(o, 1); o.writeInt(0)     // isr [0]
-          writeCompactArrayLen(o, 0)                    // offline_replicas
-          writeEmptyTagged(o)
-        }
-      } else {
-        o.writeShort(3)                 // UNKNOWN_TOPIC_OR_PARTITION
-        writeCompactString(o, name)
-        o.writeBoolean(false)
-        writeCompactArrayLen(o, 0)
-      }
-      o.writeInt(Int.MinValue)          // topic_authorized_operations: none
-      writeEmptyTagged(o)
-    }
-    o.writeInt(Int.MinValue)            // cluster_authorized_operations
-    writeEmptyTagged(o)
-    bo.toByteArray
+    if (v >= 8 && v <= 10) o.writeInt(Int.MinValue) // cluster_authorized_…
+    o.tags()
   }
 
   /** ListOffsets by REAL timestamp (KIP-79): the earliest VISIBLE offset
@@ -1079,21 +871,23 @@ final class KafkaLogServer(dir: String, topic: String,
     -1L
   }
 
-  private def listOffsets(r: DataInputStream, version: Short): Array[Byte] = {
+  /** ListOffsets (v2, or the flexible v6, whose request adds
+    * current_leader_epoch — ignored: single-broker, one epoch — and whose
+    * response adds a leader_epoch, −1 like a broker that does not track
+    * it). Isolation-aware: read_committed's "latest" is the LSO. */
+  private def listOffsets(r: In, o: Out): Unit = {
+    val v = r.version
     r.readInt()                         // replica id
-    // v2 added the isolation level: read_committed's "latest" is the LSO
-    val isolation = if (version >= 2) r.readByte() else 0
-    val nTopics = r.readInt()
-    val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-    if (version >= 2) o.writeInt(0)     // throttle_time_ms
-    o.writeInt(nTopics)
-    (1 to nTopics).foreach { _ =>
-      val name = readString(r)
-      val nParts = r.readInt()
-      writeString(o, name)
-      o.writeInt(nParts)
-      (1 to nParts).foreach { _ =>
-        val p = r.readInt(); val ts = r.readLong()
+    val isolation = r.readByte()
+    o.writeInt(0)                       // throttle_time_ms
+    mirror(r, o) {
+      val name = r.str()
+      o.str(name)
+      mirror(r, o) {
+        val p = r.readInt()
+        if (v >= 4) r.readInt()         // current_leader_epoch
+        val ts = r.readLong()
+        r.tags()
         val off =
           if (ts == -2L) logStartOffset(p) // earliest = the low watermark
           else if (ts >= 0L) offsetForTimestamp(p, ts,
@@ -1101,9 +895,12 @@ final class KafkaLogServer(dir: String, topic: String,
           else if (isolation == 1) lastStable(p)
           else endOffset(p)
         o.writeInt(p); o.writeShort(0); o.writeLong(ts); o.writeLong(off)
+        if (v >= 4) o.writeInt(-1)      // leader_epoch: not tracked
+        o.tags()
       }
+      r.tags(); o.tags()
     }
-    bo.toByteArray
+    r.tags(); o.tags()
   }
 
   /** One partition's produce-append decision — a real broker's produce
@@ -1111,8 +908,7 @@ final class KafkaLogServer(dir: String, topic: String,
     * consume-side double), idempotence sequence check, transactional
     * gating (zombie fencing by epoch, INVALID_TXN_STATE for unregistered
     * txn batches), then append + offset assignment under the log lock.
-    * Shared verbatim by the non-flexible v3 and flexible v9 Produce
-    * handlers — only their envelopes differ. Returns (error, baseOffset). */
+    * Returns (error, baseOffset). */
   private def produceAppend(txnId: String, name: String, p: Int,
       rs: Array[Byte]): (Int, Long) =
     if (!activeTopic.contains(name) || !partitionIds.contains(p))
@@ -1174,98 +970,6 @@ final class KafkaLogServer(dir: String, topic: String,
       }
     }
 
-  /** ListOffsets over the flexible v6 frame (KIP-482) — same
-    * isolation-aware answers as v2 (read_committed "latest" = the LSO);
-    * the request adds current_leader_epoch (ignored: single-broker, one
-    * epoch) and the response a leader_epoch (−1, like a broker that does
-    * not track it). */
-  private def listOffsetsV6(r: DataInputStream): Array[Byte] = {
-    r.readInt()                         // replica id
-    val isolation = r.readByte()
-    val nTopics = readCompactArrayLen(r)
-    val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-    o.writeInt(0)                       // throttle_time_ms
-    writeCompactArrayLen(o, nTopics)
-    (1 to nTopics).foreach { _ =>
-      val name = readCompactString(r)
-      val nParts = readCompactArrayLen(r)
-      writeCompactString(o, name)
-      writeCompactArrayLen(o, nParts)
-      (1 to nParts).foreach { _ =>
-        val p = r.readInt()
-        r.readInt()                     // current_leader_epoch
-        val ts = r.readLong()
-        skipTagged(r)
-        val off =
-          if (ts == -2L) logStartOffset(p) // earliest = the low watermark
-          else if (ts >= 0L) offsetForTimestamp(p, ts,
-            if (isolation == 1) lastStable(p) else endOffset(p))
-          else if (isolation == 1) lastStable(p)
-          else endOffset(p)
-        o.writeInt(p); o.writeShort(0); o.writeLong(ts); o.writeLong(off)
-        o.writeInt(-1)                  // leader_epoch: not tracked
-        writeEmptyTagged(o)
-      }
-      skipTagged(r)
-      writeEmptyTagged(o)
-    }
-    skipTagged(r)
-    writeEmptyTagged(o)
-    bo.toByteArray
-  }
-
-  private def fetch(r: DataInputStream): Array[Byte] = {
-    r.readInt(); r.readInt(); r.readInt(); r.readInt() // replica/wait/min/max
-    val isolation = r.readByte()        // 0 read_uncommitted, 1 read_committed
-    val nTopics = r.readInt()
-    val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-    o.writeInt(0)                       // throttle_time_ms
-    o.writeInt(nTopics)
-    (1 to nTopics).foreach { _ =>
-      val name = readString(r)
-      val nParts = r.readInt()
-      writeString(o, name)
-      o.writeInt(nParts)
-      (1 to nParts).foreach { _ =>
-        val p = r.readInt(); val fetchOffset = r.readLong(); r.readInt()
-        // LSO first: lastStable() reaps expired transactions, which can
-        // APPEND abort markers — reading the high watermark before the reap
-        // could publish a protocol-inconsistent (lso > hw) response pair
-        val lso = lastStable(p)
-        val hw = endOffset(p)
-        // a read_committed fetch never serves past the LSO — records of a
-        // still-open transaction are not yet decided
-        val end = if (isolation == 1) lso else hw
-        // a fetch below the log-start offset (truncation)
-        // answers OFFSET_OUT_OF_RANGE like a real broker whose segments
-        // are gone — the consumer must reset, not silently skip
-        val oor = fetchOffset < logStartOffset(p)
-        o.writeInt(p); o.writeShort(if (oor) 1 else 0)
-        o.writeLong(hw)                 // high watermark
-        o.writeLong(lso)                // last stable offset
-        // only spans whose MARKER is at or beyond the fetch offset — a
-        // span the consumer's scan position has already passed must not be
-        // re-served, or its producer's later committed data would be hidden
-        val aborted =
-          if (isolation == 1)
-            abortedOf(p).synchronized {
-              abortedOf(p).toVector.filter(_._3 >= fetchOffset)
-            }
-          else Vector.empty
-        o.writeInt(aborted.size)
-        aborted.foreach { case (pid, first, _) =>
-          o.writeLong(pid); o.writeLong(first)
-        }
-        val recordSet =
-          if (oor || fetchOffset >= end) Array.emptyByteArray
-          else encodeBatch(p, fetchOffset, math.min(end, fetchOffset + batchRecords))
-        o.writeInt(recordSet.length)
-        o.write(recordSet)
-      }
-    }
-    bo.toByteArray
-  }
-
   // ---- KIP-227 incremental fetch sessions -----------------------------------
   /** One cached fetch session: the broker-side partition state an
     * incremental fetch request delta-updates instead of restating. */
@@ -1298,60 +1002,48 @@ final class KafkaLogServer(dir: String, topic: String,
   def evictFetchSessions(): Unit =
     fetchSessions.synchronized { fetchSessions.clear() }
 
-  /** Fetch over the flexible v12 frame — same record sets, LSO gating and
-    * aborted-transaction lists as [[fetch]], re-framed per KIP-482
-    * (session fields, leader-epoch fields, compact topic/partition arrays,
-    * COMPACT_NULLABLE_BYTES record sets, tagged buffers). Speaks the full
-    * KIP-227 session protocol: sessionless (epoch -1), full fetch opening
-    * a session (epoch 0 → a fresh session id), and INCREMENTAL fetches
-    * (epoch n must match; partitions in the request update the cached
-    * state, forgotten ones leave it, and the response carries ONLY the
-    * session partitions that have data — the bandwidth shape of KIP-227).
-    * A missing session answers FETCH_SESSION_ID_NOT_FOUND (70), a stale
-    * epoch INVALID_FETCH_SESSION_EPOCH (71) — both top-level, both the
-    * signals a real client takes as "fall back to a full fetch". */
-  private def fetchV12(r: DataInputStream): Array[Byte] = {
+  /** Fetch (v4, or the flexible v12) — record sets capped at
+    * [[batchRecords]], LSO gating under read_committed and the
+    * aborted-transaction lists. From v7 it speaks the full KIP-227 session
+    * protocol: sessionless (epoch -1), full fetch opening a session
+    * (epoch 0 → a fresh session id), and INCREMENTAL fetches (epoch n must
+    * match; partitions in the request update the cached state, forgotten
+    * ones leave it, and the response carries ONLY the session partitions
+    * that have data — the bandwidth shape of KIP-227). A missing session
+    * answers FETCH_SESSION_ID_NOT_FOUND (70), a stale epoch
+    * INVALID_FETCH_SESSION_EPOCH (71) — both top-level, both the signals a
+    * real client takes as "fall back to a full fetch". */
+  private def fetch(r: In, o: Out): Unit = {
+    val v = r.version
     r.readInt(); r.readInt(); r.readInt(); r.readInt() // replica/wait/min/max
-    val isolation = r.readByte()
-    val sessionId = r.readInt()
-    val sessionEpoch = r.readInt()
+    val isolation = r.readByte()        // 0 read_uncommitted, 1 read_committed
+    val (sessionId, sessionEpoch) =
+      if (v >= 7) (r.readInt(), r.readInt()) else (0, -1)
     // parse the whole request first: sessions decide the response set
-    val nTopics = readCompactArrayLen(r)
-    val requested = (1 to math.max(nTopics, 0)).flatMap { _ =>
-      val name = readCompactString(r)
-      val nParts = readCompactArrayLen(r)
-      val ps = (1 to nParts).map { _ =>
+    val requested = r.array {
+      val name = r.str()
+      val ps = r.array {
         val p = r.readInt()
-        r.readInt()                     // current_leader_epoch
+        if (v >= 9) r.readInt()         // current_leader_epoch
         val fetchOffset = r.readLong()
-        r.readInt()                     // last_fetched_epoch
-        r.readLong()                    // log_start_offset
+        if (v >= 12) r.readInt()        // last_fetched_epoch
+        if (v >= 5) r.readLong()        // log_start_offset
         r.readInt()                     // partition_max_bytes
-        skipTagged(r)                   // partition tags
+        r.tags()
         ((name, p), fetchOffset)
       }
-      skipTagged(r)                     // topic tags
+      r.tags()
       ps
-    }
-    val forgotten = readCompactArrayLen(r) match { // forgotten_topics_data
-      case n if n > 0 => (1 to n).flatMap { _ =>
-        val name = readCompactString(r)
-        val m = readCompactArrayLen(r)
-        val ps = (1 to m).map(_ => (name, r.readInt()))
-        skipTagged(r)
+    }.flatten
+    val forgotten =
+      if (v < 7) Nil
+      else r.array {
+        val name = r.str()
+        val ps = r.array((name, r.readInt()))
+        r.tags()
         ps
-      }
-      case _ => Nil
-    }
-    val bo = new ByteArrayOutputStream(); val o = new DataOutputStream(bo)
-    def errorResponse(code: Short): Array[Byte] = {
-      o.writeInt(0)                     // throttle_time_ms
-      o.writeShort(code)
-      o.writeInt(0)                     // session_id
-      writeCompactArrayLen(o, 0)        // no topics
-      writeEmptyTagged(o)
-      bo.toByteArray
-    }
+      }.flatten
+    o.writeInt(0)                       // throttle_time_ms
     // (answer set, session id to echo, incremental?) per the session rules
     val resolved: Either[Short, (Seq[((String, Int), Long)], Int, Boolean)] =
       if (sessionEpoch == -1) Right((requested, 0, false))
@@ -1373,16 +1065,31 @@ final class KafkaLogServer(dir: String, topic: String,
         }
       }
     resolved match {
-      case Left(code) => errorResponse(code)
+      case Left(code) =>
+        o.writeShort(code)
+        o.writeInt(0)                   // session_id
+        o.arrayLen(0)                   // no topics
+        o.tags()
       case Right((answerSet, echoSessionId, incremental)) =>
         // evaluate every partition, then (incremental only) omit the empty
         // ones — a full fetch restates everything, KIP-227's response rule
         val answers = answerSet.map { case ((name, p), fetchOffset) =>
+          // LSO first: lastStable() reaps expired transactions, which can
+          // APPEND abort markers — reading the high watermark before the
+          // reap could publish a protocol-inconsistent (lso > hw) pair
           val lso = lastStable(p)
           val hw = endOffset(p)
+          // a read_committed fetch never serves past the LSO — records of
+          // a still-open transaction are not yet decided
           val end = if (isolation == 1) lso else hw
-          // below the log-start low watermark: OFFSET_OUT_OF_RANGE
+          // a fetch below the log-start offset (truncation) answers
+          // OFFSET_OUT_OF_RANGE like a real broker whose segments are
+          // gone — the consumer must reset, not silently skip
           val oor = fetchOffset < logStartOffset(p)
+          // only spans whose MARKER is at or beyond the fetch offset — a
+          // span the consumer's scan position has already passed must not
+          // be re-served, or its producer's later committed data would be
+          // hidden
           val aborted =
             if (isolation == 1 && !oor)
               abortedOf(p).synchronized {
@@ -1399,32 +1106,27 @@ final class KafkaLogServer(dir: String, topic: String,
           if (incremental)
             answers.filter(a => a._6.nonEmpty || a._5.nonEmpty || a._7)
           else answers
-        o.writeInt(0)                   // throttle_time_ms
-        o.writeShort(0)                 // top-level error_code
-        o.writeInt(echoSessionId)
-        val byTopic = included.groupBy(_._1).toSeq.sortBy(_._1)
-        writeCompactArrayLen(o, byTopic.size)
-        byTopic.foreach { case (name, parts) =>
-          writeCompactString(o, name)
-          writeCompactArrayLen(o, parts.size)
-          parts.foreach { case (_, p, hw, lso, aborted, recordSet, oor) =>
-            o.writeInt(p); o.writeShort(if (oor) 1 else 0)
-            o.writeLong(hw)
-            o.writeLong(lso)
-            o.writeLong(logStartOffset(p))
-            writeCompactArrayLen(o, aborted.size)
-            aborted.foreach { case (pid, first, _) =>
-              o.writeLong(pid); o.writeLong(first)
-              writeEmptyTagged(o)
-            }
-            o.writeInt(-1)              // preferred_read_replica
-            writeCompactBytes(o, recordSet)
-            writeEmptyTagged(o)
-          }
-          writeEmptyTagged(o)
+        if (v >= 7) {
+          o.writeShort(0)               // top-level error_code
+          o.writeInt(echoSessionId)
         }
-        writeEmptyTagged(o)
-        bo.toByteArray
+        o.array(included.groupBy(_._1).toSeq.sortBy(_._1)) { case (name, parts) =>
+          o.str(name)
+          o.array(parts) { case (_, p, hw, lso, aborted, recordSet, oor) =>
+            o.writeInt(p); o.writeShort(if (oor) 1 else 0)
+            o.writeLong(hw)             // high watermark
+            o.writeLong(lso)            // last stable offset
+            if (v >= 5) o.writeLong(logStartOffset(p))
+            o.array(aborted) { case (pid, first, _) =>
+              o.writeLong(pid); o.writeLong(first); o.tags()
+            }
+            if (v >= 11) o.writeInt(-1) // preferred_read_replica
+            o.bytes(recordSet)
+            o.tags()
+          }
+          o.tags()
+        }
+        o.tags()
     }
   }
 

@@ -174,9 +174,16 @@ case class ReplayOptions(
     }
   /** planning-side log client (driver): fresh per use, clients are cheap. */
   def client: LogClient = LogClient.create(clientKind, path, consumerConf)
+  def topic: String = ReplayOptions.topicOf(clientKind, path)
 }
 
 object ReplayOptions {
+  /** The `topic` column's value: a kafka path is `host:port/topic`; the
+    * file and socket logs hold the one topic `events`. */
+  def topicOf(clientKind: String, path: String): String =
+    if (clientKind == "kafka") path.substring(path.indexOf('/') + 1)
+    else "events"
+
   def parse(opts: CaseInsensitiveStringMap): ReplayOptions = {
     // sentinels are matched case-insensitively like Kafka's option parsing
     val raw = Option(opts.get("startingOffsets"))
@@ -620,7 +627,6 @@ class ReplayMicroBatchStream(opts: ReplayOptions,
     if (!opts.groupSubscribe) None
     else {
       val kc = opts.client.asInstanceOf[KafkaLogClient]
-      val topic = opts.path.substring(opts.path.indexOf('/') + 1)
       // KIP-345 (round 17): `consumer.group.static.instance.id` makes
       // this stream a STATIC member — a restarted run rejoins without a
       // rebalance, keeping the group's generation and this share intact
@@ -628,7 +634,7 @@ class ReplayMicroBatchStream(opts: ReplayOptions,
       // consumer.group.instance.id round-robin option). The assignor
       // rides Kafka's own partition.assignment.strategy key.
       val m = new KafkaGroupMembership(kc, opts.consumerConf("group.id"),
-        topic,
+        opts.topic,
         strategy = opts.consumerConf
           .getOrElse("partition.assignment.strategy", "range"),
         groupInstanceId = opts.consumerConf.get("group.static.instance.id"))
@@ -897,6 +903,7 @@ case class ReplayInputPartition(path: String, partition: Int,
   def openFrames(needKey: Boolean, needValue: Boolean): FrameReader =
     LogClient.create(clientKind, path, consumerConf)
       .openFrames(partition, start, needKey, needValue)
+  def topic: String = ReplayOptions.topicOf(clientKind, path)
   /** SPJ key: the log partition this split serves (see
     * [[ReplayScan.outputPartitioning]]). */
   override def partitionKey(): InternalRow =
@@ -920,8 +927,8 @@ object ReplayReaderFactory extends PartitionReaderFactory {
   * `columnarBatchSize` records per `next()` into reused on-heap column
   * vectors — the closest Spark-native analogue of the reference's direct
   * Arrow `RecordBatch` construction (execution.rs:81-102, building
-  * BinaryArray columns from the consumer loop). Kept as an option because
-  * the row path is the measured default for this source (see SCALE.md):
+  * BinaryArray columns from the consumer loop). This is the default read
+  * path (`columnarBatchSize` defaults to 4096; 0 selects the row reader):
   * every downstream stage consumes rows via whole-stage codegen anyway, so
   * the batch only changes the scan-side allocation pattern. */
 class ReplayColumnarReader(ip: ReplayInputPartition)
@@ -929,7 +936,7 @@ class ReplayColumnarReader(ip: ReplayInputPartition)
   import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
   import org.apache.spark.sql.vectorized.ColumnarBatch
 
-  private val topicBytes = "events".getBytes("UTF-8")
+  private val topicBytes = ip.topic.getBytes("UTF-8")
   private val types = ip.fields.map(ReplayDataSource.Schema.fields(_).dataType)
   private val vectors = types.map(t => new OnHeapColumnVector(ip.columnarBatchSize, t))
   private val batch = new ColumnarBatch(vectors.map(v =>
@@ -1018,7 +1025,7 @@ private[replay] final class FrameStream(path: String, partition: Int, start: Lon
 class ReplayPartitionReader(ip: ReplayInputPartition)
     extends PartitionReader[InternalRow] {
 
-  private val topic = UTF8String.fromString("events")
+  private val topic = UTF8String.fromString(ip.topic)
   private val frames = ip.openFrames(ip.fields.contains(0), ip.fields.contains(1))
   private var offset = ip.start
   private var row: InternalRow = _

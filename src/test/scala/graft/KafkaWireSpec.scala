@@ -9,8 +9,8 @@ import graft.sources.replay.{KafkaLogServer, KafkaLogClient, ReplayLog}
   * partition EOF, /root/reference/src/kafka/execution.rs:62-112) spoken as
   * the public Kafka wire protocol with zero broker libraries.
   *
-  * The in-process [[KafkaLogServer]] is wire-faithful (Metadata v0 /
-  * ListOffsets v1 / Fetch v4 / RecordBatch v2), so these tests prove the
+  * The in-process [[KafkaLogServer]] is wire-faithful (Metadata, ListOffsets
+  * and Fetch in both dialects, RecordBatch v2), so these tests prove the
   * client's framing, varint and batch decode against real encoded bytes over
   * real TCP. The final test runs the same contract against an actual broker
   * and is gated on `GRAFT_KAFKA_BOOTSTRAP` / `GRAFT_KAFKA_TOPIC`, skipping
@@ -49,6 +49,23 @@ class KafkaWireSpec extends SparkSpec {
       val viaFile = read("file", dir)
       assert(viaKafka.nonEmpty)
       assert(viaKafka === viaFile)
+    } finally broker.close()
+  }
+
+  test("the topic column carries the kafka path's topic") {
+    val dir = ReplayLog.ensureLog(spark, sf)
+    val broker = new KafkaLogServer(dir, "orders")
+    try {
+      def topics(client: String, path: String, columnarBatchSize: Int) =
+        spark.read.format("graft-replay")
+          .option("client", client).option("path", path)
+          .option("columnarBatchSize", columnarBatchSize.toString).load()
+          .select(col("topic")).distinct().collect().map(_.getString(0)).toSeq
+      // the columnar reader (the default) and the row reader
+      assert(topics("kafka", broker.clientPath, 4096) === Seq("orders"))
+      assert(topics("kafka", broker.clientPath, 0) === Seq("orders"))
+      // the file log holds the one topic `events`
+      assert(topics("file", dir, 4096) === Seq("events"))
     } finally broker.close()
   }
 

@@ -11,9 +11,10 @@ import org.apache.spark.sql.functions._
   * frames (v9/v12) — so a KRaft-era broker that retired the old versions
   * is served, and only a broker serving NEITHER dialect fails, with a
   * NAMED error on the first connection, not a raw wire parse error
-  * mid-read. The remaining APIs stay pinned. Pre-0.10 brokers that error
-  * the ApiVersions request itself are tolerated (the pins are the oldest
-  * versions such a broker speaks anyway).
+  * mid-read. The remaining APIs stay pinned. A broker that answers the
+  * ApiVersions request itself with an error fails with a named error too:
+  * every broker since 0.10 answers it, and an older one closes the
+  * connection instead.
   */
 class KafkaPreflightSpec extends graft.SparkSpec {
 
@@ -69,21 +70,34 @@ class KafkaPreflightSpec extends graft.SparkSpec {
         if (t == null) Nil else t +: chain(t.getCause)
       val msg = chain(e).map(_.getMessage).mkString(" | ")
       // ListOffsets negotiates since round 13, so the missing key surfaces
-      // through the negotiate() branch, not the pinned-dialect check
+      // through pickVersion, not the pinned-dialect check
       assert(msg.contains("does not expose api 2 (ListOffsets)"),
         s"expected a missing-api error, got: $msg")
     } finally broker.close()
   }
 
-  test("an ancient broker that errors ApiVersions is tolerated (read succeeds)") {
-    val dir = ReplayLog.ensureLog(spark, sf)
-    val modern = new KafkaLogServer(dir, "events")
-    val ancient = new KafkaLogServer(dir, "events",
-      apiVersionsError = 35) // UNSUPPORTED_VERSION
+  test("an ancient broker that errors ApiVersions fails with a named error") {
+    // a one-connection raw broker: reads the ApiVersions v0 request and
+    // answers UNSUPPORTED_VERSION (35) with no ranges
+    val server = new java.net.ServerSocket(0)
+    val broker = new Thread(() =>
+      try {
+        val s = server.accept()
+        val in = new java.io.DataInputStream(s.getInputStream)
+        val out = new java.io.DataOutputStream(s.getOutputStream)
+        in.readFully(new Array[Byte](in.readInt()))
+        out.writeInt(10)            // size: correlation id + error + count
+        out.writeInt(1); out.writeShort(35); out.writeInt(0)
+        out.flush()
+        s.close()
+      } catch { case _: IOException => })
+    broker.setDaemon(true)
+    broker.start()
     try {
-      val got = readAll(ancient.clientPath)
-      assert(got.nonEmpty)
-      assert(got === readAll(modern.clientPath))
-    } finally { modern.close(); ancient.close() }
+      val c = new KafkaLogClient(s"127.0.0.1:${server.getLocalPort}/events")
+      val e = intercept[IOException] { c.listPartitions() }
+      assert(e.getMessage.contains("ApiVersions v0 failed with error 35"),
+        s"expected a named ApiVersions error, got: ${e.getMessage}")
+    } finally server.close()
   }
 }
